@@ -54,17 +54,8 @@ WIN_NS = 600 * NS
 from obsplus_spark.cache import (  # noqa: E402
     _TABLE_CACHE,
     evict_dead_sessions as _evict_dead_sessions,
+    register_shingle_cache,
 )
-
-
-def _ring(df: DataFrame) -> None:
-    """Register a query-level persisted intermediate in the bounded
-    per-session cache ring so repeated plan builds in one session —
-    bench reps, check loops — release older persists instead of
-    accumulating one per build (r6 review)."""
-    from obsplus_spark.cache import register_shingle_cache
-
-    register_shingle_cache(df)
 
 
 _CONFIGURED_SESSIONS: set[int] = set()
@@ -134,68 +125,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.repartition(int(target))
         _TABLE_CACHE[key] = df.persist()
     return _TABLE_CACHE[key]
-
-
-#: sessions (by id) that have already written each gated edge table
-_EDGE_TABLE_WRITTEN: "set[tuple[int, str]]" = set()
-
-
-def _graph_edge_table(spark: SparkSession, sf_dir: str) -> "DataFrame | None":
-    """Opt-in shared graph-edge layout (VERDICT r12 #2 experiment).
-
-    With ``SPARK_GRAFT_EDGE_TABLE=1``: the deduped BIGINT co-shipment
-    pair frame — ``(s = l_suppkey, c = o_custkey)`` from
-    lineitem⋈orders, the edge set ``pagerank`` / ``hits_auth`` /
-    ``bfs_hops`` each re-derive per call (profiled at 50-70% of each
-    query's executor time at sf0.1) — is derived ONCE per (session, sf)
-    and written as a parquet table bucketed by ``s`` via
-    ``plans/layout.write_bucketed``; the three queries then read the
-    bucketed scan instead of re-joining lineitem, and ``pagerank``
-    (whose round key IS ``s``) reads it exchange-free.
-
-    Default OFF for the bench, deliberately: those three queries sit in
-    bench.py's ``rebuild_each_rep`` set precisely so their timed reps
-    re-materialize construction-persisted intermediates — letting reps
-    read a table another construction materialized is
-    intermediate-result caching, the thing that rule exists to prevent
-    (and re-WRITING the table per rep would just pay disk for what the
-    in-memory persist does better). At 100 TB this is the intended
-    production layout — one write, every graph query in the session
-    reads exchange-free on the bucket key. Measured deltas + plan
-    evidence: OPTIMIZATION_r13.md; correctness is gate-independent (the
-    per-query folds are injective maps of the distinct pair set).
-    """
-    import os
-    import re
-
-    if os.environ.get("SPARK_GRAFT_EDGE_TABLE", "0") != "1":
-        return None
-    from obsplus_spark.plans.layout import write_bucketed
-
-    table = "obsplus_edges_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    key = (id(spark), table)
-    if key not in _EDGE_TABLE_WRITTEN:
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        if _orders_dim_small(sf_dir):
-            o = F.broadcast(o)
-        nb = spark.sparkContext.defaultParallelism
-        pairs = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .selectExpr(
-                "CAST(l_suppkey AS BIGINT) AS s",
-                "CAST(o_custkey AS BIGINT) AS c",
-            )
-            .where("s IS NOT NULL AND c IS NOT NULL")
-            # hash(s) matches the bucket spec, so each write task emits
-            # exactly one bucket file; distinct runs in place (subset
-            # rule) exactly as in the per-query derivations
-            .repartition(nb, "s")
-            .distinct()
-        )
-        write_bucketed(pairs, table, ["s"], nb, sort_cols=["s"])
-        _EDGE_TABLE_WRITTEN.add(key)
-    return spark.table(table)
 
 
 def _norm_ts(df: DataFrame) -> DataFrame:
@@ -1635,7 +1564,7 @@ def q_common_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         sampling_period_col=None,
         pre_merge=True,
     ).persist()
-    _ring(segs)
+    register_shingle_cache(segs)
     return common_coverage(
         segs, seed_col="event_type", start_col="seg_start", end_col="seg_end"
     )
@@ -2023,7 +1952,7 @@ def q_prune_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The edge table is consulted by every fixed-point round — persist it
     # so the agg cascade runs once, not once per plan reference.
     edges = day_first_edges.unionByName(other_edges).persist()
-    _ring(edges)
+    register_shingle_cache(edges)
     nodes = ev.select("resource_id", "evaluation_status")
     alive = prune_rejected(
         nodes, edges, max_iterations=2, check_convergence=False,
@@ -6406,14 +6335,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rounded rank so the boundary is engine-stable."""
     from obsplus_spark.operators.graph import pagerank
 
-    et = _graph_edge_table(spark, sf_dir)
-    if et is not None:
-        # gated shared layout: the bucketed scan IS the deduped
-        # src-partitioned frame — zero edge exchanges in the whole query
-        return pagerank(
-            et.selectExpr("s AS src", "c AS dst"),
-            iterations=2, damping=0.85, k=20, edges_prepared=True,
-        )
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     edges = li.join(
@@ -7760,7 +7681,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify; identical result to full LSH over old ∪ new filtered to
     pairs touching the batch (which is what the oracle computes)."""
     from obsplus_spark.operators.dedup import (
-        _register_shingle_cache,
         incremental_candidate_pairs,
         lsh_band_index,
         pair_jaccard_arrays,
@@ -7773,7 +7693,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersection on the digest arrays — no exploded string shingle
     # table); 3.4 s → ~1 s at sf0.1
     dig = shingle_digest_array(docs, n=3, drop_empty=True).persist()
-    _register_shingle_cache(dig)
+    register_shingle_cache(dig)
     new_dig = dig.filter("doc_id % 3 = 0")
     old_dig = dig.filter("doc_id % 3 != 0")
     new = docs.filter("doc_id % 3 = 0")
@@ -8890,26 +8810,6 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # longs instead of ~10-byte strings; the prefixed-string ids the
     # oracle sees are reconstructed on the node-sized OUTPUT only
     # (node DIV 2 inverts both encodings; parity selects the prefix).
-    et = _graph_edge_table(spark, sf_dir)
-    if et is not None:
-        # gated shared layout: direction-doubling of the deduped pair
-        # table is still distinct (the two parities are disjoint), so
-        # edges_deduped skips the in-operator DISTINCT; the explode
-        # breaks the bucket partitioning, so the src repartition stays
-        edges = (
-            et.selectExpr(
-                "explode(array("
-                "  named_struct('src', 2 * s + 1, 'dst', 2 * c),"
-                "  named_struct('src', 2 * c, 'dst', 2 * s + 1)"
-                ")) AS e"
-            ).select("e.src", "e.dst")
-        )
-        d = bfs_distances(edges, [3, 5], max_hops=3, edges_deduped=True)
-        return d.selectExpr(
-            "concat(CASE WHEN node % 2 = 1 THEN 's' ELSE 'c' END,"
-            " CAST(node DIV 2 AS STRING)) AS node",
-            "dist",
-        )
     edges = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .selectExpr(
@@ -9003,25 +8903,6 @@ def q_hits_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string tie order) is row-identical to the string pipeline.
     # concat('c', NULL) is NULL exactly as 2*NULL+1 is, so the
     # operator's NULL-endpoint filter sees the same rows.
-    et = _graph_edge_table(spark, sf_dir)
-    if et is not None:
-        # gated shared layout: injective fold of the deduped pair table
-        # (edges_deduped skips the in-operator DISTINCT; the fold breaks
-        # the bucket partitioning, so the src repartition stays)
-        edges = et.selectExpr(
-            "CAST(2 * c + 1 AS BIGINT) AS src",
-            "CAST(2 * s AS BIGINT) AS dst",
-        )
-        return hits_scores(
-            edges, iterations=2, k=20,
-            broadcast_auth=_orders_dim_small(sf_dir),
-            edges_deduped=True,
-            node_decode=(
-                "CASE WHEN node % 2 = 1"
-                " THEN concat('c', CAST((node - 1) DIV 2 AS STRING))"
-                " ELSE concat('s', CAST(node DIV 2 AS STRING)) END"
-            ),
-        )
     edges = li.join(o, li.l_orderkey == o.o_orderkey).selectExpr(
         "CAST(2 * o_custkey + 1 AS BIGINT) AS src",
         "CAST(2 * l_suppkey AS BIGINT) AS dst",
@@ -9364,10 +9245,7 @@ def q_phash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pixel per-user perturbation, PPM codec round-trip, 16×16-cell
     integer aHash → eight 32-bit words, 32-bit LSH bands through the
     sparse two-pass bucket pairing, zip_with popcount verify."""
-    from obsplus_spark.operators.dedup import (
-        _register_shingle_cache,
-        phash_near_dup_wide,
-    )
+    from obsplus_spark.operators.dedup import phash_near_dup_wide
     from obsplus_spark.util import sorted_group_apply
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id")
@@ -9401,7 +9279,7 @@ def q_phash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "user_id", _emit, "user_id long, words array<long>"
     )
     hashes = hashes.persist()
-    _register_shingle_cache(hashes)
+    register_shingle_cache(hashes)
     return phash_near_dup_wide(
         hashes, max_hamming=16, id_col="user_id", words_col="words"
     )
@@ -9468,10 +9346,7 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-vs-global-mean rule), then dedup.phash_near_dup bands the 64
     bits into 4×16-bit LSH buckets and popcount-verifies collisions —
     the multimodal leg of the near-dup family, never all-pairs."""
-    from obsplus_spark.operators.dedup import (
-        _register_shingle_cache,
-        phash_near_dup,
-    )
+    from obsplus_spark.operators.dedup import phash_near_dup
     from obsplus_spark.util import sorted_group_apply
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id")
@@ -9503,7 +9378,7 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the hash table feeds the banding explode AND both verify joins —
     # persist so the codec pass runs once (bounded ring releases it)
     hashes = hashes.persist()
-    _register_shingle_cache(hashes)
+    register_shingle_cache(hashes)
     return phash_near_dup(
         hashes, max_hamming=8, id_col="user_id", lo_col="h_lo", hi_col="h_hi"
     )

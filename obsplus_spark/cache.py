@@ -11,12 +11,12 @@ Three registries, one invariant set:
    The production analogue is caching hot dimension tables: at 100 TB
    you cache dims, not facts.
 
-2. **Rings** (``_SHINGLE_CACHES``, ``_ASSIGNMENT_CACHES``): bounded
-   per-session FIFOs of operator-internal persists (shingle/digest
-   tables, IVF assignment frames). The newest ``ring_max`` stay warm —
-   the current pipeline plus one predecessor a caller may still be
-   executing — older ones unpersist lazily, so a loop of scans never
-   strands executor memory.
+2. **Rings** (``_SHINGLE_CACHES``, ``_ASSIGNMENT_CACHES``,
+   ``_FRONTIER_CACHES``): bounded per-session FIFOs of operator-internal
+   persists (shingle/digest tables, IVF assignment frames, prune
+   frontiers). The newest ``ring_max`` stay warm — the current pipeline
+   plus one predecessor a caller may still be executing — older ones
+   unpersist lazily, so a loop of scans never strands executor memory.
 
 3. **Private chains** (``_PRIVATE_CHAINS``): per-``(session, group)``
    multi-frame persist chains (e.g. ``k_core_peel``'s per-round edge
@@ -54,6 +54,9 @@ _SHINGLE_CACHES: dict[int, list] = {}
 
 #: per-session ring of persisted IVF-assignment frames (newest last)
 _ASSIGNMENT_CACHES: dict[int, list] = {}
+
+#: per-session ring of persisted ``prune_rejected`` frontiers (newest last)
+_FRONTIER_CACHES: dict[int, list] = {}
 
 #: operator-private persist chains, keyed (session id, group)
 _PRIVATE_CHAINS: dict[tuple, list] = {}
@@ -116,6 +119,13 @@ def register_assignment_cache(arr: DataFrame, ring_max: int = 2) -> None:
     a text-dedup loop sharing a session don't evict each other's
     working set."""
     _register_in_ring(_ASSIGNMENT_CACHES, arr, ring_max)
+
+
+def register_frontier_cache(arr: DataFrame, ring_max: int = 2) -> None:
+    """Register the final persisted frontier of a ``prune_rejected``
+    call (a small, already-materialized id set backing the returned
+    plan)."""
+    _register_in_ring(_FRONTIER_CACHES, arr, ring_max)
 
 
 def register_private_chain(session, group: str, frames: list) -> None:

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from obsplus_spark.util import plan_checkpoint
-
 
 #: slack subtracted inside every PPJoin ceil() bound — absorbs DECIMAL/
 #: float upward rounding of the rational bounds so exact-boundary pairs
@@ -544,8 +542,8 @@ def hamming_distance(a, b) -> F.Column:
 
 
 # Persist-lifecycle machinery lives in obsplus_spark.cache (VERDICT r9
-# #5 consolidation); the historical names stay importable from here —
-# every operator module and the entry point registered through them.
+# #5 consolidation); this module's own call sites use the historical
+# aliases below, other modules import from obsplus_spark.cache.
 from obsplus_spark.cache import (  # noqa: E402
     _PRIVATE_CHAINS,
     _SHINGLE_CACHES,
@@ -787,17 +785,10 @@ def dedup_clusters(
         )
         """,
     )
-    # r13: persist WITHOUT the plan_checkpoint rebind. sql_over binds
-    # persisted inputs to the cache-substituted InMemoryRelation leaf
-    # (cache_scan, r12 batch 9/12), so every rounds-statement reference
-    # is already a one-node scan — the rebind's O(1)-re-analysis benefit
-    # is subsumed, and dropping it removes the eager physical planning
-    # of the whole pair pipeline from construction (measured 50-70% of
-    # this operator's build; the rebuild-set bench reps pay it 4×). It
-    # also unifies the AQE-on and AQE-off construction paths (the
-    # rebind was a deliberate AQE passthrough, so AQE sessions never
-    # saw its benefit) and restores relation stats/partitioning on the
-    # edge frame.
+    # plain persist: sql_over binds persisted inputs to the
+    # cache-substituted InMemoryRelation leaf (cache_scan), so every
+    # rounds-statement reference is already a one-node scan with the
+    # edge frame's relation stats and partitioning.
     edges = edges.persist()
     _register_shingle_cache(edges)  # bounded per-session ring releases it
 

@@ -107,7 +107,6 @@ def pagerank(
     k: int = 20,
     src_col: str = "src",
     dst_col: str = "dst",
-    edges_prepared: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge frame, returning the
     top-``k`` nodes — the influence/centrality pass a curation pipeline
@@ -137,13 +136,13 @@ def pagerank(
 
     Output: (node, rank) — ≤ k rows, rank rounded to 6 dp.
     """
-    from obsplus_spark.util import sql_over
+    from obsplus_spark.util import shuffle_width, sql_over
 
     d = float(damping)
     its = int(iterations)
     if its < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    from obsplus_spark.operators.dedup import _register_shingle_cache
+    from obsplus_spark.cache import register_shingle_cache
 
     # Hoist dedup + out-degree weighting OUT of the statement and
     # persist the weighted edge frame hash-partitioned by src (same
@@ -156,26 +155,13 @@ def pagerank(
     # whose r-side inherits hash(src) from its own aggregate — so the
     # ONLY per-round exchange is the map-combined `GROUP BY dst`.
     spark = edges.sparkSession
-    try:
-        _shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:  # e.g. "auto" under some AQE deployments
-        _shuf = 0
-    npart = max(spark.sparkContext.defaultParallelism, _shuf)
-    base_e = edges.selectExpr(f"{src_col} AS src", f"{dst_col} AS dst")
-    if not edges_prepared:
-        base_e = (
-            base_e
-            .where("src IS NOT NULL AND dst IS NOT NULL")
-            .repartition(npart, "src")
-            .distinct()
-        )
-    # else: ``edges_prepared=True`` declares the frame already deduped,
-    # NULL-free, and hash-distributed on src (the contract a src-bucketed
-    # table written by plans/layout.write_bucketed provides — same hook
-    # as bfs_distances'): the out-degree window and every downstream
-    # consumer then read the incoming distribution directly, zero
-    # exchanges for the edge frame in the whole query. The caller owns
-    # the contract — duplicate edges would silently skew the weights.
+    npart = shuffle_width(spark)
+    base_e = (
+        edges.selectExpr(f"{src_col} AS src", f"{dst_col} AS dst")
+        .where("src IS NOT NULL AND dst IS NOT NULL")
+        .repartition(npart, "src")
+        .distinct()
+    )
     ew = (
         base_e
         .selectExpr(
@@ -183,7 +169,7 @@ def pagerank(
         )
         .persist()
     )
-    _register_shingle_cache(ew)
+    register_shingle_cache(ew)
     base = f"{1.0 - d!r}D + {d!r}D * coalesce(c.contrib, 0.0D)"
     parts = [
         """
@@ -231,7 +217,6 @@ def hits_scores(
     dst_col: str = "dst",
     broadcast_auth: bool = False,
     node_decode: str | None = None,
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Fixed-iteration HITS (hubs & authorities) over a directed edge
     frame, returning the top-``k`` authorities — the complementary
@@ -288,7 +273,7 @@ def hits_scores(
     output is row-identical to running the whole pipeline on the
     decoded keys.
     """
-    from obsplus_spark.util import ensure_parallelism, sql_over
+    from obsplus_spark.util import ensure_parallelism, shuffle_width, sql_over
 
     its = int(iterations)
     if its < 1:
@@ -311,7 +296,7 @@ def hits_scores(
             " mode. Use <= 3 iterations (ranking is already stable on"
             " near-all graphs) or normalize scores externally."
         )
-    from obsplus_spark.operators.dedup import _register_shingle_cache
+    from obsplus_spark.cache import register_shingle_cache
 
     # hash(src) BEFORE the distinct: HashPartitioning(src) satisfies the
     # distinct's ClusteredDistribution(src, dst) (subset rule), so the
@@ -324,28 +309,16 @@ def hits_scores(
     # ensure_parallelism — stacking both paid a wasted RoundRobin
     # pass over the raw edges.
     spark = edges.sparkSession
-    try:
-        _shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:  # e.g. "auto" under some AQE deployments
-        _shuf = 0
-    npart = max(spark.sparkContext.defaultParallelism, _shuf)
+    npart = shuffle_width(spark)
     dedup = (
         edges
         .selectExpr(f"{src_col} AS src", f"{dst_col} AS dst")
         .where("src IS NOT NULL AND dst IS NOT NULL")
         .repartition(npart, "src")
+        .distinct()
+        .persist()
     )
-    if not edges_deduped:
-        dedup = dedup.distinct()
-    # else: caller declares the edges already distinct (e.g. an
-    # injective in-row map of the deduped pair table written by
-    # plans/layout.write_bucketed) — the repartition is still applied
-    # because the rounds' in-place joins require the src hash
-    # distribution, but the DISTINCT aggregate is skipped. Duplicate
-    # edges under this flag would silently double hub/auth sums; the
-    # caller owns the contract.
-    dedup = dedup.persist()
-    _register_shingle_cache(dedup)
+    register_shingle_cache(dedup)
     bhint = "/*+ BROADCAST(a) */ " if broadcast_auth else ""
     parts = [
         f"""
@@ -481,7 +454,7 @@ def k_core_peel(
     Output: (node, degree) for survivors of the final round, with the
     degree AFTER that round's edge pruning.
     """
-    from obsplus_spark.util import ensure_parallelism, sql_over
+    from obsplus_spark.util import ensure_parallelism, shuffle_width, sql_over
 
     kk, rr = int(k), int(rounds)
     if kk < 1:
@@ -495,13 +468,9 @@ def k_core_peel(
     # subquery replaces (not stacks on) the implicit exchange — the
     # hinted partitioning satisfies the window's required distribution.
     spark = edges.sparkSession
-    try:
-        _shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:  # e.g. "auto" under some AQE deployments
-        _shuf = 0
-    npart = max(spark.sparkContext.defaultParallelism, _shuf)
+    npart = shuffle_width(spark)
     if broadcast_degrees:
-        from obsplus_spark.operators.dedup import _register_private_chain
+        from obsplus_spark.cache import register_private_chain
 
         # one sql_over per stage — a chained-DataFrame round paid ~8
         # eager Catalyst analyses of the deepening tree (plan-build is
@@ -564,7 +533,7 @@ def k_core_peel(
                 e_next = e_next.persist()
                 chain.append(e_next)
             e = e_next
-        _register_private_chain(spark, "k_core_peel", chain)
+        register_private_chain(spark, "k_core_peel", chain)
         out = (
             e.select(F.explode(F.array("a", "b")).alias("node"))
             .groupBy("node")
@@ -625,8 +594,6 @@ def bfs_distances(
     max_hops: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    edges_prepared: bool = False,
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distances — frontier expansion unrolled to a
     fixed ``max_hops`` bound, the k-hop-neighborhood primitive (blast
@@ -670,20 +637,6 @@ def bfs_distances(
     plan-time literals (seed sets are small by nature — a large seed
     FRAME would instead union into round 0).
 
-    ``edges_prepared=True`` declares the edge frame ALREADY deduped,
-    NULL-free, and hash-distributed on ``src_col`` — the contract a
-    src-bucketed table written once by
-    :func:`obsplus_spark.plans.layout.write_bucketed` provides — and
-    skips the operator's repartition + distinct: the ~1.3 s
-    edge-derivation floor every graph operator re-pays per call
-    becomes a one-time layout cost the whole graph family
-    (pagerank/HITS/k-core/BFS) amortizes. The per-round frontier
-    joins read the bucketed (or otherwise pre-partitioned)
-    distribution directly; the multi-round persist is kept. The
-    caller owns the contract — undeduplicated edges would double
-    offer weights silently, so only set this for frames produced by
-    the documented layout path.
-
     Output: (node, dist) for every node within ``max_hops`` of a
     source, including the sources at dist 0.
     """
@@ -691,38 +644,19 @@ def bfs_distances(
         raise ValueError("sources must be non-empty")
     if int(max_hops) < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    from obsplus_spark.operators.dedup import _register_private_chain
+    from obsplus_spark.cache import register_private_chain
+    from obsplus_spark.util import shuffle_width
 
     spark = edges.sparkSession
-    try:
-        _shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:  # e.g. "auto" under some AQE deployments
-        _shuf = 0
-    npart = max(spark.sparkContext.defaultParallelism, _shuf)
-    if edges_prepared:
-        # projection only — preserves the incoming (bucketed)
-        # distribution; dedup/NULL-screen are the layout's contract
-        edges = edges.selectExpr(
-            f"{src_col} AS {src_col}", f"{dst_col} AS {dst_col}"
-        ).persist()
-    else:
-        edges = (
-            edges
-            .selectExpr(f"{src_col} AS {src_col}", f"{dst_col} AS {dst_col}")
-            .where(f"{src_col} IS NOT NULL AND {dst_col} IS NOT NULL")
-            .repartition(npart, src_col)
-        )
-        if not edges_deduped:
-            # ``edges_deduped=True``: the caller's frame is already
-            # distinct (e.g. an injective direction-doubling of the
-            # deduped pair table from plans/layout.write_bucketed) but
-            # NOT distributed on this operator's src key — keep the
-            # repartition (the frontier joins require it), skip the
-            # DISTINCT aggregate. Duplicate edges only multiply
-            # always-losing min-offers, but the caller owns the
-            # contract all the same.
-            edges = edges.distinct()
-        edges = edges.persist()
+    npart = shuffle_width(spark)
+    edges = (
+        edges
+        .selectExpr(f"{src_col} AS {src_col}", f"{dst_col} AS {dst_col}")
+        .where(f"{src_col} IS NOT NULL AND {dst_col} IS NOT NULL")
+        .repartition(npart, src_col)
+        .distinct()
+        .persist()
+    )
     chain = [edges]
 
     def _lit(v) -> str:
@@ -772,5 +706,5 @@ def bfs_distances(
             d_next = d_next.persist()
             chain.append(d_next)
         d = d_next
-    _register_private_chain(spark, "bfs_distances", chain)
+    register_private_chain(spark, "bfs_distances", chain)
     return d

@@ -392,7 +392,7 @@ def cascade_delete(
     """
     from pyspark.sql import functions as F
 
-    from obsplus_spark.operators.dedup import _register_shingle_cache
+    from obsplus_spark.cache import register_shingle_cache
     from obsplus_spark.util import ensure_parallelism
 
     if not chain:
@@ -408,7 +408,7 @@ def cascade_delete(
         .distinct()
         .persist()
     )
-    _register_shingle_cache(banned)
+    register_shingle_cache(banned)
     stats = []
     for name, df, fk_col, pk_col in chain:
         bside = F.broadcast(banned) if broadcast_keys else banned
@@ -441,7 +441,7 @@ def cascade_delete(
                 .distinct()
                 .persist()
             )
-            _register_shingle_cache(banned)
+            register_shingle_cache(banned)
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)

@@ -147,27 +147,12 @@ def prune_rejected(
     # materialized). It joins the bounded per-session ring: the newest two
     # frontiers stay live, older ones unpersist — repeated prune calls in a
     # long session no longer strand one cached id-set each.
-    _register_frontier_cache(alive)
+    from obsplus_spark.cache import register_frontier_cache
+
+    register_frontier_cache(alive)
     if ids_only:
         return alive
     return nodes.join(alive, id_col, "left_semi")
-
-
-#: per-session ring of persisted prune frontiers (newest last). Two stay
-#: live — the current result plus one predecessor a caller may still be
-#: executing — older ones unpersist lazily (same pattern as the shingle
-#: cache ring in dedup.py).
-_FRONTIER_CACHES: dict[int, list] = {}
-
-
-def _register_frontier_cache(df: DataFrame) -> None:
-    ring = _FRONTIER_CACHES.setdefault(id(df.sparkSession), [])
-    ring.append(df)
-    while len(ring) > 2:
-        try:
-            ring.pop(0).unpersist()
-        except Exception:
-            pass  # session torn down; nothing to release
 
 
 def merge_keyed(

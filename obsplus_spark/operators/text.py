@@ -1402,7 +1402,7 @@ def bigram_logprob(
 
     Output: (id, n_bigrams, bits_per_bigram) — 6 dp.
     """
-    from obsplus_spark.operators.dedup import _register_shingle_cache
+    from obsplus_spark.cache import register_shingle_cache
     from obsplus_spark.util import ensure_parallelism, sql_over
 
     a = float(alpha)
@@ -1456,7 +1456,7 @@ def bigram_logprob(
     # aggregation of the BUILD groupBy is preserved (the repartition
     # moves deduped tf rows, never raw occurrences).
     tf = tf.repartition(F.col("bg")).persist()
-    _register_shingle_cache(tf)
+    register_shingle_cache(tf)
     return sql_over(
         {"t": tf},
         f"""

@@ -195,23 +195,6 @@ def write_bucketed(
         raise ValueError("bucket_cols must be non-empty")
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if mode == "overwrite" and path is None:
-        # a managed-table LOCATION left behind by an EARLIER session
-        # (the in-memory catalog forgot the table, the warehouse dir
-        # survived) fails saveAsTable even in overwrite mode — drop
-        # both first (r13; hit by the session-keyed graph edge table)
-        spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        try:
-            import shutil
-            from urllib.parse import urlparse
-
-            wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-            loc = f"{wh.rstrip('/')}/{table.split('.')[-1].lower()}"
-            if wh and len(loc) > len("/x"):
-                shutil.rmtree(loc, ignore_errors=True)
-        except Exception:
-            pass  # non-local warehouse: overwrite mode handles it
     w = df.write.format("parquet").mode(mode).bucketBy(
         int(n_buckets), *bucket_cols
     )

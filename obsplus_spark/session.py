@@ -1,8 +1,9 @@
 """SparkSession factory with engine defaults.
 
-Defaults chosen for oracle-exact comparisons (UTC session timezone, ANSI off)
-and for scale (AQE on, shuffle partitions sized to cores locally; on a real
-cluster the shuffle-partition default is left to AQE coalescing).
+Defaults chosen for oracle-exact comparisons (UTC session timezone; ANSI
+mode is not set, so Spark 4's default of ANSI on applies) and for scale (AQE
+on, shuffle partitions sized to cores locally; on a real cluster the
+shuffle-partition default is left to AQE coalescing).
 """
 
 from __future__ import annotations

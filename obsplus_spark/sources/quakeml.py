@@ -16,11 +16,14 @@ everywhere else. Export is the inverse per-row serializer.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 from datetime import datetime, timezone
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 NS = 1_000_000_000
 
@@ -659,7 +662,8 @@ def quakeml_to_tree(files: DataFrame) -> DataFrame:
             for path, content in zip(pdf["path"], pdf["content"]):
                 try:
                     out.extend(parse_quakeml(bytes(content), path))
-                except Exception:
+                except Exception as exc:  # unreadable file → skipped, not fatal
+                    _log.warning("skipping unreadable file %s: %r", path, exc)
                     continue
             yield pd.DataFrame(out, columns=cols)
 
@@ -779,7 +783,8 @@ def stationxml_to_df(files: DataFrame) -> DataFrame:
             for path, content in zip(pdf["path"], pdf["content"]):
                 try:
                     out.extend(parse_stationxml(bytes(content), path))
-                except Exception:
+                except Exception as exc:  # unreadable file → skipped, not fatal
+                    _log.warning("skipping unreadable file %s: %r", path, exc)
                     continue
             yield pd.DataFrame(out, columns=cols)
 

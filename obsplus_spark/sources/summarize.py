@@ -17,11 +17,14 @@ aren't in this container).
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 #: index-row schema produced by every summarizer
 SUMMARY_SCHEMA = (
@@ -104,9 +107,10 @@ def summarize_files(
 ) -> DataFrame:
     """binaryFile rows → index rows via Arrow-batched ``mapInPandas``.
 
-    One output row per trace record; malformed files yield zero rows
-    (PERMISSIVE — the reference's ``_try_read_stream`` returns None and
-    moves on, ``utils/bank.py:440-455``).
+    One output row per trace record; a file whose parser raises yields
+    zero rows and a WARNING naming the path (PERMISSIVE — the
+    reference's ``_try_read_stream`` returns None and moves on,
+    ``utils/bank.py:440-455``).
     """
     import pandas as pd
 
@@ -116,8 +120,9 @@ def summarize_files(
             for path, content in zip(pdf["path"], pdf["content"]):
                 try:
                     out.extend(parser(bytes(content), path))
-                except Exception:
-                    continue  # unreadable file → skipped, not fatal
+                except Exception as exc:  # unreadable file → skipped, not fatal
+                    _log.warning("skipping unreadable file %s: %r", path, exc)
+                    continue
             yield pd.DataFrame(
                 out,
                 columns=[

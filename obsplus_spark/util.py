@@ -149,59 +149,16 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df.repartition(target)
 
 
-def plan_checkpoint(df: DataFrame) -> DataFrame:
-    """Truncate a frame's LOGICAL plan without materializing or losing
-    fault tolerance: rebind the physical plan's row RDD
-    (``queryExecution().toRdd()`` — lazy, keeps full RDD lineage, so
-    lost blocks recompute from the parquet inputs unlike
-    ``localCheckpoint``) as a one-node ``LogicalRDD`` scan.
-
-    Why (guide §7.3 "planning time itself can become the bottleneck",
-    §3.3 "materialising an intermediate truncates the plan"): every
-    downstream ``spark.sql`` statement that references a persisted
-    intermediate re-walks the intermediate's ENTIRE analyzed tree once
-    per reference — a k-round label-propagation statement over an edge
-    frame whose lineage is the whole near-dup pair pipeline re-analyzes
-    that pipeline k+2 times, and the next statement downstream walks it
-    all again (measured: ~0.3 s of Catalyst analysis per dedup-family
-    plan build, the single largest build cost). After the rebind the
-    subtree is one ``Scan ExistingRDD`` node; Catalyst cost for every
-    consumer drops to O(1) in the upstream pipeline's size.
-
-    Semantics are unchanged: the RDD executes the exact physical plan
-    the frame would have executed, nothing runs until an action, and
-    callers persist the REBOUND frame exactly as they persisted the
-    original (the cache then holds the one-node plan, so cache
-    substitution keeps working for repeated references). Costs to know
-    about: (a) physical planning of ``df`` happens eagerly on the
-    driver here (no job — the same work was otherwise paid at first
-    action); (b) the rebound plan reports no column stats, so consumers
-    relying on AUTO broadcast of this frame must hint explicitly (our
-    call sites either hint or want the shuffle join anyway);
-    (c) ``internalCreateDataFrame`` is package-private Scala — public
-    in bytecode, stable across the 3.x/4.x line (it is the same entry
-    ``Dataset.checkpoint`` uses internally), pinned by tests.
-
-    **AQE sessions: deliberate passthrough.** Under
-    ``spark.sql.adaptive.enabled`` an ``AdaptiveSparkPlanExec.execute``
-    materializes its query stages EAGERLY — the rebind would run real
-    cluster jobs at plan-construction time (breaking operator laziness)
-    and would freeze a static physical plan, forfeiting AQE's runtime
-    skew/coalesce re-planning for this subtree — precisely the wrong
-    trade at 100 TB, where driver plan-build milliseconds are noise and
-    adaptive execution is the point. So with AQE on the frame is
-    returned unchanged (full logical lineage, fully lazy, adaptive);
-    the rebind applies in non-adaptive sessions, where the frozen
-    static plan is what would have executed anyway.
-    """
-    spark = df.sparkSession
-    if spark.conf.get("spark.sql.adaptive.enabled", "true") == "true":
-        return df
-    jdf = df._jdf
-    jrdd = jdf.queryExecution().toRdd()
-    jspark = df.sparkSession._jsparkSession
-    new_jdf = jspark.internalCreateDataFrame(jrdd, jdf.schema(), False)
-    return DataFrame(new_jdf, df.sparkSession)
+def shuffle_width(spark) -> int:
+    """Partition count for an operator's explicit full-data shuffle:
+    the core count, or ``spark.sql.shuffle.partitions`` when that is
+    wider. A non-integer conf value (e.g. "auto" under some AQE
+    deployments) counts as 0, so the core count applies."""
+    try:
+        shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:
+        shuf = 0
+    return max(spark.sparkContext.defaultParallelism, shuf)
 
 
 def cache_scan(df: DataFrame) -> DataFrame:
@@ -226,40 +183,32 @@ def cache_scan(df: DataFrame) -> DataFrame:
 
     The rebind is driver-only (one CacheManager lookup, no job), lazy,
     AQE-safe, keeps the cached plan's output partitioning visible to
-    downstream exchange planning, and keeps relation statistics — the
-    two properties a ``plan_checkpoint`` rebind loses. If the plan's
-    root did not substitute (not fully cached, exotic frame), the input
-    is returned unchanged.
+    downstream exchange planning, and keeps relation statistics. If the
+    plan's root did not substitute (not fully cached), the input is
+    returned unchanged.
     """
-    try:
-        # ask the CacheManager FRESH (never queryExecution().
-        # withCachedData(): that is a memoized lazy val, so a frame
-        # whose QueryExecution was forced BEFORE persist() — any stats
-        # probe does it — would permanently report its pre-cache plan).
-        # Look up the NORMALIZED plan, not the raw analyzed one: the
-        # CacheManager stores normalized plans, and a temp-view rebind
-        # between constructions shifts the analyzed tree enough that
-        # its canonical form stops matching after the first execution
-        # (observed: construct→run→construct lost the substitution on
-        # every later build in the session — reps 2+ of a rebuild-set
-        # query silently re-derived the whole pipeline)
-        jspark = df.sparkSession._jsparkSession
-        qe = df._jdf.queryExecution()
-        try:
-            plan = qe.normalized()
-        except Exception:
-            plan = qe.analyzed()  # pre-normalization Spark builds
-        cached = jspark.sharedState().cacheManager().useCachedData(
-            plan.clone()
-        )
-        if not cached.getClass().getName().endswith(".InMemoryRelation"):
-            return df
-        new_jdf = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            jspark, cached
-        )
-        return DataFrame(new_jdf, df.sparkSession)
-    except Exception:
-        return df  # non-classic impls / connect: keep the original plan
+    # ask the CacheManager FRESH (never queryExecution().
+    # withCachedData(): that is a memoized lazy val, so a frame
+    # whose QueryExecution was forced BEFORE persist() — any stats
+    # probe does it — would permanently report its pre-cache plan).
+    # Look up the NORMALIZED plan, not the raw analyzed one: the
+    # CacheManager stores normalized plans, and a temp-view rebind
+    # between constructions shifts the analyzed tree enough that
+    # its canonical form stops matching after the first execution
+    # (observed: construct→run→construct lost the substitution on
+    # every later build in the session — reps 2+ of a rebuild-set
+    # query silently re-derived the whole pipeline)
+    jspark = df.sparkSession._jsparkSession
+    plan = df._jdf.queryExecution().normalized()
+    cached = jspark.sharedState().cacheManager().useCachedData(
+        plan.clone()
+    )
+    if not cached.getClass().getName().endswith(".InMemoryRelation"):
+        return df
+    new_jdf = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jspark, cached
+    )
+    return DataFrame(new_jdf, df.sparkSession)
 
 
 def sql_str_lit(s: str) -> str:
@@ -298,8 +247,7 @@ def sql_over(dfs: "dict[str, DataFrame]", query: str) -> DataFrame:
     the persist never materializes at all. Binding the
     ``InMemoryRelation`` leaf directly makes every reference a cache
     read by construction, keeps the cached partitioning visible to
-    downstream exchanges, and keeps relation stats (unlike a
-    ``plan_checkpoint`` rebind).
+    downstream exchanges, and keeps relation stats.
     """
     import threading
 
@@ -318,10 +266,7 @@ def sql_over(dfs: "dict[str, DataFrame]", query: str) -> DataFrame:
             # fine: they resolve to the same data, and spark.sql
             # analyzes eagerly so the binding is consumed before any
             # later rebind.
-            try:
-                token = df._jdf.queryExecution().analyzed().semanticHash()
-            except Exception:
-                token = id(df)  # non-classic DataFrame impls
+            token = df._jdf.queryExecution().analyzed().semanticHash()
             name = f"_obsplus_sql_over_{alias}_p{token & 0xFFFFFFFF}"
             df = cache_scan(df)
         else:

@@ -391,27 +391,6 @@ def test_mixture_feasibility_no_achievable_mass(spark):
     assert not r.feasible
 
 
-# -------------------------------------------- bfs edges_prepared path
-
-
-def test_bfs_edges_prepared_lockstep(spark):
-    """edges_prepared=True (the caller guarantees deduped, NULL-free,
-    src-partitioned edges — the bucketed-layout contract) must return
-    exactly the default path's distances."""
-    from obsplus_spark.operators.graph import bfs_distances
-
-    rows = [(1, 2), (2, 3), (3, 4), (2, 5), (5, 6), (9, 9)]
-    e = spark.createDataFrame(rows, "src long, dst long")
-    base = sorted(tuple(r) for r in
-                  bfs_distances(e, [1], max_hops=3).collect())
-    prepared = e.repartition(4, "src")  # deduped already (distinct rows)
-    got = sorted(tuple(r) for r in
-                 bfs_distances(prepared, [1], max_hops=3,
-                               edges_prepared=True).collect())
-    assert got == base
-    assert (1, 0) in got and (4, 2) not in got and (4, 3) in got
-
-
 def test_mixture_feasibility_null_weight(spark):
     """NULL weight = no target share: requested 0, trivially feasible,
     zero realized share — NOT the least()-skips-NULL trap (which would

@@ -3,7 +3,6 @@ internals for performance must keep results identical and keep
 undersized bounds LOUD."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_k_core_require_converged_passes_at_fixed_point(spark):
@@ -68,79 +67,10 @@ def test_k_core_rounds2_matches_rounds4_on_bench_graph(spark):
     assert r2.exceptAll(r4).count() == 0
 
 
-def test_plan_checkpoint_lazy_identical_and_cache_substituted(spark):
-    """plan_checkpoint contract in a non-adaptive session (the bench
-    configuration): (a) builds NO job (lazy — toRdd only plans),
-    (b) results are identical to the original frame, (c) the rebound
-    plan is a one-node ExistingRDD scan, and (d) persisting the rebound
-    frame cache-substitutes repeated references."""
-    from obsplus_spark.util import plan_checkpoint
-
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    tracker = spark.sparkContext.statusTracker()
-    try:
-        df = (
-            spark.range(0, 500)
-            .selectExpr("id", "id % 11 AS k")
-            .groupBy("k")
-            .agg(F.count("*").alias("n"))
-        )
-        jobs_before = len(tracker.getJobIdsForGroup(None))
-        rb = plan_checkpoint(df)
-        assert len(tracker.getJobIdsForGroup(None)) == jobs_before, (
-            "plan_checkpoint must not run a job"
-        )
-        assert sorted(map(tuple, rb.collect())) == sorted(
-            map(tuple, df.collect())
-        )
-        plan = rb._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan
-        # persisted rebound frame: repeated references hit the cache
-        rbp = plan_checkpoint(df).persist()
-        try:
-            out = rbp.join(rbp.selectExpr("k", "n AS n2"), "k")
-            phys = out._jdf.queryExecution().executedPlan().toString()
-            assert "InMemoryTableScan" in phys
-            assert out.count() == df.count()
-        finally:
-            rbp.unpersist()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
-def test_plan_checkpoint_is_passthrough_under_aqe(spark):
-    """Under AQE the rebind must NOT apply: AdaptiveSparkPlanExec
-    materializes stages eagerly on execute(), so rebinding would run
-    jobs at construction time and freeze a static plan — the helper
-    returns the frame unchanged (lazy, adaptive) instead."""
-    from obsplus_spark.util import plan_checkpoint
-
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    tracker = spark.sparkContext.statusTracker()
-    try:
-        df = (
-            spark.range(0, 300)
-            .selectExpr("id % 7 AS k", "id")
-            .groupBy("k")
-            .agg(F.sum("id").alias("s"))
-        )
-        jobs_before = len(tracker.getJobIdsForGroup(None))
-        rb = plan_checkpoint(df)
-        assert rb is df
-        assert len(tracker.getJobIdsForGroup(None)) == jobs_before
-        assert sorted(map(tuple, rb.collect())) == sorted(
-            map(tuple, df.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
 def test_near_duplicates_rebound_pipeline_matches_unpersisted(spark):
-    """The r12 plan_checkpoint wiring in dedup_clusters (edge-frame
-    rebind) must not change ANY pair or label: compare against the
-    persist_shingles=False path (full lineage throughout)."""
+    """dedup_clusters' persisted edge frame must not change ANY pair
+    or label: compare against the persist_shingles=False path (full
+    lineage throughout)."""
     from obsplus_spark.operators.dedup import dedup_clusters, near_duplicates
 
     docs = spark.createDataFrame(

@@ -3,8 +3,8 @@ internals for performance must keep results identical."""
 
 
 def test_dedup_clusters_edges_bind_to_cache_without_checkpoint(spark):
-    """r13: dedup_clusters persists its edge frame WITHOUT the
-    plan_checkpoint rebind — sql_over's cache_scan binding must make
+    """r13: dedup_clusters persists its edge frame WITHOUT a
+    plan-truncating RDD rebind — sql_over's cache_scan binding must make
     every rounds-statement reference an InMemoryTableScan (no
     ExistingRDD, no re-derivation of the pair pipeline), and the labels
     must match the unpersisted full-lineage path."""
@@ -53,41 +53,6 @@ def test_standardize_query_serialization_matches_operator(spark):
         # elements are 6-dp rounded doubles; the decimal round-trip is
         # exact up to -0.0 (serialized as 0.000000 on both engines)
         assert decoded == [0.0 if v == 0 else v for v in want[vid]]
-
-
-def test_graph_prepared_edge_flags_match_default_paths(spark):
-    """r13: pagerank(edges_prepared=True), hits_scores(edges_deduped=True)
-    and bfs_distances(edges_deduped=True) over an already-distinct edge
-    frame must be row-identical to the default in-operator dedup path."""
-    from obsplus_spark.operators.graph import (
-        bfs_distances,
-        hits_scores,
-        pagerank,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 10), (3, 12), (4, 13), (2, 11)],
-        "s bigint, c bigint",
-    ).repartition(4, "s").distinct().persist()
-    try:
-        e = pairs.selectExpr("s AS src", "c AS dst")
-        assert sorted(map(tuple, pagerank(e, edges_prepared=True).collect())) \
-            == sorted(map(tuple, pagerank(e).collect()))
-        assert [tuple(r) for r in hits_scores(e, edges_deduped=True).collect()] \
-            == [tuple(r) for r in hits_scores(e).collect()]
-        doubled = pairs.selectExpr(
-            "explode(array(named_struct('src', 2*s+1, 'dst', 2*c),"
-            " named_struct('src', 2*c, 'dst', 2*s+1))) AS e"
-        ).select("e.src", "e.dst")
-        want = sorted(
-            map(tuple, bfs_distances(doubled, [3], max_hops=3).collect())
-        )
-        got = sorted(map(tuple, bfs_distances(
-            doubled, [3], max_hops=3, edges_deduped=True
-        ).collect()))
-        assert got == want
-    finally:
-        pairs.unpersist()
 
 
 def test_write_bucketed_round_trip_and_partitioning(spark, tmp_path):

@@ -204,7 +204,7 @@ def test_prune_rejected_transitive(spark):
 def test_prune_frontier_ring_bounded(spark):
     """Repeated prune calls keep at most two persisted frontiers per
     session; older ones must be unpersisted (no cache accumulation)."""
-    from obsplus_spark.operators.surgery import _FRONTIER_CACHES
+    from obsplus_spark.cache import _FRONTIER_CACHES
 
     nodes = spark.createDataFrame(
         [("a", None), ("b", "rejected"), ("c", None)],
@@ -220,8 +220,22 @@ def test_prune_frontier_ring_bounded(spark):
         frames.extend(f for f in ring if f not in frames)
     ring = _FRONTIER_CACHES[id(spark)]
     assert len(ring) == 2
+    # the four calls build plan-identical frontiers that share one
+    # CacheManager entry: evicting an old one must not uncache the
+    # ring (adoption re-persist), and any other frame still reporting
+    # cached is reading a ring frame's entry
+    assert all(f.storageLevel.useMemory for f in ring)
     live = [f for f in frames if f.storageLevel.useMemory]
-    assert set(map(id, live)) <= set(map(id, ring))
+    assert all(any(f.sameSemantics(r) for r in ring) for f in live)
+    # distinct frontiers per call: exactly the ring stays cached
+    frames = []
+    for i in range(4):
+        prune_rejected(nodes.where(f"resource_id <> 'x{i}'"), edges).count()
+        frames.extend(f for f in _FRONTIER_CACHES[id(spark)] if f not in frames)
+    ring = _FRONTIER_CACHES[id(spark)]
+    assert len(ring) == 2
+    live = [f for f in frames if f.storageLevel.useMemory]
+    assert set(map(id, live)) == set(map(id, ring))
 
 
 def test_bump_version(spark):

@@ -5,16 +5,14 @@ Usage: python tools/ab_solo.py <repo_root> <suffix> q1 [q2 ...]
 Runs each query from the entry module under <repo_root> in a
 bench-identical session (shuffle=4, AQE off, sf0.001 warmup, base tables
 opened), reports build best-of-3 and noop-rep best-of-4 (construction
-included in the rep, matching bench.py's rebuild_each_rep treatment for
+included in the rep, matching bench.py's REBUILD_EACH_REP treatment for
 queries in that set), and writes ``plans/r12/<q>_<suffix>.txt`` under the
 CURRENT repo with the formatted physical plan.
 """
 
 from __future__ import annotations
 
-import inspect
 import os
-import re
 import sys
 import time
 
@@ -24,12 +22,8 @@ names = sys.argv[3:]
 sys.path.insert(0, root)
 
 import __spark_entry__ as entrymod  # noqa: E402
-import bench as benchmod  # noqa: E402
+from bench import REBUILD_EACH_REP as rebuild  # noqa: E402
 from obsplus_spark import get_spark  # noqa: E402
-
-src = inspect.getsource(benchmod)
-m = re.search(r"rebuild_each_rep = \{(.*?)\}", src, re.S)
-rebuild = set(re.findall(r'"([a-z0-9_]+)"', m.group(1))) if m else set()
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark(

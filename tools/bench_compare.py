@@ -25,6 +25,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
+    from bench import REBUILD_EACH_REP as rebuild
     from obsplus_spark import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -48,17 +49,6 @@ def main() -> int:
         qs = {n: f for n, f in qs.items() if n in only}
     for fn in qs.values():  # warmup at the bench SF (JIT + caches)
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # keep in lockstep with bench.py's rebuild_each_rep: every query
-    # whose construction persists a derived frame re-builds per rep so
-    # the rep re-materializes that persist (steady-state, not result
-    # caching)
-    rebuild = {"minhash_near_dup", "prune_orphans", "common_coverage",
-               "dedup_clusters", "canonical_docs", "jaccard_join", "rebalance", "dedup_eval",
-               "bcubed", "mix_audit",
-               "incremental_dedup", "semantic_dedup", "bfs_hops",
-               "hits_auth", "pagerank", "k_core", "bigram_lp",
-               "cascade_delete", "image_phash", "phash_wide", "fuzzy_decontam",
-               "leak_safe_split", "lsh_recall", "cluster_quality"}
     eng: dict[str, float] = {}
     for name, fn in qs.items():
         df = None if name in rebuild else fn(spark, sf_dir)

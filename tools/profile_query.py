@@ -4,7 +4,7 @@ Usage: python tools/profile_query.py [sf_dir] q1 [q2 ...] [--plans DIR]
 
 For each named query, in a bench-identical session (shuffle=4, AQE off,
 warmup at sf0.001, base tables opened): measures build time (best-of-2),
-noop-sink reps (best-of-4, honoring bench.py's rebuild_each_rep set), and
+noop-sink reps (best-of-4, honoring bench.py's REBUILD_EACH_REP set), and
 attributes the best rep's time across Spark jobs/stages via the live UI
 REST API (stage name, wall duration, executorRunTime, shuffle bytes).
 Optionally writes ``df.explain('formatted')`` to ``--plans DIR/<q>.txt``.
@@ -38,17 +38,9 @@ def main() -> None:
         sf_dir = args.pop(0)
     names = args
 
-    import bench as benchmod  # reuse the rebuild set by parsing source
     import __spark_entry__ as entrymod
+    from bench import REBUILD_EACH_REP as rebuild
     from obsplus_spark import get_spark
-
-    # the rebuild set lives inside bench.main(); replicate the membership
-    # by reading the source (keeps one source of truth in bench.py)
-    import inspect, re
-
-    src = inspect.getsource(benchmod)
-    m = re.search(r"rebuild_each_rep = \{(.*?)\}", src, re.S)
-    rebuild = set(re.findall(r'"([a-z0-9_]+)"', m.group(1))) if m else set()
 
     spark = get_spark(
         "profile",
