@@ -102,7 +102,7 @@ def _parse_one(buf: bytes, off: int, path: str):
     try:
         seq = hdr[0:6].decode("ascii")
         quality = chr(hdr[6])
-    except Exception:
+    except UnicodeDecodeError:
         return None
     if quality not in "DRQM" or not (seq.strip("? ").isdigit() or seq == "      "):
         return None

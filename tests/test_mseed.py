@@ -59,6 +59,8 @@ def test_garbage_and_truncation():
     assert parse_mseed_records(b"") == []
     assert parse_mseed_records(b"\x00" * 4096) == []
     assert parse_mseed_records(b"this is not miniseed " * 100) == []
+    # non-ASCII sequence number: the header decode fails, record skipped
+    assert parse_mseed_records(b"\xff" * 4096) == []
     rec = build_mseed_record(start_ns=T0)
     # valid record followed by garbage: keeps the parsed prefix
     assert len(parse_mseed_records(rec + b"junk" * 64, "t")) == 1

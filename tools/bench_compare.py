@@ -3,63 +3,49 @@
 Runs the SAME protocol on both engines in the same process window (the
 shared host drifts 2× between hours — a ratio is only meaningful when
 both sides are measured back-to-back): warmup pass, then best-of-N per
-query. Prints per-query and total ratios.
+query. The engine side is bench.py's session and reps. Prints per-query
+and total ratios.
 
 Usage: python tools/bench_compare.py [sf_dir] [reps] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
-    from bench import REBUILD_EACH_REP as rebuild
-    from obsplus_spark import get_spark
+    from bench import TABLES, build, rep, session
+    from perfbench.common import FreshPlanGuard
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     only = set(sys.argv[3:])
 
     # --- engine side (bench.py protocol) ---
-    import os
-
+    qs = m.queries()
+    if only:
+        qs = {n: f for n, f in qs.items() if n in only}
     # partitions sized to the DATA, not the bench constant: 4 is the
     # sf0.1 sweep minimum, but a 10-80× synthetic dir needs shuffle
     # width to follow the fact tables (the r9 phash harness lesson,
     # pinned by VERDICT r9 #7). Override via SPARK_GRAFT_SHUFFLE.
-    spark = get_spark(
-        "bench_compare",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    qs = m.queries()
-    if only:
-        qs = {n: f for n, f in qs.items() if n in only}
-    for fn in qs.values():  # warmup at the bench SF (JIT + caches)
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    spark = session("bench_compare", sf_dir, qs.values())
     eng: dict[str, float] = {}
     for name, fn in qs.items():
-        df = None if name in rebuild else fn(spark, sf_dir)
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            (fn(spark, sf_dir) if df is None else df).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        eng[name] = best
+        df, persisted = build(fn, spark, sf_dir)
+        guard = FreshPlanGuard()
+        eng[name] = min(
+            rep(fn, spark, sf_dir, df, persisted, guard)[0]
+            for _ in range(reps)
+        )
 
     # --- oracle side (same warmup + best-of protocol) ---
     con = duckdb.connect()

@@ -41,10 +41,11 @@ order-insensitive.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _mk_rows(n: int):
@@ -207,7 +208,7 @@ def _duckdb_wide(con, pdf, reps):
 def main() -> int:
     import duckdb
 
-    from obsplus_spark import get_spark
+    from bench import session
 
     wide = "--wide" in sys.argv
     argv = [a for a in sys.argv if a != "--wide"]
@@ -225,11 +226,7 @@ def main() -> int:
     # 2M band rows each; measured 11.8 s → see .bench_sf1_r9.txt).
     n_bands = 8 if wide else 4
     shuf = max(4, (n_small * factor * n_bands) // 1_000_000)
-    spark = get_spark(
-        "phash_scale",
-        shuffle_partitions=shuf,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
+    spark = session("phash_scale", shuffle_partitions=shuf)
     con = duckdb.connect()
     out = []
     mk, eng, ddb = (

@@ -11,15 +11,11 @@ Usage: python tools/check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _norm_cell(v):
@@ -44,6 +40,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from bench import TABLES
     from obsplus_spark import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"

@@ -12,9 +12,10 @@ Usage: python tools/plan_report.py [sf_dir]   (default sf0.001)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -1,13 +1,19 @@
 """Per-query profiler for optimization work (guide §1).
 
-Usage: python tools/profile_query.py [sf_dir] q1 [q2 ...] [--plans DIR]
+Usage: python tools/profile_query.py [sf_dir] q1 [q2 ...] [--plans DIR] [--cprofile]
 
-For each named query, in a bench-identical session (shuffle=4, AQE off,
-warmup at sf0.001, base tables opened): measures build time (best-of-2),
-noop-sink reps (best-of-4, honoring bench.py's REBUILD_EACH_REP set), and
-attributes the best rep's time across Spark jobs/stages via the live UI
-REST API (stage name, wall duration, executorRunTime, shuffle bytes).
-Optionally writes ``df.explain('formatted')`` to ``--plans DIR/<q>.txt``.
+For each named query, in the bench session (``bench.session``): measures
+build time (best-of-2) and the persists its construction makes, noop-sink
+reps (best-of-4 through ``bench.rep``, so a query whose construction
+persists is rebuilt on every rep), and attributes the best rep's time
+across its Spark stages via the session's own UI REST API: stage name,
+executorRunTime, shuffle bytes and the task-duration min/median/max (a
+max/median above ~5-10x on a multi-task stage is the guide §2.5 salting
+bar).
+
+``--plans DIR`` writes the formatted physical plan to ``DIR/<q>.txt``;
+for an A/B, run each checkout's own copy of this tool into its own DIR.
+``--cprofile`` prints a cProfile of one build (top 25 by cumulative time).
 """
 
 from __future__ import annotations
@@ -27,95 +33,94 @@ def rest(ui: str, path: str):
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    args = list(sys.argv[1:])
     plans_dir = None
     if "--plans" in args:
         i = args.index("--plans")
         plans_dir = args[i + 1]
         del args[i : i + 2]
+    do_cprofile = "--cprofile" in args
+    if do_cprofile:
+        args.remove("--cprofile")
     sf_dir = "/root/testdata/sf0.1"
     if args and os.path.isdir(args[0]):
         sf_dir = args.pop(0)
     names = args
 
     import __spark_entry__ as entrymod
-    from bench import REBUILD_EACH_REP as rebuild
-    from obsplus_spark import get_spark
+    from bench import build, rep, session
+    from perfbench.common import FreshPlanGuard
 
-    spark = get_spark(
-        "profile",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            # the profiler needs the UI REST API for stage attribution
-            "spark.ui.enabled": "true",
-        },
-    )
-    ui = "http://localhost:4040"
     qs = entrymod.queries()
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for nm in names:
-        qs[nm](spark, warm_dir).write.mode("overwrite").format("noop").save()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        entrymod._t(spark, sf_dir, t)
+    spark = session(
+        "profile", sf_dir, [qs[nm] for nm in names],
+        # the profiler needs the UI REST API for stage attribution
+        extra_conf={"spark.ui.enabled": "true"},
+    )
+    ui = spark.sparkContext.uiWebUrl
+    app = rest(ui, "applications")[0]["id"]
 
-    app_id = rest(ui, "applications")[0]["id"]
+    def job_ids() -> set:
+        return {j["jobId"] for j in rest(ui, f"applications/{app}/jobs")}
 
     for nm in names:
         fn = qs[nm]
+        if do_cprofile:
+            import cProfile
+            import pstats
+
+            pr = cProfile.Profile()
+            pr.enable()
+            fn(spark, sf_dir)
+            pr.disable()
+            pstats.Stats(pr).sort_stats("cumulative").print_stats(25)
         t0 = time.perf_counter()
         fn(spark, sf_dir)
         b1 = time.perf_counter() - t0
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        build = min(b1, time.perf_counter() - t0)
+        df, persisted = build(fn, spark, sf_dir)
+        build_s = min(b1, time.perf_counter() - t0)
         if plans_dir:
             os.makedirs(plans_dir, exist_ok=True)
             with open(os.path.join(plans_dir, f"{nm}.txt"), "w") as f:
-                f.write(df._sc is None and "" or "")  # noqa - placeholder
                 f.write(df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode
                     .fromString("formatted")))
-        best, best_jobs = float("inf"), (None, None)
+        guard = FreshPlanGuard()
+        best, best_jobs = float("inf"), set()
         for _ in range(4):
-            jobs_before = len(rest(ui, f"applications/{app_id}/jobs"))
-            t0 = time.perf_counter()
-            if nm in rebuild:
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            else:
-                df.write.mode("overwrite").format("noop").save()
-            el = time.perf_counter() - t0
+            before = job_ids()
+            el, _ = rep(fn, spark, sf_dir, df, persisted, guard)
             if el < best:
-                best = el
-                jobs_after = rest(ui, f"applications/{app_id}/jobs")
-                best_jobs = (jobs_before, len(jobs_after))
-        # stage attribution for jobs run during the best rep window is
-        # approximate (job ids are monotonic; we report the LAST rep's
-        # jobs if it was best, else totals are still indicative)
-        jobs = rest(ui, f"applications/{app_id}/jobs")
-        n_new = best_jobs[1] - best_jobs[0] if best_jobs[0] is not None else 0
-        recent = jobs[:n_new] if n_new else []
-        stage_ids = sorted({s for j in recent for s in j["stageIds"]})
-        stages = rest(ui, f"applications/{app_id}/stages?status=complete")
-        by_id = {s["stageId"]: s for s in stages}
-        print(f"== {nm}: build={build:.3f}s best_rep={best:.3f}s "
-              f"jobs_in_rep={n_new} stages={len(stage_ids)}")
+                best, best_jobs = el, job_ids() - before
+        jobs = [
+            j for j in rest(ui, f"applications/{app}/jobs")
+            if j["jobId"] in best_jobs
+        ]
+        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
+        print(f"== {nm}: build={build_s:.3f}s persists={persisted} "
+              f"best_rep={best:.3f}s jobs_in_rep={len(jobs)} "
+              f"stages={len(stage_ids)}")
         rows = []
         for sid in stage_ids:
-            s = by_id.get(sid)
-            if not s:
-                continue
-            dur = s.get("executorRunTime", 0)
-            rows.append((dur, sid, s))
-        for dur, sid, s in sorted(rows, reverse=True)[:14]:
-            nm_s = s["name"].split("\n")[0][:70]
-            print(f"   stage {sid:>5} run={dur/1000:7.3f}s "
-                  f"tasks={s['numCompleteTasks']:>3} "
-                  f"shW={s.get('shuffleWriteBytes',0)>>10:>7}K "
-                  f"shR={s.get('shuffleReadBytes',0)>>10:>7}K  {nm_s}")
+            st = rest(ui, f"applications/{app}/stages/{sid}")[0]
+            if st["status"] != "COMPLETE":
+                continue  # skipped stage: its shuffle output was reused
+            dur = rest(
+                ui,
+                f"applications/{app}/stages/{sid}/{st['attemptId']}/"
+                "taskSummary?quantiles=0.0,0.5,1.0",
+            )["executorRunTime"]
+            rows.append((st["executorRunTime"], sid, st, dur))
+        for run, sid, st, (dmn, dmd, dmx) in sorted(rows, reverse=True)[:14]:
+            ratio = dmx / dmd if dmd > 0 else float("inf")
+            print(f"   stage {sid:>5} run={run / 1000:7.3f}s "
+                  f"tasks={st['numCompleteTasks']:>3} "
+                  f"task min/med/max={dmn / 1e3:5.2f}/{dmd / 1e3:5.2f}/"
+                  f"{dmx / 1e3:5.2f}s (max/med={ratio:4.1f}) "
+                  f"shW={st.get('shuffleWriteBytes', 0) >> 10:>7}K "
+                  f"shR={st.get('shuffleReadBytes', 0) >> 10:>7}K  "
+                  f"{st['name'].split(chr(10))[0][:60]}")
         sys.stdout.flush()
 
 
