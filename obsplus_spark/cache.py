@@ -44,7 +44,11 @@ Invariants (each pinned in ``tests/test_cache.py``):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 #: base-scan cache: (session id, sf_dir, table name) -> persisted frame
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
@@ -75,8 +79,8 @@ def _reprotect_chains(session_id: int) -> None:
         for f in frames:
             try:
                 f.persist()
-            except Exception:
-                pass  # session torn down; nothing to protect
+            except Exception as exc:  # session torn down; nothing to protect
+                _log.debug("chain re-persist failed: %r", exc)
 
 
 def _register_in_ring(
@@ -95,14 +99,14 @@ def _register_in_ring(
         try:
             ring.pop(0).unpersist()
             evicted = True
-        except Exception:
-            pass  # session torn down; nothing to release
+        except Exception as exc:  # session torn down; nothing to release
+            _log.debug("ring eviction unpersist failed: %r", exc)
     if evicted:
         # adoption re-persist (see module docstring invariant #1)
         try:
             arr.persist()
-        except Exception:
-            pass
+        except Exception as exc:
+            _log.debug("adoption re-persist failed: %r", exc)
         # chain protection (invariant #2)
         _reprotect_chains(sid)
 
@@ -140,8 +144,8 @@ def register_private_chain(session, group: str, frames: list) -> None:
     for f in old:
         try:
             f.unpersist()
-        except Exception:
-            pass  # session torn down; nothing to release
+        except Exception as exc:  # session torn down; nothing to release
+            _log.debug("old chain unpersist failed: %r", exc)
     if old:
         # adoption re-persist: a rebuilt chain's persist() calls may
         # have adopted the OLD chain's entries, which the loop above
@@ -149,8 +153,8 @@ def register_private_chain(session, group: str, frames: list) -> None:
         for f in frames:
             try:
                 f.persist()
-            except Exception:
-                pass
+            except Exception as exc:
+                _log.debug("chain adoption re-persist failed: %r", exc)
 
 
 def evict_dead_sessions() -> None:
@@ -163,7 +167,8 @@ def evict_dead_sessions() -> None:
         try:
             if df.sparkSession._jsc.sc().isStopped():
                 dead.append(key)
-        except Exception:
-            dead.append(key)  # JVM gateway gone — certainly dead
+        except Exception as exc:  # JVM gateway gone — certainly dead
+            _log.debug("session liveness check failed: %r", exc)
+            dead.append(key)
     for key in dead:
         _TABLE_CACHE.pop(key, None)

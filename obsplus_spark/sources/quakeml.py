@@ -700,17 +700,9 @@ def update_eventbank_from_files(
     """EventBank ingest from a QuakeML directory end-to-end (reference
     ``bank/eventbank.py:267-327 update_index``): discover (new) files by
     mtime, parse distributed, upsert payload trees + derived index."""
-    from obsplus_spark.sources.summarize import binary_file_scan
+    from obsplus_spark.sources.summarize import ingest_files
 
-    import time as _time
-
-    after = bank.last_updated_ns if incremental else None
-    # watermark captured BEFORE the listing (see
-    # _GenerationTable.overwrite: a file created mid-job must stay newer
-    # than the recorded watermark)
-    scan_ns = _time.time_ns()
-    files = binary_file_scan(spark, path, glob, modified_after_ns=after)
-    bank.put_events(quakeml_to_tree(files), scan_started_ns=scan_ns)
+    ingest_files(spark, bank, path, glob, incremental, quakeml_to_tree)
 
 
 # --- StationXML -----------------------------------------------------------

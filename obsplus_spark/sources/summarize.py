@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import logging
 import os
+import time
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +44,10 @@ def binary_file_scan(
     ``bank/core.py:193-210``): path, length, mtime, content per file.
 
     ``modified_after_ns`` reproduces the mtime-based incremental contract
-    batch-side (the streaming checkpoint covers it stream-side).
+    batch-side (the streaming checkpoint covers it stream-side). The
+    watermark is pushed to the binaryFile source as a bare-column
+    ``modificationTime`` comparison, so files at or before it are never
+    read; the Filter above the scan keeps the result exact.
     """
     df = (
         spark.read.format("binaryFile")
@@ -52,8 +56,11 @@ def binary_file_scan(
         .load(path)
     )
     if modified_after_ns is not None:
+        # modificationTime holds whole microseconds m, so
+        # m * 1000 > W  <=>  m > floor(W / 1000)
         df = df.filter(
-            (F.unix_micros(F.col("modificationTime")) * 1000) > modified_after_ns
+            F.col("modificationTime")
+            > F.timestamp_micros(F.lit(modified_after_ns // 1000))
         )
     return df
 
@@ -134,6 +141,36 @@ def summarize_files(
     return files.select("path", "content").mapInPandas(_batches, SUMMARY_SCHEMA)
 
 
+def ingest_files(
+    spark: SparkSession,
+    bank,
+    path: str,
+    glob: str,
+    incremental: bool,
+    parse: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Shared body of the ``update_*bank_from_files`` entry points:
+    discover (new) files, ``parse`` them distributed, and pass the rows to
+    ``bank.update_index``.
+
+    The parsed frame is persisted for the duration of the update, so every
+    read the bank's upserts make of it (key set, inserted rows, derived
+    index) comes from one scan and one parse of the files; it is
+    unpersisted whether or not the update succeeds.
+    """
+    after = bank.last_updated_ns if incremental else None
+    # stamp BEFORE the listing: a file created while the indexing job
+    # runs is missed by this scan, and must still be newer than the
+    # recorded watermark so the NEXT incremental run picks it up
+    scan_ns = time.time_ns()
+    parsed = parse(binary_file_scan(spark, path, glob, modified_after_ns=after))
+    parsed.persist()
+    try:
+        bank.update_index(parsed, scan_started_ns=scan_ns)
+    finally:
+        parsed.unpersist()
+
+
 def update_wavebank_from_files(
     spark: SparkSession,
     bank,
@@ -143,12 +180,4 @@ def update_wavebank_from_files(
 ) -> None:
     """WaveBank.update_index end-to-end (``wavebank.py:247-276``): discover
     (new) files, summarize distributed, upsert into the bank index."""
-    import time as _time
-
-    after = bank.last_updated_ns if incremental else None
-    # stamp BEFORE the listing: a file created while the indexing job
-    # runs is missed by this scan, and must still be newer than the
-    # recorded watermark so the NEXT incremental run picks it up
-    scan_ns = _time.time_ns()
-    files = binary_file_scan(spark, path, glob, modified_after_ns=after)
-    bank.update_index(summarize_files(files), scan_started_ns=scan_ns)
+    ingest_files(spark, bank, path, glob, incremental, summarize_files)

@@ -175,6 +175,70 @@ def test_eventbank_quakeml_ingest(spark, tmp_path):
     assert rows[0].picks[0]["station"] == "CAPS"
 
 
+def _qml(events):
+    body = "".join(
+        f'<event publicID="{eid}"><origin publicID="{eid}/o">'
+        f"<time><value>{t}</value></time>"
+        "<latitude><value>40.5</value></latitude>"
+        "<longitude><value>-111.25</value></longitude></origin>"
+        f'<magnitude publicID="{eid}/m"><mag><value>{mag}</value></mag></magnitude>'
+        "</event>"
+        for eid, t, mag in events
+    )
+    return f"<quakeml><eventParameters>{body}</eventParameters></quakeml>"
+
+
+def test_eventbank_quakeml_incremental_ingest(spark, tmp_path):
+    import time
+
+    from obsplus_spark.sources.bank import EventBank
+    from obsplus_spark.sources.quakeml import update_eventbank_from_files
+
+    d = tmp_path / "qml"
+    d.mkdir()
+    (d / "cat1.xml").write_text(QML)
+    bank = EventBank(spark, tmp_path / "bank")
+    update_eventbank_from_files(spark, bank, str(d))
+
+    # a second file lands: one new event, one re-issued event_id whose
+    # magnitude changed; cat1.xml is not re-read
+    time.sleep(0.05)
+    (d / "cat2.xml").write_text(
+        _qml([
+            ("smi:local/ev1", "2024-01-02T03:00:00.1234Z", 3.1),
+            ("smi:local/ev3", "2024-01-03T00:00:00Z", 1.7),
+        ])
+    )
+    update_eventbank_from_files(spark, bank, str(d))
+
+    def tables():
+        idx = sorted(
+            (r.event_id, r.magnitude)
+            for r in bank.read_index(use_cache=False).collect()
+        )
+        payload = sorted(
+            (r.event_id, tuple(m["mag"] for m in r.magnitudes))
+            for r in bank.get_events(use_cache=False).collect()
+        )
+        return idx, payload
+
+    idx, payload = tables()
+    assert idx == [
+        ("smi:local/ev1", 3.1),
+        ("smi:local/ev2", None),
+        ("smi:local/ev3", 1.7),
+    ]
+    assert payload == [
+        ("smi:local/ev1", (3.1,)),
+        ("smi:local/ev2", ()),
+        ("smi:local/ev3", (1.7,)),
+    ]
+
+    # nothing new: a third incremental run leaves both tables unchanged
+    update_eventbank_from_files(spark, bank, str(d))
+    assert tables() == (idx, payload)
+
+
 RICH_QML = """<?xml version="1.0"?>
 <q:quakeml xmlns:q="http://quakeml.org/xmlns/quakeml/1.2"
            xmlns="http://quakeml.org/xmlns/bed/1.2">

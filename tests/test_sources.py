@@ -54,6 +54,64 @@ def test_summarize_and_update_index(spark, tmp_path):
     assert bank.read_index().count() == 4
 
 
+def test_binary_file_scan_pushes_watermark_exactly(spark, tmp_path):
+    import os
+
+    d = tmp_path / "mtimes"
+    w = 1_700_000_000_000 * 1_000_000  # ms-aligned watermark, epoch ns
+    for name, mtime in (("before", w - 1_000_000), ("at", w), ("after", w + 1_000_000)):
+        _write(d / f"{name}.seed", name)
+        os.utime(d / f"{name}.seed", ns=(mtime, mtime))
+
+    def names(df):
+        return sorted(r.path.rsplit("/", 1)[-1] for r in df.select("path").collect())
+
+    # the second watermark carries a sub-ms fraction
+    for after, want in ((w, ["after.seed"]), (w - 500_123, ["after.seed", "at.seed"])):
+        got = binary_file_scan(spark, str(d), glob="*.seed", modified_after_ns=after)
+        old = binary_file_scan(spark, str(d), glob="*.seed").filter(
+            (F.unix_micros(F.col("modificationTime")) * 1000) > after
+        )
+        assert names(got) == names(old) == want
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "GreaterThan(modificationTime" in plan
+
+
+def test_ingest_leaves_no_cache_behind(spark, tmp_path):
+    from obsplus_spark.sources.bank import EventBank
+    from obsplus_spark.sources.quakeml import update_eventbank_from_files
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    wave, qml = tmp_path / "wave", tmp_path / "qml"
+    _write(wave / "a.seed", f"UU|STA1||HHZ|{10*NS}|100|{10_000_000}\n")
+    _write(
+        qml / "cat.xml",
+        '<quakeml><eventParameters><event publicID="smi:local/e1">'
+        "<origin><time><value>2024-01-02T03:00:00Z</value></time></origin>"
+        "</event></eventParameters></quakeml>",
+    )
+
+    before = persisted()
+    update_wavebank_from_files(spark, WaveBank(spark, tmp_path / "wb"), str(wave))
+    update_eventbank_from_files(spark, EventBank(spark, tmp_path / "eb"), str(qml))
+    assert persisted() == before
+
+    def boom(rows, scan_started_ns=None):
+        rows.count()  # materialize the persisted parse before failing
+        raise RuntimeError("boom")
+
+    for bank, run, src in (
+        (WaveBank(spark, tmp_path / "wb_err"), update_wavebank_from_files, wave),
+        (EventBank(spark, tmp_path / "eb_err"), update_eventbank_from_files, qml),
+    ):
+        bank.update_index = boom
+        with pytest.raises(RuntimeError, match="boom"):
+            run(spark, bank, str(src))
+        assert persisted() == before
+
+
 def test_read_csv_permissive(spark, tmp_path):
     p = tmp_path / "events.csv"
     p.write_text("event_id,magnitude\ne1,2.5\ne2,not_a_number\ne3,4.0\n")
