@@ -32,8 +32,9 @@ Invariants (each pinned in ``tests/test_cache.py``):
   ``.persist()`` adopted the old build's entry ("already cached") — so
   any eviction here may have removed an entry a CURRENT frame relies
   on. Every eviction path therefore re-persists the registrant (rings)
-  or the replacement chain, restoring a fresh entry; a no-op when the
-  plans are distinct.
+  or the replacement chain, restoring a fresh entry. The re-persist is
+  skipped when the frame's plan is still cached (distinct plans): it would
+  be a no-op that only logs "Asked to cache already cached data".
 - **Chain protection**: no frame referenced by a registered private
   chain may end up uncached through ring eviction — ring evictions
   re-persist the session's chain frames (the same canonical-plan
@@ -46,6 +47,7 @@ from __future__ import annotations
 
 import logging
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
@@ -66,19 +68,26 @@ _FRONTIER_CACHES: dict[int, list] = {}
 _PRIVATE_CHAINS: dict[tuple, list] = {}
 
 
+def _persist_if_uncached(df: DataFrame) -> None:
+    """``persist()`` only when no CacheManager entry serves ``df``'s plan:
+    on a still-cached plan it changes nothing and logs a warning."""
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist()
+
+
 def _reprotect_chains(session_id: int) -> None:
     """Re-persist every private-chain frame of ``session_id`` after a
     ring eviction: the evicted ring entry may have been the SHARED
     canonical-plan cache entry a chain frame relies on (chain frames
     and ring frames are registered by different operators but can build
     plan-identical intermediates, e.g. the same deduplicated edge
-    frame). persist() on a still-cached frame is a no-op."""
+    frame). Frames whose plan is still cached are left alone."""
     for (sid, _group), frames in _PRIVATE_CHAINS.items():
         if sid != session_id:
             continue
         for f in frames:
             try:
-                f.persist()
+                _persist_if_uncached(f)
             except Exception as exc:  # session torn down; nothing to protect
                 _log.debug("chain re-persist failed: %r", exc)
 
@@ -104,7 +113,7 @@ def _register_in_ring(
     if evicted:
         # adoption re-persist (see module docstring invariant #1)
         try:
-            arr.persist()
+            _persist_if_uncached(arr)
         except Exception as exc:
             _log.debug("adoption re-persist failed: %r", exc)
         # chain protection (invariant #2)
@@ -152,7 +161,7 @@ def register_private_chain(session, group: str, frames: list) -> None:
         # just removed — re-persist so the new chain executes cached
         for f in frames:
             try:
-                f.persist()
+                _persist_if_uncached(f)
             except Exception as exc:
                 _log.debug("chain adoption re-persist failed: %r", exc)
 

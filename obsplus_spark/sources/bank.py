@@ -15,6 +15,14 @@ delete-then-insert per event_id, ``eventbank.py:351-366``,
 ``utils/bank.py:434-437``); the generation swap is the jar-free equivalent
 with the same semantics.
 
+Generations are immutable: ``overwrite`` always writes a new ``gen=N+1``
+directory before it flips the pointer, and nothing rewrites a directory the
+pointer has named. So a reader resolves each generation's parquet relation
+(its file listing and inferred schema) once, keyed on the pointer's
+``(generation, last_updated_ns)``, and re-reads only the pointer on every
+query — writes from other bank instances on the same path are still seen,
+while repeated queries skip the listing and the schema-inference job.
+
 Partition layout: Hive-style ``part_year=YYYY`` from the row's time column —
 the distributed analogue of the reference's templated ``{year}/{month}/...``
 directory scheme (``constants.py:576-588``), giving partition pruning on
@@ -44,6 +52,8 @@ class _GenerationTable:
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
         self._meta = self.root / "_bank_meta.json"
+        #: ((generation, last_updated_ns), relation) of the last read
+        self._resolved: tuple[tuple, DataFrame] | None = None
 
     # -- metadata ------------------------------------------------------------
     def _read_meta(self) -> dict:
@@ -69,10 +79,24 @@ class _GenerationTable:
 
     # -- IO --------------------------------------------------------------
     def read(self) -> DataFrame:
+        """The current generation's parquet relation.
+
+        The meta pointer is re-read on every call, so a write by another
+        instance on the same path is seen by the next read. The relation
+        (file listing + inferred schema, one Spark job) is resolved once
+        per ``(generation, last_updated_ns)`` and returned until the
+        pointer moves: a generation directory never changes once the
+        pointer names it. The stamp in the key catches a bank rebuilt to
+        the same generation number after its root was wiped.
+        """
         meta = self._read_meta()
         if meta["generation"] < 0:
             raise FileNotFoundError(f"bank at {self.root} has no data yet")
-        return self.spark.read.parquet(str(self._gen_dir(meta["generation"])))
+        key = (meta["generation"], meta["last_updated_ns"])
+        if self._resolved is None or self._resolved[0] != key:
+            gen_dir = self._gen_dir(meta["generation"])
+            self._resolved = (key, self.spark.read.parquet(str(gen_dir)))
+        return self._resolved[1]
 
     def overwrite(
         self,

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def sorted_group_apply(
@@ -122,7 +125,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         max_pb = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
         )
-    except Exception:  # stats unavailable (exotic plan) → leave the plan alone
+    except Exception as exc:  # stats unavailable (exotic plan) → leave the plan alone
+        _log.debug("ensure_parallelism: no size estimate, plan unchanged: %r", exc)
         return df
     natural = max(1, -(-size // max_pb))
     if natural >= target:
@@ -144,8 +148,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         )
         if actual >= target:
             return df
-    except Exception:
-        pass  # partitioning unreadable (e.g. AQE placeholder) → fan out
+    except Exception as exc:  # partitioning unreadable (e.g. AQE placeholder) → fan out
+        _log.debug("ensure_parallelism: partition count unreadable: %r", exc)
     return df.repartition(target)
 
 

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import shutil
+import time
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -264,3 +268,135 @@ def test_generation_retention_snapshot_isolation(spark, tmp_path, event_rows):
     bank.put_events(event_rows.limit(1))  # gen 3: gen 0 now GCs
     gens = {d.name for d in (tmp_path / "event_index").glob("gen=*")}
     assert gens == {"gen=1", "gen=2", "gen=3"}
+
+
+def _jobs_fired(spark, fn):
+    """(result of ``fn()``, ids of the Spark jobs it fired). A sentinel job
+    in a second group is awaited afterwards: the status tracker is fed by
+    the ordered listener bus, so once the sentinel shows up every job
+    ``fn`` started has been recorded."""
+    sc = spark.sparkContext
+    group, sentinel = f"probe-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
+    sc.setJobGroup(group, "plan construction probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(sentinel, "listener barrier")
+        spark.range(1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "listener bus never caught up"
+        time.sleep(0.05)
+    return out, list(tracker.getJobIdsForGroup(group))
+
+
+def test_generation_relation_resolved_once(spark, tmp_path, event_rows):
+    """A second read in one generation fires no job (no re-listing, no
+    schema inference) and returns the same relation."""
+    bank = EventBank(spark, tmp_path)
+    bank.put_events(event_rows)
+    first, jobs = _jobs_fired(spark, bank.table.read)
+    assert jobs, "the first read of a generation resolves its schema"
+    second, jobs = _jobs_fired(spark, bank.table.read)
+    assert jobs == []
+    assert second is first
+
+
+@pytest.mark.parametrize("writer", ["same", "other"])
+def test_generation_relation_sees_writes(
+    spark, tmp_path, event_rows, wave_index, writer
+):
+    """A write moves the pointer, so the reader's next uncached index read
+    sees the new rows: the bank's own put_events/update_index ("same"), or
+    a second instance on the same path ("other")."""
+    def pick(bank, cls, path):
+        return bank if writer == "same" else cls(spark, path)
+
+    ebank = EventBank(spark, tmp_path / "ev")
+    ebank.put_events(event_rows)
+    assert ebank.read_index(use_cache=False).count() == 3
+    pick(ebank, EventBank, tmp_path / "ev").put_events(
+        spark.createDataFrame(
+            [("e9", Y2020 + 500 * NS, 44.0, -115.0, 9.0, 5.5)], event_rows.schema
+        )
+    )
+    got = {r.event_id for r in ebank.read_index(use_cache=False).collect()}
+    assert got == {"e1", "e2", "e3", "e9"}
+
+    wbank = WaveBank(spark, tmp_path / "wb")
+    wbank.update_index(wave_index)
+    assert wbank.read_index(use_cache=False).count() == 3
+    pick(wbank, WaveBank, tmp_path / "wb").update_index(
+        spark.createDataFrame(
+            [("XX", "N", "", "ZZZ", Y2020 + 5 * NS, Y2020 + 6 * NS, 10_000_000, "f4")],
+            wave_index.schema,
+        )
+    )
+    got = {r.path for r in wbank.read_index(use_cache=False).collect()}
+    assert got == {"f1", "f2", "f3", "f4"}
+
+
+def test_generation_relation_not_stale_after_rebuild(spark, tmp_path, event_rows):
+    """Wiping the bank root and rebuilding it to the SAME generation
+    number (different rows, different scan stamp) must not serve the
+    relation resolved for the wiped directory."""
+    bank = EventBank(spark, tmp_path / "ev")
+    bank.put_events(event_rows, scan_started_ns=1_000)
+    assert bank.read_index(use_cache=False).count() == 3
+    shutil.rmtree(tmp_path / "ev")
+    rebuilt = spark.createDataFrame(
+        [("r1", Y2020 + 7 * NS, 10.0, 20.0, 1.0, 1.5)], event_rows.schema
+    )
+    EventBank(spark, tmp_path / "ev").put_events(rebuilt, scan_started_ns=2_000)
+    assert bank.table._read_meta()["generation"] == 0
+    got = [r.event_id for r in bank.read_index(use_cache=False).collect()]
+    assert got == ["r1"]
+
+
+def test_bank_query_plans_build_without_jobs(spark, tmp_path, event_rows, wave_index):
+    """After one warm read per table, building every bank query kind
+    (event windows, a dateline box, a limit; wave index, gaps,
+    availability, a literal bulk list; a Fetcher join) is plan
+    construction only: zero Spark jobs."""
+    from obsplus_spark import Fetcher
+
+    ebank = EventBank(spark, tmp_path / "ev")
+    ebank.put_events(event_rows)
+    wbank = WaveBank(spark, tmp_path / "wb")
+    wbank.update_index(wave_index)
+    ebank.table.read()
+    wbank.table.read()
+    stations = spark.createDataFrame(
+        [("UU", "A", "", "HHZ", 0, None), ("WY", "B", "", "BHN", 0, None)],
+        "network string, station string, location string, channel string, "
+        "start_date long, end_date long",
+    )
+    t1, t2 = Y2020, Y2020 + 1000 * NS
+    builds = {
+        "ev_time": lambda: ebank.read_index(starttime=t1, endtime=t2),
+        "ev_box": lambda: ebank.read_index(
+            starttime=t1, endtime=t2, minlatitude=30.0, maxlatitude=50.0,
+            minlongitude=150.0, maxlongitude=-150.0,
+        ),
+        "ev_limit": lambda: ebank.read_index(minmagnitude=2.0, limit=2),
+        "wb_index": lambda: wbank.read_index(
+            network="U?", channel="HH*", starttime=t1, endtime=t2
+        ),
+        "wb_gaps": lambda: wbank.get_gaps(network="UU", starttime=t1, endtime=t2),
+        "wb_avail": lambda: wbank.availability(starttime=t1, endtime=t2),
+        "wb_bulk": lambda: wbank.get_waveforms_bulk(
+            [("UU", "A", "", "HH?", t1, t1 + 50 * NS), ("WY", "*", "*", "*Z", t1, t2)]
+        ),
+        "fetch": lambda: Fetcher(
+            ebank.read_index(starttime=t1, endtime=t2, minmagnitude=2.0),
+            stations,
+            wbank.read_index(network="UU", starttime=t1 - NS, endtime=t2 + NS),
+        ).yield_event_waveforms(60 * NS, 300 * NS),
+    }
+    for kind, build in builds.items():
+        df, jobs = _jobs_fired(spark, build)
+        assert jobs == [], f"{kind} fired {len(jobs)} job(s) while building"
+        df.collect()  # the plan still executes

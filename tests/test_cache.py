@@ -64,6 +64,35 @@ def test_ring_eviction_repersists_adopted_entry(spark):
         f.unpersist()
 
 
+def test_ring_eviction_skips_repersist_of_cached_plan(spark, monkeypatch):
+    """An eviction between DISTINCT plans leaves the surviving frames
+    cached and calls no persist() on the still-cached registrant (it
+    would only log "Asked to cache already cached data")."""
+    from obsplus_spark import cache
+
+    old, mid, new = (_fresh_frame(spark, 9150 + i) for i in range(3))
+    for f in (old, mid, new):
+        f.count()
+    cache.register_shingle_cache(old)
+    cache.register_shingle_cache(mid)
+    persisted = []
+    real_persist = type(new).persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(id(self))
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(new), "persist", spy)
+    cache.register_shingle_cache(new)  # evicts `old`
+    monkeypatch.undo()
+    assert cache._SHINGLE_CACHES[id(spark)][-2:] == [mid, new]
+    assert not old.storageLevel.useMemory
+    assert mid.storageLevel.useMemory and new.storageLevel.useMemory
+    assert id(new) not in persisted and id(mid) not in persisted
+    for f in (old, mid, new):
+        f.unpersist()
+
+
 def test_ring_eviction_cannot_uncache_private_chain(spark):
     """Chain protection: a private-chain frame plan-identical to an
     evicted ring frame must remain cached after the eviction."""
