@@ -9745,9 +9745,9 @@ def q_span_store_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring spans driven by a PRECOMPUTED gram-frequency
     store — operators/dedup.py exact_substring_spans(freqs=):
     the gram-keyed count window is replaced by one gram-keyed left
-    join against gram_frequencies output (the table the streaming
-    store maintains), skipping the second corpus pass. Same store =
-    same spans, so the oracle is exact_spans' twin verbatim."""
+    join against gram_frequencies output, skipping the second
+    corpus pass. Same store = same spans, so the oracle is
+    exact_spans' twin verbatim."""
     from obsplus_spark.operators.dedup import (
         exact_substring_spans,
         gram_frequencies,
@@ -10365,8 +10365,7 @@ def q_gram_freq_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     times corpus-wide) — operators/dedup.py gram_frequencies rolled up
     to a hash-invariant shape (gram ids are xxhash64 on the engine and
     strings in the oracle; occurrence counts agree modulo the accepted
-    2^-64 digest argument). The batch ground truth the streaming
-    gram-frequency store maintains incrementally."""
+    2^-64 digest argument)."""
     from obsplus_spark.operators.dedup import gram_frequencies
     from obsplus_spark.util import sql_over
 

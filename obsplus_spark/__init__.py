@@ -14,7 +14,6 @@ Layout
 - ``operators``    relational programs: availability, gaps-and-islands,
                    interval/as-of joins, geo search, dedup, similarity, text
 - ``sources``      bank facades over partitioned parquet (file-backed tables)
-- ``streaming``    structured-streaming equivalents (incremental index, windows)
 """
 
 from obsplus_spark.session import get_spark

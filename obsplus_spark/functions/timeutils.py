@@ -8,8 +8,6 @@ truth in this engine; timestamps are derived for display/windowing only
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -27,26 +25,6 @@ def ns_to_ts(col: Column | str) -> Column:
     """int64 ns → TimestampType (truncates to µs — display only)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.timestamp_micros((c / F.lit(1000)).cast("long"))
-
-
-def to_ns(value) -> int:
-    """Python-side polymorphic time → int ns (reference utils/time.py
-    ``to_datetime64`` semantics for the API boundary)."""
-    if value is None:
-        return None
-    if isinstance(value, (int,)):
-        return value
-    if isinstance(value, float):  # epoch seconds
-        return int(value * NS_PER_SEC)
-    if isinstance(value, str):
-        dt = datetime.fromisoformat(value)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * NS_PER_SEC)
-    if isinstance(value, datetime):
-        dt = value if value.tzinfo else value.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * NS_PER_SEC)
-    raise TypeError(f"cannot convert {type(value)} to ns")
 
 
 def floor_day_ns(col: Column | str) -> Column:

@@ -63,8 +63,7 @@ def auc_from_counts(cells: DataFrame) -> DataFrame:
     statistics cells (count and positive count per distinct score) —
     the counts are trivially MERGEABLE, so any number of per-batch /
     per-partition cell tables sum into one exact whole-corpus AUC
-    (the consumer of a :func:`score_auc` split run or a
-    ``stream_auc_cells`` maintained store). Same rank identity and
+    (the consumer of a :func:`score_auc` split run). Same rank identity and
     bit-identical-double argument as :func:`score_auc`.
 
     Output: single row ``(auc, n_pos, n_neg)``.
@@ -163,65 +162,6 @@ def ks_statistic(
                  -- guard can short-circuit (ANSI divide-by-zero)
                  round(max(abs(cca / CAST(nullif(na, 0) AS DOUBLE)
                                - ccb / CAST(nullif(nb, 0) AS DOUBLE))), 9)
-               END AS ks,
-               CAST(coalesce(max(na), 0) AS BIGINT) AS n_a,
-               CAST(coalesce(max(nb), 0) AS BIGINT) AS n_b
-        FROM c
-        """,
-    )
-
-
-def ks_from_counts(
-    counts_a: DataFrame,
-    counts_b: DataFrame,
-    value_col: str = "v",
-    count_col: str = "n",
-) -> DataFrame:
-    """Two-sample KS from PRE-AGGREGATED value histograms — the
-    count-weighted twin of :func:`ks_statistic` for inputs that are
-    already ``(value, count)`` tables (a maintained streaming
-    histogram, a stored reference distribution): full-outer align the
-    two histograms on value, cumulate both counts over the distinct
-    values, take the max ECDF gap.
-
-    Everything after the inputs is distinct-value-sized; histograms
-    should be quantized upstream (that IS the histogram contract), so
-    the cumulative pass is bounded by bucket cardinality at any
-    corpus size. Same bit-identical integer-cumsum argument as
-    :func:`ks_statistic`.
-
-    Output: single row ``(ks, n_a, n_b)`` — NULL ks when either
-    histogram is empty.
-    """
-    from obsplus_spark.util import sql_over
-
-    return sql_over(
-        {"a": counts_a, "b": counts_b},
-        f"""
-        WITH g AS (
-          SELECT coalesce(a.{value_col}, b.{value_col}) AS v,
-                 CAST(coalesce(a.{count_col}, 0) AS BIGINT) AS ca,
-                 CAST(coalesce(b.{count_col}, 0) AS BIGINT) AS cb
-          FROM {{a}} a FULL OUTER JOIN {{b}} b
-            ON a.{value_col} = b.{value_col}
-          WHERE coalesce(a.{value_col}, b.{value_col}) IS NOT NULL
-        ),
-        c AS (
-          SELECT
-            sum(ca) OVER (ORDER BY v
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS cca,
-            sum(cb) OVER (ORDER BY v
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS ccb,
-            sum(ca) OVER () AS na,
-            sum(cb) OVER () AS nb
-          FROM g
-        )
-        SELECT CASE WHEN max(na) > 0 AND max(nb) > 0 THEN
-                 round(max(abs(cca / CAST(nullif(na, 0) AS DOUBLE)
-                               - ccb / CAST(nullif(nb, 0) AS DOUBLE))),
-                       9)
                END AS ks,
                CAST(coalesce(max(na), 0) AS BIGINT) AS n_a,
                CAST(coalesce(max(nb), 0) AS BIGINT) AS n_b

@@ -688,16 +688,6 @@ def _reference_time(tree: DataFrame) -> Column:
     return F.coalesce(ot, fp)
 
 
-def _seed_id(prefix: str = "x") -> Column:
-    return F.concat_ws(
-        ".",
-        F.col(f"{prefix}.network"),
-        F.col(f"{prefix}.station"),
-        F.col(f"{prefix}.location"),
-        F.col(f"{prefix}.channel"),
-    )
-
-
 def _explode_entity(
     tree: DataFrame,
     array_col: str,
@@ -881,39 +871,6 @@ def magnitudes_to_df(tree: DataFrame) -> DataFrame:
             "upper_uncertainty", "confidence_level",
         ],
         alias="m",
-    )
-
-
-def origins_to_df(tree: DataFrame) -> DataFrame:
-    avail = _elem_fields(tree, "origins")
-    base = tree.select("event_id", F.explode_outer("origins").alias("o"))
-    x = F.col("o")
-
-    def g(name, dtype):
-        return (x[name] if name in avail else F.lit(None).cast(dtype)).alias(name)
-
-    q = (
-        x["quality"]
-        if "quality" in avail
-        else F.lit(None).cast(ORIGIN_QUALITY_STRUCT)
-    )
-    return base.select(
-        "event_id",
-        g("resource_id", S),
-        g("time", L),
-        g("latitude", D),
-        g("longitude", D),
-        g("depth", D),
-        q["used_phase_count"].alias("used_phase_count"),
-        q["standard_error"].alias("standard_error"),
-        q["azimuthal_gap"].alias("azimuthal_gap"),
-        g("horizontal_uncertainty", D),
-        g("vertical_uncertainty", D),
-        (
-            F.size(F.coalesce(x["arrivals"], F.expr("array()")))
-            if "arrivals" in avail
-            else F.lit(0)
-        ).cast("long").alias("arrival_count"),
     )
 
 

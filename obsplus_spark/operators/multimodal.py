@@ -18,11 +18,13 @@ call on a full cluster.
 from __future__ import annotations
 
 import hashlib
+import logging
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+_log = logging.getLogger(__name__)
 
 #: metadata struct carried beside every media payload
 MEDIA_META_SCHEMA = T.StructType(
@@ -137,84 +139,6 @@ def extract_features(
     return ensure_parallelism(media).mapInPandas(_batches, FEATURE_SCHEMA)
 
 
-def media_dedup_exact(media: DataFrame) -> DataFrame:
-    """Exact media dedup on the payload hash — one groupBy, JVM-side sha2."""
-    return (
-        media.select(
-            F.sha2(F.col("payload"), 256).alias("payload_sha"),
-            F.col("media_id"),
-        )
-        .groupBy("payload_sha")
-        .agg(F.min("media_id").alias("canonical_id"), F.count(F.lit(1)).alias("n_dups"))
-    )
-
-
-def resize_images(
-    media: DataFrame, out_w: int, out_h: int
-) -> DataFrame:
-    """Real distributed image resize for decodable formats (ppm/pgm/bmp):
-    decode → nearest-neighbor index-map resize → re-encode netpbm. Rows
-    whose payload can't be decoded (compressed formats, corrupt bytes)
-    are dropped — the PERMISSIVE convention."""
-    import pandas as pd
-
-    from obsplus_spark.operators.codecs import (
-        decode_bmp,
-        decode_ppm,
-        encode_ppm,
-        resize_nearest,
-    )
-    from obsplus_spark.util import ensure_parallelism
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                arr = None
-                for dec in (decode_ppm, decode_bmp):
-                    try:
-                        arr = dec(bytes(p))
-                        break
-                    except Exception:
-                        continue
-                if arr is None:
-                    continue
-                ids.append(mid)
-                payloads.append(encode_ppm(resize_nearest(arr, out_h, out_w)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series([out_w] * len(ids), dtype="int32"),
-                    "height": pd.Series([out_h] * len(ids), dtype="int32"),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
-
-    return ensure_parallelism(media).mapInPandas(
-        _batches, "media_id long, width int, height int, payload binary"
-    )
-
-
-def frame_sample_plan(
-    media: DataFrame,
-    every_ms: int = 1000,
-) -> DataFrame:
-    """Video frame-sampling *plan*: explode sample timestamps per video.
-
-    The decode of each frame is the stubbed codec; the plan — one row per
-    (media_id, frame_ts_ms), distributed by media — is the real scale
-    artifact (a 100 TB video corpus explodes to frames here, then
-    ``extract_features`` runs per frame batch).
-    """
-    dur = F.coalesce(F.col("meta.duration_ms"), F.lit(0))
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(dur - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-
-
 def sample_video_frames(
     media: DataFrame,
     every_n: int = 3,
@@ -242,8 +166,9 @@ def sample_video_frames(
                 try:
                     mid_i = int(mid)
                     frames = decode_ppmv(bytes(p), every_n)
-                except Exception:
-                    continue  # PERMISSIVE: bad id or payload drops the row
+                except Exception as exc:  # PERMISSIVE: the row drops
+                    _log.warning("skipping undecodable media %r: %r", mid, exc)
+                    continue
                 for idx, arr in frames:
                     rows.append(
                         (

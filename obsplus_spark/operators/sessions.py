@@ -1,9 +1,8 @@
 """Event-stream analytics: sessionization and funnel progression.
 
-The batch twins of the streaming session-window machinery
-(``streaming/incremental.py``): gap-based sessions and ordered-stage
-funnels over an (entity, timestamp) event log — the engagement /
-conversion shapes an events table answers at warehouse scale.
+Gap-based sessions and ordered-stage funnels over an (entity,
+timestamp) event log — the engagement / conversion shapes an events
+table answers at warehouse scale.
 """
 
 from __future__ import annotations

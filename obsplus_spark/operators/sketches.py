@@ -316,24 +316,6 @@ def cms_estimates(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Union count-min sketches cell-wise — the mergeability property
-    that makes the sketch the right frequency structure at 100 TB:
-    build one sketch per ingest bucket (day, partition, stream batch),
-    store ≤ depth×width rows each, and merge on demand without
-    re-scanning raw data. Estimates from a merged sketch are identical
-    to a sketch built over the concatenated streams (cell sums are
-    associative)."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    acc = sketches[0]
-    for s in sketches[1:]:
-        acc = acc.unionByName(s)
-    return acc.groupBy("row", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-
-
 def cms_join_size(a: DataFrame, b: DataFrame) -> DataFrame:
     """Join-cardinality estimate from two count-min sketches via the
     inner-product bound (Cormode & Muthukrishnan 2005, §4.2):
@@ -345,7 +327,7 @@ def cms_join_size(a: DataFrame, b: DataFrame) -> DataFrame:
 
     This is the optimizer-side use of the sketch: estimate a join's
     output size from two ≤ depth×width summaries — built once per
-    table/partition and mergeable (:func:`cms_merge`) — without
+    table/partition and mergeable (cells sum) — without
     touching either table at estimation time. Both sketches must share
     ``depth``/``width`` AND key dtype/rendering (the cell hash is over
     the stringified key, so ``1`` as BIGINT and ``'1'`` as STRING

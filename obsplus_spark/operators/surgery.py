@@ -502,13 +502,3 @@ def attach_new_origin(
             F.coalesce(F.col("_new_oid"), F.col("preferred_origin_id")),
         )
     return with_origin.drop("_new_origin", "_new_oid")
-
-
-def duplicate_resource_ids(df: DataFrame, id_col: str = "resource_id") -> DataFrame:
-    """Resource-id uniqueness check (utils/events.py:36-71 duplicate_events
-    guard): ids appearing more than once."""
-    return (
-        df.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )

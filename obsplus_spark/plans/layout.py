@@ -1,4 +1,5 @@
-"""Physical-layout planning: z-order clustering for multi-column pruning.
+"""Physical-layout planning: the z-order key, small-file compaction
+bins and join-key skew.
 
 At 100 TB the scan cost of a query is set by how many files its
 predicates can skip via parquet min/max footer stats. Range-partitioning
@@ -6,13 +7,14 @@ on one column prunes that column only; **z-ordering** interleaves the
 bits of several columns' ranks so files stay tight in every dimension at
 once — the standard layout trick for multi-predicate workloads (used by
 several lakehouse engines; the bit-interleave curve is the classic
-Z-curve / Morton order).
+Z-curve / Morton order). :func:`zorder_key` computes that key; a writer
+range-partitions and sorts on it.
 
 All math is JVM expressions: per-column bin edges come from one
-``percentile_approx`` aggregate (tiny, broadcast), each row's bin ids
-interleave with shift/or folds, and the write is
-``repartitionByRange(zkey)`` + ``sortWithinPartitions(zkey)`` so both
-file assignment AND within-file row order follow the curve.
+``percentile_approx`` aggregate (tiny, broadcast) and each row's bin ids
+interleave with shift/or folds. :func:`compaction_plan` bins small files
+for an OPTIMIZE-style rewrite; :func:`key_skew_report` names the heavy
+keys of a join or aggregation.
 """
 
 from __future__ import annotations
@@ -112,106 +114,6 @@ def zorder_key(
         raise ValueError(f"unknown binning {binning!r}")
     scaled = binned.withColumn("_zkey", _interleave(bin_cols, bits))
     return scaled.drop(*drops, *bin_cols)
-
-
-def zorder_repartition(
-    df: DataFrame,
-    cols: list[str],
-    num_files: int,
-    bits: int = ZBITS,
-    binning: str = "uniform",
-) -> DataFrame:
-    """Cluster rows along the Z-curve: range-partition on the interleaved
-    key (one file per range) and sort within partitions so row groups
-    inside each file are tight too."""
-    return (
-        zorder_key(df, cols, bits, binning)
-        .repartitionByRange(num_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-    )
-
-
-def write_zordered(
-    df: DataFrame, path: str, cols: list[str], num_files: int = 16
-) -> None:
-    """Write a z-ordered parquet copy (drops the helper key)."""
-    zorder_repartition(df, cols, num_files).drop("_zkey").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def clustering_stats(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Per-partition min/max spans of ``cols`` — the measurable proxy for
-    footer-stat prunability (smaller normalized spans ⇒ more skipped
-    files for point/range predicates)."""
-    pid = F.spark_partition_id().alias("_pid")
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.min(c).alias(f"{c}_min"),
-            F.max(c).alias(f"{c}_max"),
-        ]
-    return df.select(pid, *cols).groupBy("_pid").agg(*aggs)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: "list[str] | None" = None,
-    path: "str | None" = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a hash-BUCKETED table — the co-located-join
-    layout: each row lands in ``hash(bucket_cols) % n_buckets``, and the
-    bucket spec is recorded in the catalog, so a later equi-join or
-    aggregate on the bucket keys between two tables bucketed the same
-    way runs with ZERO shuffle exchanges (Spark trusts the on-disk
-    partitioning as its required ClusteredDistribution).
-
-    This is the batch answer to the flagship bank joins at 100 TB: a
-    waveform/event index bucketed on its join key joins new batches
-    exchange-free forever after, instead of re-shuffling 100 TB per
-    query. ``sort_cols`` additionally orders rows inside each bucket
-    file (``sortBy``) — Spark still keeps a Sort node under the
-    sort-merge join (it does not trust per-file order), but sorting
-    already-ordered runs is the cheap path of the sorter, and the
-    ordering gives parquet tight footer min/max spans on the sort key
-    (the same prunability effect :func:`zorder_repartition` buys for
-    multi-column predicates, but exact for one column).
-
-    Notes for plan hygiene (asserted in tests/test_layout.py):
-
-    - both sides must use the SAME ``n_buckets`` (or enable
-      ``spark.sql.bucketing.coalesceBucketsInJoin.enabled`` for
-      multiples);
-    - bucketed writes require ``saveAsTable`` (the catalog carries the
-      bucket spec — a bare ``.parquet(path)`` write silently drops it);
-      pass ``path`` to keep the data outside the warehouse as an
-      external table.
-    """
-    if not bucket_cols:
-        raise ValueError("bucket_cols must be non-empty")
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    w = df.write.format("parquet").mode(mode).bucketBy(
-        int(n_buckets), *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
-def colocated_join(spark, left_table: str, right_table: str, on: list[str],
-                   how: str = "inner") -> DataFrame:
-    """Join two same-spec bucketed tables on their bucket keys. The plan
-    contains no Exchange: each task reads bucket *i* of both sides and
-    merges. Exists mostly to carry the documented invariant — any
-    equi-join of ``spark.table(...)`` frames gets the same plan."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def compaction_plan(

@@ -289,8 +289,9 @@ class EventBank:
 
         key = tuple(sorted((k, str(v)) for k, v in kwargs.items()))
         meta = self.table._read_meta()
+        stamp = (meta["generation"], meta["last_updated_ns"])
         return self._cache.get(
-            kwargs_start, kwargs_end, key, meta["generation"], build, trim
+            kwargs_start, kwargs_end, key, stamp, build, trim
         )
 
     def get_events(self, use_cache: bool = True, **kwargs) -> DataFrame:
@@ -467,8 +468,9 @@ class WaveBank:
             )
 
         meta = self.table._read_meta()
+        stamp = (meta["generation"], meta["last_updated_ns"])
         return self._cache.get(
-            starttime, endtime, patterns, meta["generation"], build, trim
+            starttime, endtime, patterns, stamp, build, trim
         )
 
     # -- index analytics (delegate to the operator layer) --------------------

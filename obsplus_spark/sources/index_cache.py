@@ -9,7 +9,8 @@ window reads inside one analysis span) never re-touches storage.
 Spark twist: the cached value is a ``.cache()``'d DataFrame (distributed,
 memory-and-disk), and the trim is a filter over it — so a hit costs one
 in-memory scan, no parquet IO. Entries invalidate automatically when the
-bank's generation changes (upserts bump it), which the reference handled
+bank's ``(generation, last_updated_ns)`` pointer changes (upserts bump
+it; a wiped and rebuilt root restamps it), which the reference handled
 with file-lock retries instead (``utils/bank.py:238-251``) — snapshot
 generations make that machinery unnecessary.
 """
@@ -29,7 +30,7 @@ class _Entry:
     t1: int
     t2: int
     kwargs_key: tuple
-    generation: int
+    generation: tuple
     df: DataFrame
     hits: int = 0
 
@@ -55,7 +56,7 @@ class IndexCache:
         t1: int | None,
         t2: int | None,
         kwargs_key: tuple,
-        generation: int,
+        generation: tuple,
         build,
         trim,
     ) -> DataFrame:

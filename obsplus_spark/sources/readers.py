@@ -4,13 +4,12 @@ The reference reads files defensively: try the declared format, fall back,
 return None on failure (``utils/bank.py:440-455 _try_read_stream``,
 ``utils/misc.py:170-201 read_file``). Spark's native equivalent is
 PERMISSIVE mode + ``_corrupt_record`` capture — bad rows become data, not
-exceptions; the ``badRecordsPath`` pattern splits them for inspection.
+exceptions; ``_corrupt_record IS NULL`` selects the good ones.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -41,32 +40,3 @@ def read_csv(
             "columnNameOfCorruptRecord", "_corrupt_record"
         )
     return reader.csv(path)
-
-
-def read_json_trees(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-) -> DataFrame:
-    """JSON event trees (``events/json.py dict_to_cat`` file form):
-    schema-enforced, PERMISSIVE."""
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .json(path)
-    )
-
-
-def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good rows, bad rows) — the badRecordsPath pattern as two frames.
-
-    The frame is cached first: Spark refuses plans that read *only* the
-    corrupt-record column from a raw file scan (QUERY_ONLY_CORRUPT_RECORD_
-    COLUMN), and the cache also guarantees both halves see one parse.
-    """
-    if "_corrupt_record" not in df.columns:
-        return df, df.limit(0)
-    df = df.cache()
-    good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    return good, bad

@@ -43,11 +43,10 @@ def binary_file_scan(
     """Recursive distributed file scan (reference ``_unindexed_iterator``
     ``bank/core.py:193-210``): path, length, mtime, content per file.
 
-    ``modified_after_ns`` reproduces the mtime-based incremental contract
-    batch-side (the streaming checkpoint covers it stream-side). The
-    watermark is pushed to the binaryFile source as a bare-column
-    ``modificationTime`` comparison, so files at or before it are never
-    read; the Filter above the scan keeps the result exact.
+    ``modified_after_ns`` reproduces the mtime-based incremental
+    contract. The watermark is pushed to the binaryFile source as a
+    bare-column ``modificationTime`` comparison, so files at or before
+    it are never read; the Filter above the scan keeps the result exact.
     """
     df = (
         spark.read.format("binaryFile")

@@ -96,11 +96,6 @@ def _parse_bytes(v: str) -> int:
     return int(float(s) * mult) if s else 1
 
 
-def is_local_master(df: DataFrame) -> bool:
-    """True when the session runs a ``local[...]`` master."""
-    return df.sparkSession.sparkContext.master.startswith("local")
-
-
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition under-partitioned inputs ahead of compute-heavy stages.
 

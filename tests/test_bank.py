@@ -244,7 +244,7 @@ def test_index_cache_unpersists_on_generation_bump(spark, tmp_path, event_rows):
     df2 = bank.read_index(minmagnitude=0.5)
     df2.count()
     assert len(bank._cache.entries) == 1
-    assert bank._cache.entries[0].generation == 1
+    assert bank._cache.entries[0].generation == (1, bank.last_updated_ns)
     # the stale entry must have been unpersisted, not just dropped
     assert not old_cached.storageLevel.useMemory
 
@@ -339,20 +339,30 @@ def test_generation_relation_sees_writes(
     assert got == {"f1", "f2", "f3", "f4"}
 
 
-def test_generation_relation_not_stale_after_rebuild(spark, tmp_path, event_rows):
-    """Wiping the bank root and rebuilding it to the SAME generation
-    number (different rows, different scan stamp) must not serve the
-    relation resolved for the wiped directory."""
+@pytest.mark.parametrize("use_cache", [False, True])
+def test_generation_relation_not_stale_after_rebuild(
+    spark, tmp_path, event_rows, use_cache
+):
+    """Wiping the bank root and putting in its place a bank rebuilt to
+    the SAME generation number (different rows, different scan stamp)
+    must not serve the relation resolved for the wiped directory, nor
+    an index cached from it. The rebuild is written elsewhere and
+    copied in, as another process or a restore would: a write through
+    this session to the bank's own path would refresh Spark's cached
+    plans over that path and hide a stale cache entry."""
     bank = EventBank(spark, tmp_path / "ev")
     bank.put_events(event_rows, scan_started_ns=1_000)
-    assert bank.read_index(use_cache=False).count() == 3
-    shutil.rmtree(tmp_path / "ev")
+    assert bank.read_index(use_cache=use_cache).count() == 3
     rebuilt = spark.createDataFrame(
         [("r1", Y2020 + 7 * NS, 10.0, 20.0, 1.0, 1.5)], event_rows.schema
     )
-    EventBank(spark, tmp_path / "ev").put_events(rebuilt, scan_started_ns=2_000)
+    EventBank(spark, tmp_path / "other").put_events(
+        rebuilt, scan_started_ns=2_000
+    )
+    shutil.rmtree(tmp_path / "ev")
+    shutil.copytree(tmp_path / "other", tmp_path / "ev")
     assert bank.table._read_meta()["generation"] == 0
-    got = [r.event_id for r in bank.read_index(use_cache=False).collect()]
+    got = [r.event_id for r in bank.read_index(use_cache=use_cache).collect()]
     assert got == ["r1"]
 
 

@@ -96,7 +96,7 @@ def test_decode_features_dispatch():
 def test_spark_extract_features_real_codecs(spark):
     import pyspark.sql.functions as F
 
-    from obsplus_spark.operators.multimodal import extract_features, resize_images
+    from obsplus_spark.operators.multimodal import extract_features
 
     rng = np.random.RandomState(2)
     rows = []
@@ -125,12 +125,6 @@ def test_spark_extract_features_real_codecs(spark):
     assert abs(feats[10][0] - 1.0) < 1e-6
     # png row: stub features in [0, 1) — not a real decode
     assert all(0 <= v < 1 for v in feats[11])
-
-    resized = resize_images(media, 4, 4).collect()
-    ids = {r.media_id for r in resized}
-    assert ids == {0, 1, 2, 3}  # wav + png rows dropped
-    out = decode_ppm(bytes(resized[0].payload))
-    assert out.shape == (4, 4, 3)
 
 
 def test_ppmv_roundtrip_and_seek_sampling():

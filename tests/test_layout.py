@@ -1,14 +1,29 @@
 """Z-order layout: interleave correctness + clustering effectiveness."""
 
 import pyspark.sql.functions as F
-import pytest
 
-from obsplus_spark.plans.layout import (
-    clustering_stats,
-    write_zordered,
-    zorder_key,
-    zorder_repartition,
-)
+from obsplus_spark.plans.layout import zorder_key
+
+
+def _zorder_files(df, cols, num_files, bits, binning="uniform"):
+    """Range-partition on the z-order key: one output file per range."""
+    return zorder_key(df, cols, bits, binning).repartitionByRange(
+        num_files, "_zkey"
+    )
+
+
+def _partition_spans(df, cols):
+    """Per-partition min/max of ``cols`` (the footer-stat span a file
+    would carry)."""
+    aggs = []
+    for c in cols:
+        aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
+    return (
+        df.select(F.spark_partition_id().alias("_pid"), *cols)
+        .groupBy("_pid")
+        .agg(*aggs)
+        .collect()
+    )
 
 
 def _morton2(x: int, y: int, bits: int = 16) -> int:
@@ -38,13 +53,13 @@ def test_zorder_clusters_both_dims(spark):
     files = 16
 
     def avg_span(frame):
-        stats = clustering_stats(frame, ["a", "b"]).collect()
+        stats = _partition_spans(frame, ["a", "b"])
         sa = sum(r.a_max - r.a_min for r in stats) / len(stats)
         sb = sum(r.b_max - r.b_min for r in stats) / len(stats)
         return sa / 141 + sb / 139  # normalized combined span
 
     plain = df.repartition(files)
-    zed = zorder_repartition(df, ["a", "b"], num_files=files, bits=8)
+    zed = _zorder_files(df, ["a", "b"], num_files=files, bits=8)
     # z-ordered partitions are tight in BOTH dimensions; random
     # round-robin partitions span nearly the full range of each
     assert avg_span(zed) < 0.5 * avg_span(plain)
@@ -59,25 +74,10 @@ def test_quantile_binning_under_skew(spark):
         .otherwise((F.col("id") % 1000) * 1000.0)
         .alias("b"),
     )
-    zq = zorder_repartition(df, ["a", "b"], num_files=8, bits=8, binning="quantile")
-    stats = clustering_stats(zq, ["a"]).collect()
+    zq = _zorder_files(df, ["a", "b"], num_files=8, bits=8, binning="quantile")
+    stats = _partition_spans(zq, ["a"])
     avg_a = sum(r.a_max - r.a_min for r in stats) / len(stats)
     assert avg_a < 70  # still clustered on `a` despite b's outliers
-
-
-def test_write_zordered_roundtrip(spark, tmp_path):
-    df = spark.range(1000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 31).cast("double").alias("a"),
-        (F.col("id") % 37).cast("double").alias("b"),
-    )
-    out = str(tmp_path / "z")
-    write_zordered(df, out, ["a", "b"], num_files=4)
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    assert set(back.columns) == {"k", "a", "b"}
-    # same content
-    assert back.agg(F.sum("k")).collect()[0][0] == 999 * 1000 // 2
 
 
 def test_zorder_null_values_bin_to_sentinel(spark):
@@ -93,71 +93,3 @@ def test_zorder_null_values_bin_to_sentinel(spark):
     assert vals[1] is not None
     # null a -> bin 0 -> same key as the minimum a value's row
     assert vals[1] == vals[2]
-
-
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed the same way join with ZERO exchanges — the
-    co-located-join invariant the 100-TB bank-join story rests on."""
-    from obsplus_spark.plans.layout import colocated_join, write_bucketed
-
-    left = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v")
-    right = spark.range(0, 1000).selectExpr("id AS k", "id % 7 AS w")
-    # at test size the planner would auto-broadcast the right side and
-    # skip the bucket layout entirely; disable it to get the plan two
-    # 50-TB sides would get
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(left, "bkt_l", ["k"], n_buckets=8,
-                       sort_cols=["k"], path=str(tmp_path / "l"))
-        write_bucketed(right, "bkt_r", ["k"], n_buckets=8,
-                       sort_cols=["k"], path=str(tmp_path / "r"))
-        joined = colocated_join(spark, "bkt_l", "bkt_r", ["k"])
-        plan = _executed(joined)
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == 1000
-        # aggregation on the bucket key is exchange-free too
-        agg = spark.table("bkt_l").groupBy("k").count()
-        assert "Exchange" not in _executed(agg)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_l")
-        spark.sql("DROP TABLE IF EXISTS bkt_r")
-
-
-def test_bucketed_join_mismatched_buckets_shuffles(spark, tmp_path):
-    """Different bucket counts break co-location: the smaller side (or
-    both) must re-exchange — documents the SAME-spec requirement."""
-    from obsplus_spark.plans.layout import colocated_join, write_bucketed
-
-    df = spark.range(0, 100).selectExpr("id AS k", "id AS v")
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(df, "bkt_a", ["k"], n_buckets=4,
-                       path=str(tmp_path / "a"))
-        write_bucketed(df, "bkt_b", ["k"], n_buckets=6,
-                       path=str(tmp_path / "b"))
-        plan = _executed(colocated_join(spark, "bkt_a", "bkt_b", ["k"]))
-        # a SHUFFLE exchange specifically — a BroadcastExchange would
-        # also match bare "Exchange" and make this test vacuous
-        assert "Exchange hashpartitioning" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
-def test_write_bucketed_validates(spark):
-    from obsplus_spark.plans.layout import write_bucketed
-
-    df = spark.range(3).selectExpr("id AS k")
-    with pytest.raises(ValueError, match="non-empty"):
-        write_bucketed(df, "t", [], 4)
-    with pytest.raises(ValueError, match="n_buckets"):
-        write_bucketed(df, "t", ["k"], 0)

@@ -5,13 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from obsplus_spark.operators.dedup import hamming_distance, simhash_signatures
-from obsplus_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    extract_features,
-    frame_sample_plan,
-    media_dedup_exact,
-)
+from obsplus_spark.operators.dedup import simhash_signatures
+from obsplus_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
 
 
 @pytest.fixture(scope="module")
@@ -45,23 +40,6 @@ def test_real_decode_is_stubbed(media):
     )
 
 
-def test_media_dedup_exact(media):
-    out = {r.canonical_id: r.n_dups for r in media_dedup_exact(media).collect()}
-    assert out[1] == 2 and out[3] == 1 and out[4] == 1
-
-
-def test_frame_sample_plan(media):
-    out = frame_sample_plan(media, every_ms=1000).collect()
-    frames = {}
-    for r in out:
-        frames.setdefault(r.media_id, []).append(r.frame_ts_ms)
-    # 3.5 s video → frames at 0,1000,2000,3000; audio 2.5 s → 0,1000,2000
-    assert sorted(frames[4]) == [0, 1000, 2000, 3000]
-    assert sorted(frames[3]) == [0, 1000, 2000]
-    # images (no duration) → single frame at 0
-    assert frames[1] == [0]
-
-
 def test_simhash_near_and_far(spark):
     base = "the quick brown fox jumps over the lazy dog again today"
     near = "the quick brown fox jumps over the lazy cat again today"
@@ -77,7 +55,8 @@ def test_simhash_near_and_far(spark):
         .select(
             F.col("a.doc_id").alias("i"),
             F.col("b.doc_id").alias("j"),
-            hamming_distance(F.col("a.simhash"), F.col("b.simhash")).alias("d"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+            .alias("d"),
         )
     )
     d = {(r.i, r.j): r.d for r in pairs.collect()}

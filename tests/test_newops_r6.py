@@ -279,24 +279,6 @@ def test_salted_join_validations(spark):
         salted_join(big, dim, "k", salt=1)
 
 
-def test_cms_merge_equals_whole_stream_sketch(spark):
-    """Mergeability: sketch(part1) ⊕ sketch(part2) == sketch(all)."""
-    from obsplus_spark.operators.sketches import cms_counters, cms_merge
-
-    rows = [(f"k{i % 37}",) for i in range(500)]
-    df = spark.createDataFrame(rows, "k string")
-    p1 = spark.createDataFrame(rows[:200], "k string")
-    p2 = spark.createDataFrame(rows[200:], "k string")
-    merged = cms_merge(
-        cms_counters(p1, "k", depth=3, width=64),
-        cms_counters(p2, "k", depth=3, width=64),
-    )
-    whole = cms_counters(df, "k", depth=3, width=64)
-    a = sorted(map(tuple, merged.collect()))
-    b = sorted(map(tuple, whole.collect()))
-    assert a == b
-
-
 def test_pmi_collocations_hand_case(spark):
     import math as _math
 

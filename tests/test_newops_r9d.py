@@ -209,6 +209,41 @@ class TestScoreAuc:
         assert got == pytest.approx(want, abs=1e-9)
 
 
+def test_auc_cells_merge_with_duplicate_scores(spark):
+    """auc_from_counts must re-aggregate duplicate-score rows before
+    the cumulative rank window (review fix): the union of two split
+    runs' cell tables equals the whole-data AUC."""
+    from obsplus_spark.operators.evaluation import (
+        auc_from_counts,
+        score_auc,
+    )
+
+    schema = "s double, y boolean"
+    a = [(0.0, False), (1.0, True), (1.0, False)]
+    b = [(1.0, True), (1.0, True), (2.0, False)]
+
+    def cells(rows):
+        from pyspark.sql import functions as F
+
+        return (
+            spark.createDataFrame(rows, schema)
+            .groupBy("s")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum(F.when(F.col("y"), 1).otherwise(0))
+                .cast("long").alias("np"),
+            )
+        )
+
+    merged = cells(a).unionByName(cells(b))
+    got = auc_from_counts(merged).collect()[0]
+    want = score_auc(
+        spark.createDataFrame(a + b, schema), "s", "y"
+    ).collect()[0]
+    assert got["auc"] == want["auc"]
+    assert (got["n_pos"], got["n_neg"]) == (want["n_pos"], want["n_neg"])
+
+
 class TestKsStatistic:
     def test_hand_value(self, spark):
         from obsplus_spark.operators.evaluation import ks_statistic

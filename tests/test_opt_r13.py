@@ -53,36 +53,3 @@ def test_standardize_query_serialization_matches_operator(spark):
         # elements are 6-dp rounded doubles; the decimal round-trip is
         # exact up to -0.0 (serialized as 0.000000 on both engines)
         assert decoded == [0.0 if v == 0 else v for v in want[vid]]
-
-
-def test_write_bucketed_round_trip_and_partitioning(spark, tmp_path):
-    """plans/layout.write_bucketed: the reader returns the same rows and
-    a scan that reports the bucket spec (exchange-free consumers)."""
-    from obsplus_spark.plans.layout import write_bucketed
-
-    df = spark.range(0, 100).selectExpr("id AS s", "id % 7 AS c")
-    write_bucketed(df, "obsplus_test_bucketed", ["s"], 4, sort_cols=["s"])
-    out = spark.table("obsplus_test_bucketed")
-    try:
-        assert sorted(map(tuple, out.collect())) == sorted(
-            map(tuple, df.collect())
-        )
-        # a bare scan legitimately reports "Bucketed: false (disabled by
-        # query planner)" — autoBucketedScan only engages bucketing when
-        # an operator needs the distribution; the pin is on the keyed
-        # aggregate planning exchange-free with an engaged bucketed scan
-        agg = out.groupBy("s").count()
-        aplan = agg._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "Bucketed: true" in aplan, aplan
-        assert "Exchange" not in aplan.replace(
-            "BroadcastExchange", ""
-        ), aplan
-        # overwrite over the survived location must not fail (the
-        # stale-location guard)
-        write_bucketed(df, "obsplus_test_bucketed", ["s"], 4)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS obsplus_test_bucketed")

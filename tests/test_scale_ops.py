@@ -12,7 +12,6 @@ from obsplus_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     near_duplicates,
-    ngram_jaccard,
 )
 from obsplus_spark.operators.similarity import cosine_topk, cosine_topk_lsh
 from obsplus_spark.operators.text import text_stats, token_count
@@ -82,15 +81,6 @@ def test_shingle_cache_ring_bounded(docs):
 
     live = {_tok(f) for f in frames if f.storageLevel.useMemory}
     assert live <= {_tok(f) for f in ring}
-
-
-def test_jaccard_values(docs):
-    sig = minhash_signatures(docs, n_hashes=16)
-    pairs = lsh_candidate_pairs(sig, n_hashes=16, bands=8)
-    sc = ngram_jaccard(docs, pairs).collect()
-    for r in sc:
-        assert 0.0 <= r.jaccard <= 1.0
-        assert r.n_inter <= min(r.n1, r.n2)
 
 
 def test_cosine_topk_matches_numpy(spark):
