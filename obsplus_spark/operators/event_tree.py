@@ -35,6 +35,9 @@ Includes the semantics that are easy to get wrong (SURVEY.md §7):
 
 from __future__ import annotations
 
+import threading
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -498,7 +501,44 @@ def events_to_df(tree: DataFrame) -> DataFrame:
       (pd.py:219-223 _get_update_time over CreationInfo instances).
     - ``time``: preferred-origin time, falling back to the earliest pick
       (utils/time.py get_reference_time fallback order).
+
+    The two ``select`` lists depend on ``tree.schema`` alone, and building
+    them costs over a thousand py4j round trips. They are built once per
+    distinct schema (keyed on its JSON) and reused, so a repeat call on a
+    tree of the same schema — every ingest batch of an EventBank — costs
+    only the two ``select`` calls.
     """
+    staged, out = _events_projection(tree)
+    return tree.select("*", *staged).select(*out)
+
+
+#: (gateway, {schema JSON: (staged, output) select lists of events_to_df});
+#: the lists hold JVM Column handles, so they are dropped with the
+#: gateway that made them
+_PROJECTIONS: tuple[object, dict[str, tuple[list, list]]] = (None, {})
+_PROJECTIONS_LOCK = threading.Lock()
+
+
+def _events_projection(tree: DataFrame) -> tuple[list[Column], list[Column]]:
+    """The ``events_to_df`` select lists for ``tree``'s schema, built on
+    the first call per schema and per gateway."""
+    global _PROJECTIONS
+    key = tree.schema.json()
+    with _PROJECTIONS_LOCK:
+        gateway = SparkContext._gateway
+        if _PROJECTIONS[0] is not gateway:
+            _PROJECTIONS = (gateway, {})
+        by_schema = _PROJECTIONS[1]
+        if key not in by_schema:
+            by_schema[key] = _build_events_projection(tree)
+        return by_schema[key]
+
+
+def _build_events_projection(
+    tree: DataFrame,
+) -> tuple[list[Column], list[Column]]:
+    """The staged preferred structs (``_po``, ``_pm``) and the 27 output
+    columns of :func:`events_to_df`, derived from ``tree.schema``."""
     ofields = _elem_fields(tree, "origins")
     mfields = _elem_fields(tree, "magnitudes")
     pfields = _elem_fields(tree, "picks")
@@ -510,15 +550,14 @@ def events_to_df(tree: DataFrame) -> DataFrame:
     # once per referencing column per row (CollapseProject keeps the two
     # projections apart because the aliases are non-cheap and multiply
     # referenced)
-    staged = tree.select(
-        "*",
+    staged = [
         _preferred_t(
             tree, "origins", "preferred_origin_id", ORIGIN_STRUCT
         ).alias("_po"),
         _preferred_t(
             tree, "magnitudes", "preferred_magnitude_id", MAGNITUDE_STRUCT
         ).alias("_pm"),
-    )
+    ]
     o, m = F.col("_po"), F.col("_pm")
 
     def of(name, dtype=D):
@@ -616,7 +655,7 @@ def events_to_df(tree: DataFrame) -> DataFrame:
     mag_col = _sub(m, mfields, "mag", D)
     mag_type_col = _sub(m, mfields, "magnitude_type", S)
 
-    return staged.select(
+    return staged, [
         F.coalesce(of("time", L), first_pick).alias("time"),
         of("latitude").alias("latitude"),
         of("longitude").alias("longitude"),
@@ -658,7 +697,7 @@ def events_to_df(tree: DataFrame) -> DataFrame:
         _ev_col(tree, "agency_id", S).alias("agency_id"),
         _ev_col(tree, "creation_time", L).alias("creation_time"),
         _ev_col(tree, "version", S).alias("version"),
-    )
+    ]
 
 
 # --------------------------------------------------------------------------

@@ -2,8 +2,8 @@
 
 The reference declares every table schema as an OrderedDict of
 ``{column: dtype}`` (``/root/reference/src/obsplus/constants.py``:
-EVENT_DTYPES :81-109, PICK_DTYPES :124-150, STATION_DTYPES :45-60,
-WAVEFORM_DTYPES :294-302) and *enforces* them on every extractor output via
+EVENT_DTYPES :81-109, WAVEFORM_DTYPES :294-302, among others) and
+*enforces* them on every extractor output via
 ``order_columns``/``cast_dtypes`` (``utils/pd.py:152-235``).
 
 Conventions (SURVEY.md §1.2, §7 hard parts):
@@ -89,77 +89,6 @@ EVENT_SCHEMA = _struct(
         ("version", S),
     ]
 )
-
-# --- picks (reference constants.py:124-150) ---------------------------------
-PICK_SCHEMA = _struct(
-    [
-        ("resource_id", S),
-        ("time", L),
-        ("seed_id", S),
-        ("filter_id", S),
-        ("method_id", S),
-        ("horizontal_slowness", D),
-        ("backazimuth", D),
-        ("onset", S),
-        ("phase_hint", S),
-        ("polarity", S),
-        ("evaluation_mode", S),
-        ("evaluation_status", S),
-        ("creation_time", L),
-        ("author", S),
-        ("agency_id", S),
-        ("event_id", S),
-        ("event_time", L),
-        ("network", S),
-        ("station", S),
-        ("location", S),
-        ("channel", S),
-        ("uncertainty", D),
-        ("lower_uncertainty", D),
-        ("upper_uncertainty", D),
-        ("confidence_level", D),
-    ]
-)
-
-# --- stations, channel-level rows (reference constants.py:45-60) ------------
-STATION_SCHEMA = _struct(
-    [
-        ("network", S),
-        ("station", S),
-        ("location", S),
-        ("channel", S),
-        ("seed_id", S),
-        ("latitude", D),
-        ("longitude", D),
-        ("elevation", D),
-        ("depth", D),
-        ("azimuth", D),
-        ("dip", D),
-        ("sample_rate", D),
-        ("start_date", L),
-        ("end_date", L),
-    ]
-)
-
-# --- bulk request rows (reference constants.py:305-312) ---------------------
-BULK_REQUEST_SCHEMA = _struct(
-    [
-        ("network", S),
-        ("station", S),
-        ("location", S),
-        ("channel", S),
-        ("starttime", L),
-        ("endtime", L),
-    ]
-)
-
-SCHEMAS: dict[str, T.StructType] = {
-    "waveform_index": WAVEFORM_INDEX_SCHEMA,
-    "events": EVENT_SCHEMA,
-    "picks": PICK_SCHEMA,
-    "stations": STATION_SCHEMA,
-    "bulk_requests": BULK_REQUEST_SCHEMA,
-}
 
 
 def order_columns(df: DataFrame, schema: T.StructType) -> DataFrame:

@@ -23,6 +23,13 @@ pointer has named. So a reader resolves each generation's parquet relation
 query — writes from other bank instances on the same path are still seen,
 while repeated queries skip the listing and the schema-inference job.
 
+An EventBank keeps two such tables, the index and the nested-tree
+payload. ``put_events`` writes them at the same time, each its own
+generation swap, and returns once both are done. A failed batch can
+therefore leave the payload a generation ahead of the index (or the index
+ahead of the payload); ``get_events`` filters through the index, so rows
+that exist only in the payload stay invisible.
+
 Partition layout: Hive-style ``part_year=YYYY`` from the row's time column —
 the distributed analogue of the reference's templated ``{year}/{month}/...``
 directory scheme (``constants.py:576-588``), giving partition pruning on
@@ -39,6 +46,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from obsplus_spark.plans.predicates import fdsn_event_filter, interval_overlap
 from obsplus_spark.functions.strings import glob_match
@@ -232,6 +240,17 @@ class EventBank:
         derives from it (``events_to_df``), mirroring the reference's
         QuakeML-file + SQLite-index pair; ``trees`` passes the payload
         explicitly alongside a precomputed summary.
+
+        With a payload, the two upserts run at the same time: the payload
+        on a second thread (a pyspark ``InheritableThread``, so its jobs
+        carry the caller's local properties such as the job group), the
+        index on the caller's thread. The call returns only after both
+        have finished, and re-raises a failure from either.
+        The writes are two generation swaps, not one transaction: a
+        failed batch can leave the payload a generation ahead of the
+        index, as it could leave the index ahead of the payload when they
+        ran in turn. ``get_events`` filters through the index, so payload
+        rows the index lacks stay invisible until a re-ingest.
         """
         if trees is None and "origins" in events.columns:
             trees = events
@@ -239,14 +258,37 @@ class EventBank:
 
             events = events_to_df(trees)
         df = _with_part_year(events, "time")
-        self.table.upsert(
-            df, "event_id", partition_by=["part_year"],
-            scan_started_ns=scan_started_ns,
-        )
-        if trees is not None:
-            self._payload.upsert(
-                trees, "event_id", scan_started_ns=scan_started_ns
+
+        def write_index():
+            self.table.upsert(
+                df, "event_id", partition_by=["part_year"],
+                scan_started_ns=scan_started_ns,
             )
+
+        if trees is None:
+            write_index()
+            return self
+        payload_errors: list[BaseException] = []
+
+        def write_payload():
+            try:
+                self._payload.upsert(
+                    trees, "event_id", scan_started_ns=scan_started_ns
+                )
+            except BaseException as exc:
+                payload_errors.append(exc)
+
+        worker = InheritableThread(
+            write_payload, session=self.table.spark,
+            name="eventbank-payload-upsert",
+        )
+        worker.start()
+        try:
+            write_index()
+        finally:
+            worker.join()
+        if payload_errors:
+            raise payload_errors[0]
         return self
 
     # update_index is put_events in this engine: the index IS the table

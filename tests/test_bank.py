@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import shutil
+import threading
 import time
 import uuid
 
@@ -410,3 +411,80 @@ def test_bank_query_plans_build_without_jobs(spark, tmp_path, event_rows, wave_i
         df, jobs = _jobs_fired(spark, build)
         assert jobs == [], f"{kind} fired {len(jobs)} job(s) while building"
         df.collect()  # the plan still executes
+
+
+@pytest.fixture()
+def payload_rows(event_rows):
+    """A stand-in payload: one row per event_id, as ``put_events(trees=)``
+    takes alongside a precomputed summary."""
+    return event_rows.select("event_id", F.lit("tree").alias("body"))
+
+
+def test_put_events_payload_failure_raises_after_both_sides(
+    spark, tmp_path, event_rows, payload_rows, monkeypatch
+):
+    """The payload upsert runs beside the index upsert; a payload failure
+    propagates out of put_events, which returns only once both sides
+    have finished."""
+    bank = EventBank(spark, tmp_path)
+    real_index_upsert = bank.table.upsert
+    index_done = threading.Event()
+    done = []
+
+    def index_upsert(*a, **kw):
+        real_index_upsert(*a, **kw)
+        index_done.set()
+
+    def slow_failure(*a, **kw):
+        # still running when the index side has finished
+        assert index_done.wait(60)
+        time.sleep(0.5)
+        done.append("payload")
+        raise RuntimeError("payload write failed")
+
+    monkeypatch.setattr(bank.table, "upsert", index_upsert)
+    monkeypatch.setattr(bank._payload, "upsert", slow_failure)
+    with pytest.raises(RuntimeError, match="payload write failed"):
+        bank.put_events(event_rows, trees=payload_rows)
+    assert done == ["payload"]
+    assert bank.read_index(use_cache=False).count() == 3  # index side ran
+    assert not bank._payload.exists()
+
+
+def test_put_events_index_failure_waits_for_payload(
+    spark, tmp_path, event_rows, payload_rows, monkeypatch
+):
+    """An index failure is re-raised only after the payload side, still
+    running on its thread, has finished."""
+    bank = EventBank(spark, tmp_path)
+    real_upsert = bank._payload.upsert
+
+    def slow_payload(*a, **kw):
+        time.sleep(0.5)
+        real_upsert(*a, **kw)
+
+    def failing_index(*a, **kw):
+        raise RuntimeError("index write failed")
+
+    monkeypatch.setattr(bank._payload, "upsert", slow_payload)
+    monkeypatch.setattr(bank.table, "upsert", failing_index)
+    with pytest.raises(RuntimeError, match="index write failed"):
+        bank.put_events(event_rows, trees=payload_rows)
+    assert bank._payload.exists()
+    assert bank._payload.read().count() == 3
+    assert not bank.table.exists()
+
+
+def test_put_events_payload_jobs_carry_caller_job_group(
+    spark, tmp_path, event_rows, payload_rows, monkeypatch
+):
+    """The payload side's jobs run in the caller's job group: its thread
+    inherits the caller's local properties. With the index upsert
+    stubbed out, every job of the call is a payload job."""
+    bank = EventBank(spark, tmp_path)
+    monkeypatch.setattr(bank.table, "upsert", lambda *a, **kw: None)
+    _, jobs = _jobs_fired(
+        spark, lambda: bank.put_events(event_rows, trees=payload_rows)
+    )
+    assert jobs, "the payload write's jobs lost the caller's job group"
+    assert bank._payload.read().count() == 3

@@ -527,3 +527,54 @@ def test_reference_time_tolerates_timeless_picks(spark):
     assert row["time"] == 5
     pk = picks_to_df(tree).collect()[0]
     assert pk["event_time"] == 5 and pk["time"] is None
+
+
+def _py4j_commands(spark, fn):
+    """(result of ``fn()``, py4j commands it sent), counted by wrapping
+    the gateway client's ``send_command``."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    sent = []
+
+    def counting(*a, **kw):
+        sent.append(1)
+        return orig(*a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(client, "send_command", counting)
+        return fn(), len(sent)
+
+
+def test_events_to_df_reuses_projection_per_schema(spark, full_tree):
+    """A repeat call on a tree of the same schema skips rebuilding the
+    flattening projection: two ``select``s, not a thousand round trips,
+    and the same rows as the call that built it."""
+    from pyspark.sql import functions as F
+
+    # a schema no other test flattens, so the first call below builds
+    batch = full_tree.withColumn("batch", F.lit("b1"))
+    first, n_first = _py4j_commands(spark, lambda: events_to_df(batch))
+    second, n_second = _py4j_commands(spark, lambda: events_to_df(batch))
+    assert n_first > 500, f"first call sent {n_first} commands"
+    assert n_second <= 60, f"repeat call sent {n_second} commands"
+    assert second.collect() == first.collect()
+    # a new DataFrame of the same schema reuses the projection too
+    other = full_tree.withColumn("batch", F.lit("b2"))
+    again, n_again = _py4j_commands(spark, lambda: events_to_df(other))
+    assert n_again <= 60, f"same-schema call sent {n_again} commands"
+    assert again.collect() == first.collect()
+
+
+def test_events_to_df_subset_schema_after_full(spark, tree, full_tree):
+    """A subset-schema tree flattened after a full one in the same session
+    gets its own projection: typed NULLs for the fields it lacks, the
+    full tree's column types."""
+    full = events_to_df(full_tree)
+    slim = events_to_df(tree)
+    assert slim.dtypes == full.dtypes
+    out = {r.event_id: r for r in slim.collect()}
+    assert out["e1"].time == 100 and out["e1"].magnitude == 2.2
+    for col in ("horizontal_uncertainty", "vertical_uncertainty",
+                "standard_error", "author", "agency_id", "version"):
+        assert out["e1"][col] is None, col
+    assert events_to_df(full_tree).collect()[0].author == "alice"

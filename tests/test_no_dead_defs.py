@@ -1,11 +1,14 @@
-"""Every top-level function and class in the engine package is used.
+"""Every top-level function, class and module constant in the engine
+package is used.
 
-Each top-level ``def``/``class`` in ``obsplus_spark/**/*.py`` must be
-named, as a whole word, somewhere in the repository's ``.py`` files
-besides its own definition: a call, an import, a test, or a mention in
-a docstring. A definition nothing names is dead code and is deleted
-rather than kept. Dunder names (module hooks such as ``__getattr__``)
-are looked up by the interpreter, not by name, and are exempt.
+Each top-level ``def``/``class`` and each name a top-level assignment
+binds (``X = ...``, ``X: T = ...``, ``A, B = ...``) in
+``obsplus_spark/**/*.py`` must be named, as a whole word, somewhere in
+the repository's ``.py`` files besides its own definition: a call, an
+import, a test, or a mention in a docstring. A definition nothing names
+is dead code and is deleted rather than kept. Dunder names (module hooks
+such as ``__getattr__``, ``__all__``) are looked up by the interpreter,
+not by name, and are exempt.
 """
 
 import ast
@@ -28,15 +31,34 @@ def _repo_py_files() -> "list[Path]":
     ]
 
 
+def _bound_names(node: ast.stmt) -> "list[str]":
+    """Names a top-level statement defines: a def/class name, or the
+    plain names an assignment binds (attribute and subscript targets
+    define nothing new)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+    ]
+
+
 def _top_level_defs() -> "list[tuple[str, int, str]]":
-    """(file, line, name) of every top-level def/class in the package."""
+    """(file, line, name) of every top-level def/class and assigned name
+    in the package."""
     found = []
     for path in sorted(PACKAGE.rglob("*.py")):
         for node in ast.parse(path.read_text(), str(path)).body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                found.append((str(path.relative_to(ROOT)), node.lineno, node.name))
+            for name in _bound_names(node):
+                found.append((str(path.relative_to(ROOT)), node.lineno, name))
     return found
 
 
