@@ -75,7 +75,7 @@ def session(name, sf_dir=None, warm=(), shuffle_partitions=None,
         extra_conf={"spark.sql.adaptive.enabled": "false", **(extra_conf or {})},
     )
     if sf_dir is not None:
-        import __spark_entry__ as entrymod
+        from corpus.common import _t
 
         warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
         if not os.path.isdir(warm_dir):
@@ -83,7 +83,7 @@ def session(name, sf_dir=None, warm=(), shuffle_partitions=None,
         for fn in warm:
             _noop(fn(spark, warm_dir))
         for t in TABLES:
-            entrymod._t(spark, sf_dir, t)
+            _t(spark, sf_dir, t)
     return spark
 
 

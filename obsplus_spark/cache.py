@@ -1,12 +1,12 @@
 """Persist-lifecycle management — the single home for every cached-frame
 registry in the engine (VERDICT r9 #5 consolidation; previously three
-mechanisms grown independently in ``__spark_entry__`` /
+mechanisms grown independently in the query entry module /
 ``operators/dedup`` / ``operators/similarity``).
 
 Three registries, one invariant set:
 
 1. **Table cache** (``_TABLE_CACHE``): base parquet scans keyed
-   ``(session, sf_dir, table)`` — built by the entry point's ``_t``,
+   ``(session, sf_dir, table)`` — built by ``corpus.common._t``,
    persisted once per session, evicted only when their session dies.
    The production analogue is caching hot dimension tables: at 100 TB
    you cache dims, not facts.

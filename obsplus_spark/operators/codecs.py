@@ -1,10 +1,9 @@
 """Pure-numpy codecs for uncompressed public media formats.
 
-Closes the multimodal decode stub for every format that needs no external
-library: WAV/RIFF PCM audio, netpbm PPM/PGM images, and uncompressed
-24-bit BMP — all fully-documented public byte layouts. Compressed formats
-(JPEG/PNG/MP4…) still route to the stub: their codecs aren't in this
-container, and faking entropy decoding would be dishonest.
+Covers every media format that needs no external library: WAV/RIFF PCM
+audio, netpbm PPM/PGM images, and uncompressed 24-bit BMP — all
+fully-documented public byte layouts. Compressed formats (JPEG/PNG/MP4…)
+are not decoded: faking entropy decoding would be dishonest.
 
 Everything here is numpy vector math on one payload at a time; the
 distributed shape (Arrow batches via ``mapInPandas``, bytes never on the
@@ -215,27 +214,6 @@ def audio_features(samples: np.ndarray, rate: int, dim: int = 16) -> list[float]
     hist, _ = np.histogram(mono, bins=8, range=(-1, 1))
     feats = [dur, rms, peak, zcr, *(float(x) / max(n, 1) for x in hist)]
     return (feats + [0.0] * dim)[:dim]
-
-
-#: formats the real decoders cover
-DECODABLE = {"wav", "ppm", "pgm", "bmp"}
-
-
-def decode_features(payload: bytes, fmt: str | None, dim: int = 16) -> list[float] | None:
-    """Dispatch: real decode + descriptor for DECODABLE formats, None for
-    formats that need an external codec (caller falls back to the stub)."""
-    f = (fmt or "").lower()
-    try:
-        if f == "wav":
-            samples, rate = decode_wav(payload)
-            return audio_features(samples, rate, dim)
-        if f in ("ppm", "pgm"):
-            return image_features(decode_ppm(payload), dim)
-        if f == "bmp":
-            return image_features(decode_bmp(payload), dim)
-    except (ValueError, struct.error, IndexError):
-        return None
-    return None
 
 
 # --------------------------------------------------------------------------

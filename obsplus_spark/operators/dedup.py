@@ -482,11 +482,8 @@ def simhash_signatures(
 
 # Persist-lifecycle machinery lives in obsplus_spark.cache (VERDICT r9
 # #5 consolidation); this module's own call sites use the historical
-# aliases below, other modules import from obsplus_spark.cache.
+# alias below, other modules import from obsplus_spark.cache.
 from obsplus_spark.cache import (  # noqa: E402
-    _PRIVATE_CHAINS,
-    _SHINGLE_CACHES,
-    register_private_chain as _register_private_chain,
     register_shingle_cache as _register_shingle_cache,
 )
 

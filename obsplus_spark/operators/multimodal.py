@@ -5,138 +5,20 @@ columns (or object-store paths) beside typed metadata structs; decode /
 feature-extraction runs as Arrow-batched ``mapInPandas`` so bytes never
 cross the driver and each task holds one batch.
 
-Codec status: **real** for uncompressed public formats — WAV/RIFF PCM,
-netpbm PPM/PGM, 24-bit BMP decode + deterministic descriptors live in
+Codecs: WAV/RIFF PCM, netpbm PPM/PGM and 24-bit BMP decode, plus
+deterministic image descriptors, live in
 :mod:`obsplus_spark.operators.codecs` (pure numpy, no external libs).
-Compressed formats (JPEG/PNG/MP4…) still fall back to a deterministic
-byte-level fake with the same output schema — their codecs aren't in
-this container and the fallback keeps plans/shuffles/joins exercised
-end-to-end. Drop-in: extend ``codecs.decode_features`` with a PIL/librosa
-call on a full cluster.
+Compressed formats (JPEG/PNG/MP4…) have no decoder here.
 """
 
 from __future__ import annotations
 
-import hashlib
 import logging
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 _log = logging.getLogger(__name__)
-
-#: metadata struct carried beside every media payload
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image/audio/video
-        T.StructField("format", T.StringType()),      # png/jpeg/wav/...
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", MEDIA_META_SCHEMA),
-    ]
-)
-
-FEATURE_SCHEMA = (
-    "media_id long, n_bytes long, sha long, features array<float>"
-)
-
-
-def _decode_real(payload: bytes, meta) -> list[float]:
-    """The real codec hook. Not available in this container."""
-    raise NotImplementedError(
-        "media decoding requires image/audio libraries not present in the "
-        "round-1 environment; use decode_stub=True (deterministic fake) "
-        "or plug a codec in here on a full cluster"
-    )
-
-
-def _fake_image_features(payload: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in: md5-chained bytes → [0,1) floats.
-
-    Keeps every downstream property real (fixed dim, deterministic,
-    content-sensitive) without any media library.
-    """
-    out: list[float] = []
-    seed = payload or b""
-    h = hashlib.md5(seed).digest()
-    while len(out) < dim:
-        for i in range(0, len(h), 4):
-            out.append(int.from_bytes(h[i : i + 4], "big") / 2**32)
-            if len(out) == dim:
-                break
-        h = hashlib.md5(h).digest()
-    return out
-
-
-def extract_features(
-    media: DataFrame,
-    dim: int = 16,
-    batch_size_hint: int = 256,
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Binary payloads → fixed-dim feature vectors via ``mapInPandas``.
-
-    Arrow streams each partition as pandas batches; one output row per
-    media row: ``(media_id, n_bytes, sha, features array<float>)``. The
-    ``features`` column feeds directly into
-    :mod:`obsplus_spark.operators.similarity` (ANN) — the intended
-    pipeline shape for image-dedup at scale.
-
-    Per-row dispatch: formats with a real pure-numpy codec
-    (``codecs.DECODABLE``: wav/ppm/pgm/bmp) decode for real; everything
-    else uses the deterministic fake when ``decode_stub`` (default) or
-    raises via ``_decode_real`` when not.
-    """
-    import pandas as pd
-
-    from obsplus_spark.operators.codecs import decode_features
-    from obsplus_spark.util import ensure_parallelism
-
-    has_meta = "meta" in media.columns
-
-    def _one(payload: bytes, fmt: str | None) -> list[float]:
-        real = decode_features(payload, fmt, dim)
-        if real is not None:
-            return real
-        if decode_stub:
-            return _fake_image_features(payload, dim)
-        return _decode_real(payload, None)
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            if has_meta:
-                fmts = [
-                    (m.get("format") if isinstance(m, dict) else None)
-                    for m in pdf["meta"]
-                ]
-            else:
-                fmts = [None] * len(pdf)
-            feats = [_one(p, f) for p, f in zip(payloads, fmts)]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": payloads.map(lambda b: len(b) if b is not None else 0),
-                    "sha": payloads.map(
-                        lambda b: int.from_bytes(
-                            hashlib.sha256(b or b"").digest()[:8], "big", signed=True
-                        )
-                    ),
-                    "features": feats,
-                }
-            )
-
-    return ensure_parallelism(media).mapInPandas(_batches, FEATURE_SCHEMA)
 
 
 def sample_video_frames(

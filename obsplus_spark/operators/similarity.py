@@ -893,7 +893,6 @@ def ivf_pq_topk(
 # here: an evicted frame plan-identical to a rebuilt one silently ran
 # the rebuild uncached).
 from obsplus_spark.cache import (  # noqa: E402
-    _ASSIGNMENT_CACHES,
     register_assignment_cache as _register_assignment_cache,
 )
 

@@ -20,7 +20,7 @@ segment is a **row**: NSLC + ``starttime``/``endtime``/``sampling_period``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from obsplus_spark.operators.gaps import sessionize

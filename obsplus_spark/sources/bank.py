@@ -214,17 +214,12 @@ class EventBank:
     to pushdown predicates over the partitioned parquet index.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str | os.PathLike,
-        cache_size: int = 5,
-    ):
+    def __init__(self, spark: SparkSession, path: str | os.PathLike):
         from obsplus_spark.sources.index_cache import IndexCache
 
         self.table = _GenerationTable(spark, Path(path) / "event_index")
         self._payload = _GenerationTable(spark, Path(path) / "event_payload")
-        self._cache = IndexCache(cache_size=cache_size)
+        self._cache = IndexCache()
 
     def put_events(
         self,
@@ -294,7 +289,7 @@ class EventBank:
     # update_index is put_events in this engine: the index IS the table
     update_index = put_events
 
-    def read_index(self, use_cache: bool = True, **kwargs) -> DataFrame:
+    def read_index(self, **kwargs) -> DataFrame:
         """FDSN-style query (``eventbank.py:225-261 read_index``).
 
         Time-contained repeats with identical residual kwargs serve from
@@ -310,9 +305,6 @@ class EventBank:
             df = self.table.read()
             df = _prune_part_year(df, t1, t2)
             return fdsn_event_filter(df, starttime=t1, endtime=t2, **kwargs)
-
-        if not use_cache:
-            return build(kwargs_start, kwargs_end)
 
         if kwargs.get("limit") is not None:
             # limited queries are not cache-shareable (the cached superset
@@ -336,7 +328,7 @@ class EventBank:
             kwargs_start, kwargs_end, key, stamp, build, trim
         )
 
-    def get_events(self, use_cache: bool = True, **kwargs) -> DataFrame:
+    def get_events(self, **kwargs) -> DataFrame:
         """Full event payload for an index query.
 
         Mirror of ``eventbank.py:392-418 get_events``: the index filter
@@ -345,7 +337,7 @@ class EventBank:
         touches matching rows. Falls back to index rows when no payload
         table exists (summary-only banks).
         """
-        idx = self.read_index(use_cache=use_cache, **kwargs)
+        idx = self.read_index(**kwargs)
         if not self._payload.exists():
             return idx
         return self._payload.read().join(
@@ -367,17 +359,12 @@ class WaveBank:
     #: index-query edge buffer, 1 s in ns (reference wavebank.py:173)
     buffer_ns = 1_000_000_000
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str | os.PathLike,
-        cache_size: int = 5,
-    ):
+    def __init__(self, spark: SparkSession, path: str | os.PathLike):
         from obsplus_spark.sources.index_cache import IndexCache
 
         self.table = _GenerationTable(spark, Path(path) / "waveform_index")
         self._payload = _GenerationTable(spark, Path(path) / "waveform_data")
-        self._cache = IndexCache(cache_size=cache_size)
+        self._cache = IndexCache()
 
     def put_waveforms(self, traces: DataFrame) -> "WaveBank":
         """Sink trace rows (samples included) and refresh the index.
@@ -474,7 +461,6 @@ class WaveBank:
         channel: str | None = None,
         starttime: int | None = None,
         endtime: int | None = None,
-        use_cache: bool = True,
     ) -> DataFrame:
         """Indexed scan with pushed-down time + NSLC predicates
         (``wavebank.py:329-361``): interval **overlap** with the 1 s edge
@@ -500,9 +486,6 @@ class WaveBank:
                 if pat is not None:
                     pred = pred & glob_match(col, pat)
             return df.filter(pred)
-
-        if not use_cache:
-            return build(starttime, endtime)
 
         def trim(df, t1, t2):
             return df.filter(

@@ -18,7 +18,6 @@ generations make that machinery unnecessary.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import DataFrame
 

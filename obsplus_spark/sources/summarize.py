@@ -18,7 +18,6 @@ aren't in this container).
 from __future__ import annotations
 
 import logging
-import os
 import time
 from collections.abc import Callable, Iterator
 

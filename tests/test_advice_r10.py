@@ -111,7 +111,7 @@ def test_chunk_dedup_engine_matches_oracle_on_null_id(spark, null_id_docs):
     corpus-level variant (first occurrence ordered by (id, pos))."""
     import duckdb
 
-    import __spark_entry__ as entrymod
+    from corpus import dedup as entrymod
     from obsplus_spark.operators.dedup import chunk_dedup
 
     docs = spark.read.parquet(f"{null_id_docs}/documents.parquet")

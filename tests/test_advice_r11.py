@@ -104,7 +104,7 @@ def test_q_phash_wide_modulo_sign_stable():
     on BOTH sides (ADVICE r10 #4)."""
     import inspect
 
-    import __spark_entry__ as entry
+    from corpus import multimodal as entry
 
     src = inspect.getsource(entry.q_phash_wide)
     assert "abs(u) % 4096" in src and "abs(u) % 5" in src

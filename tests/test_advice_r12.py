@@ -119,7 +119,7 @@ def test_script_mix_vertical_tab_matches_duckdb_twin(spark):
     """Engine vs the registered DuckDB twin on a VT-bearing corpus —
     the exact divergence ADVICE flagged (denominator off by one per VT
     under the bare \\s shorthand)."""
-    import __spark_entry__ as entry
+    from corpus import text as entry
     from obsplus_spark.operators.text import script_mix
 
     rows = [

@@ -77,7 +77,7 @@ def test_k_core_chain_survives_interleaved_ring_use(spark):
     ring-registering operators run BEFORE the returned lazy frame is
     executed (the shared ring's default capacity is 2 — it used to
     evict the chain and trigger 2^rounds recompute)."""
-    from obsplus_spark.operators import dedup
+    from obsplus_spark import cache
     from obsplus_spark.operators.graph import k_core_peel
 
     edges = spark.createDataFrame(
@@ -85,11 +85,11 @@ def test_k_core_chain_survives_interleaved_ring_use(spark):
         "src long, dst long",
     )
     out = k_core_peel(edges, k=3, rounds=3, broadcast_degrees=True)
-    chain = dedup._PRIVATE_CHAINS[(id(spark), "k_core_peel")]
+    chain = cache._PRIVATE_CHAINS[(id(spark), "k_core_peel")]
     assert len(chain) == 3  # e0 + one per twice-read intermediate round
     # interleave default-capacity ring registrations (any other operator)
     for _ in range(3):
-        dedup._register_shingle_cache(
+        cache.register_shingle_cache(
             spark.range(1).select("id").persist()
         )
     assert all(f.is_cached for f in chain)

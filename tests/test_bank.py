@@ -310,33 +310,35 @@ def test_generation_relation_resolved_once(spark, tmp_path, event_rows):
 def test_generation_relation_sees_writes(
     spark, tmp_path, event_rows, wave_index, writer
 ):
-    """A write moves the pointer, so the reader's next uncached index read
-    sees the new rows: the bank's own put_events/update_index ("same"), or
-    a second instance on the same path ("other")."""
+    """A write moves the pointer, so the reader's next index read sees the
+    new rows: the bank's own put_events/update_index ("same"), or a second
+    instance on the same path ("other"). The write also moves the
+    (generation, last_updated_ns) stamp the index cache is keyed on, so
+    the read after it misses the cache."""
     def pick(bank, cls, path):
         return bank if writer == "same" else cls(spark, path)
 
     ebank = EventBank(spark, tmp_path / "ev")
     ebank.put_events(event_rows)
-    assert ebank.read_index(use_cache=False).count() == 3
+    assert ebank.read_index().count() == 3
     pick(ebank, EventBank, tmp_path / "ev").put_events(
         spark.createDataFrame(
             [("e9", Y2020 + 500 * NS, 44.0, -115.0, 9.0, 5.5)], event_rows.schema
         )
     )
-    got = {r.event_id for r in ebank.read_index(use_cache=False).collect()}
+    got = {r.event_id for r in ebank.read_index().collect()}
     assert got == {"e1", "e2", "e3", "e9"}
 
     wbank = WaveBank(spark, tmp_path / "wb")
     wbank.update_index(wave_index)
-    assert wbank.read_index(use_cache=False).count() == 3
+    assert wbank.read_index().count() == 3
     pick(wbank, WaveBank, tmp_path / "wb").update_index(
         spark.createDataFrame(
             [("XX", "N", "", "ZZZ", Y2020 + 5 * NS, Y2020 + 6 * NS, 10_000_000, "f4")],
             wave_index.schema,
         )
     )
-    got = {r.path for r in wbank.read_index(use_cache=False).collect()}
+    got = {r.path for r in wbank.read_index().collect()}
     assert got == {"f1", "f2", "f3", "f4"}
 
 
@@ -350,10 +352,17 @@ def test_generation_relation_not_stale_after_rebuild(
     an index cached from it. The rebuild is written elsewhere and
     copied in, as another process or a restore would: a write through
     this session to the bank's own path would refresh Spark's cached
-    plans over that path and hide a stale cache entry."""
+    plans over that path and hide a stale cache entry. A ``limit``
+    query bypasses the index cache, so the uncached case reads the
+    generation relation alone."""
+    def read():
+        if use_cache:
+            return bank.read_index()
+        return bank.read_index(limit=100)
+
     bank = EventBank(spark, tmp_path / "ev")
     bank.put_events(event_rows, scan_started_ns=1_000)
-    assert bank.read_index(use_cache=use_cache).count() == 3
+    assert read().count() == 3
     rebuilt = spark.createDataFrame(
         [("r1", Y2020 + 7 * NS, 10.0, 20.0, 1.0, 1.5)], event_rows.schema
     )
@@ -363,7 +372,7 @@ def test_generation_relation_not_stale_after_rebuild(
     shutil.rmtree(tmp_path / "ev")
     shutil.copytree(tmp_path / "other", tmp_path / "ev")
     assert bank.table._read_meta()["generation"] == 0
-    got = [r.event_id for r in bank.read_index(use_cache=use_cache).collect()]
+    got = [r.event_id for r in read().collect()]
     assert got == ["r1"]
 
 
@@ -447,7 +456,7 @@ def test_put_events_payload_failure_raises_after_both_sides(
     with pytest.raises(RuntimeError, match="payload write failed"):
         bank.put_events(event_rows, trees=payload_rows)
     assert done == ["payload"]
-    assert bank.read_index(use_cache=False).count() == 3  # index side ran
+    assert bank.read_index().count() == 3  # index side ran
     assert not bank._payload.exists()
 
 

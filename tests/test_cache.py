@@ -164,15 +164,15 @@ def test_families_do_not_evict_each_other(spark):
 
 
 def test_historical_names_still_bound(spark):
-    """The pre-consolidation import surface keeps working (operators
-    and existing tests register through these names)."""
+    """The aliases the operators and the corpus register through are
+    the obsplus_spark.cache objects themselves."""
     from obsplus_spark import cache
     from obsplus_spark.operators import dedup, similarity
-    import __spark_entry__ as entrymod
+    from corpus import common
 
-    assert dedup._SHINGLE_CACHES is cache._SHINGLE_CACHES
-    assert dedup._PRIVATE_CHAINS is cache._PRIVATE_CHAINS
-    assert similarity._ASSIGNMENT_CACHES is cache._ASSIGNMENT_CACHES
-    assert entrymod._TABLE_CACHE is cache._TABLE_CACHE
+    assert common._TABLE_CACHE is cache._TABLE_CACHE
     assert dedup._register_shingle_cache is cache.register_shingle_cache
-    assert dedup._register_private_chain is cache.register_private_chain
+    assert (
+        similarity._register_assignment_cache
+        is cache.register_assignment_cache
+    )

@@ -1,4 +1,4 @@
-"""Pure-numpy media codecs + multimodal dispatch integration."""
+"""Pure-numpy media codecs."""
 
 import numpy as np
 import pytest
@@ -6,7 +6,6 @@ import pytest
 from obsplus_spark.operators.codecs import (
     audio_features,
     decode_bmp,
-    decode_features,
     decode_ppm,
     decode_wav,
     encode_bmp,
@@ -81,50 +80,6 @@ def test_feature_determinism_and_dim():
     assert len(a) == 16
     assert abs(a[0] - 1.0) < 1e-9  # duration
     assert abs(a[1] - np.sqrt(0.5)) < 0.01  # sine rms
-
-
-def test_decode_features_dispatch():
-    img = np.zeros((4, 4, 3), np.uint8)
-    assert decode_features(encode_ppm(img), "ppm") is not None
-    assert decode_features(encode_bmp(img), "bmp") is not None
-    wav = encode_wav(np.zeros((10, 1)), 8000)
-    assert decode_features(wav, "wav") is not None
-    assert decode_features(b"\xff\xd8\xff", "jpeg") is None  # not decodable
-    assert decode_features(b"garbage", "ppm") is None  # corrupt → fallback
-
-
-def test_spark_extract_features_real_codecs(spark):
-    import pyspark.sql.functions as F
-
-    from obsplus_spark.operators.multimodal import extract_features
-
-    rng = np.random.RandomState(2)
-    rows = []
-    for i in range(4):
-        img = rng.randint(0, 256, (8 + i, 8, 3), dtype=np.uint8)
-        rows.append((i, bytearray(encode_ppm(img)),
-                     {"media_type": "image", "format": "ppm", "width": 8,
-                      "height": 8 + i, "duration_ms": None, "sample_rate": None}))
-    wav = encode_wav(np.sin(np.linspace(0, 10, 4000)).reshape(-1, 1), 4000)
-    rows.append((10, bytearray(wav),
-                 {"media_type": "audio", "format": "wav", "width": None,
-                  "height": None, "duration_ms": 1000, "sample_rate": 4000}))
-    rows.append((11, bytearray(b"\x89PNG fake"),
-                 {"media_type": "image", "format": "png", "width": None,
-                  "height": None, "duration_ms": None, "sample_rate": None}))
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, payload binary, meta struct<media_type:string,"
-        "format:string,width:int,height:int,duration_ms:bigint,sample_rate:int>",
-    )
-    feats = {r.media_id: r.features for r in extract_features(media).collect()}
-    assert len(feats) == 6
-    # ppm rows: real decode → first feature is pixel width (8.0)
-    assert feats[0][0] == 8.0
-    # wav row: first feature is duration in seconds
-    assert abs(feats[10][0] - 1.0) < 1e-6
-    # png row: stub features in [0, 1) — not a real decode
-    assert all(0 <= v < 1 for v in feats[11])
 
 
 def test_ppmv_roundtrip_and_seek_sampling():

@@ -74,7 +74,7 @@ def _docs(spark, rows):
 
 
 def test_span_keep_cut_all_duplicate_and_degenerates(spark):
-    import __spark_entry__ as entry
+    from corpus import dedup as entry
     from obsplus_spark.operators.dedup import (
         cut_spans,
         exact_substring_spans,
@@ -105,7 +105,7 @@ def test_span_keep_one_within_and_cross_doc_ties(spark):
     """The same region twice in ONE doc and once in another: the
     global min-(id, span_start) occurrence survives; both other
     occurrences (one cross-doc, one within-doc) are cut."""
-    import __spark_entry__ as entry
+    from corpus import dedup as entry
     from obsplus_spark.operators.dedup import (
         exact_substring_spans,
         keep_first_occurrence,
@@ -155,7 +155,7 @@ def test_shared_regions_cap_boundary(spark):
 
 
 def test_shared_regions_duckdb_replay_with_degenerates(spark):
-    import __spark_entry__ as entry
+    from corpus import dedup as entry
     from obsplus_spark.operators.dedup import (
         exact_substring_spans,
         shared_region_pairs,
@@ -196,7 +196,7 @@ def test_bcubed_empty_evidence_matches_twin_shape(spark):
     """All-NULL-text corpus: both engines produce ONE all-NULL row
     (sum over empty input), compared via the registered twin replayed
     on the same table."""
-    import __spark_entry__ as entry
+    from corpus import dedup as entry
     from obsplus_spark.operators.dedup import bcubed_eval
     from obsplus_spark.util import sql_over  # noqa: F401  (house import)
 

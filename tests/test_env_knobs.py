@@ -1,9 +1,9 @@
 """The engine's environment knobs are an explicit, closed set.
 
 Every ``os.environ.get`` / ``os.getenv`` / ``os.environ[...]`` read in
-the engine package and the entry module is collected from the source
-and compared with the allowlist below, so a new env gate can only be
-added by also adding it here.
+the engine package, the query corpus and the entry module is collected
+from the source and compared with the allowlist below, so a new env gate
+can only be added by also adding it here.
 """
 
 import ast
@@ -15,7 +15,6 @@ ALLOWED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_DRIVER_MEMORY",
     "OPSDATA_PATH",
-    "SPARK_GRAFT_CACHE",
 }
 
 
@@ -60,6 +59,7 @@ def _env_keys(path: Path) -> "list[tuple[str, int, str | None]]":
 
 def test_engine_env_knobs_match_allowlist():
     files = sorted((ROOT / "obsplus_spark").rglob("*.py"))
+    files += sorted((ROOT / "corpus").rglob("*.py"))
     files.append(ROOT / "__spark_entry__.py")
     reads = [r for p in files for r in _env_keys(p)]
     dynamic = [r for r in reads if r[2] is None]

@@ -6,38 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from obsplus_spark.operators.dedup import simhash_signatures
-from obsplus_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (1, bytearray(b"\x89PNG fake image bytes AAAA"), ("image", "png", 64, 64, None, None)),
-        (2, bytearray(b"\x89PNG fake image bytes AAAA"), ("image", "png", 64, 64, None, None)),
-        (3, bytearray(b"RIFF fake wav bytes"), ("audio", "wav", None, None, 2500, 44100)),
-        (4, bytearray(b"\x00\x00video"), ("video", "mp4", 640, 480, 3500, None)),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_deterministic(media):
-    a = {r.media_id: r for r in extract_features(media, dim=8).collect()}
-    b = {r.media_id: r for r in extract_features(media, dim=8).collect()}
-    assert all(a[i].features == b[i].features for i in a)
-    # identical payloads → identical features; different payloads differ
-    assert a[1].features == a[2].features
-    assert a[1].features != a[3].features
-    assert all(len(r.features) == 8 for r in a.values())
-    assert all(0.0 <= x < 1.0 for x in a[1].features)
-    assert a[1].n_bytes == 26
-
-
-def test_real_decode_is_stubbed(media):
-    with pytest.raises(Exception) as exc_info:
-        extract_features(media, decode_stub=False).collect()
-    assert "NotImplementedError" in str(exc_info.value) or "media decoding" in str(
-        exc_info.value
-    )
 
 
 def test_simhash_near_and_far(spark):

@@ -110,7 +110,7 @@ def test_keep_one_matches_duckdb_replay(spark):
         exact_substring_spans,
         keep_first_occurrence,
     )
-    import __spark_entry__ as entry
+    from corpus import dedup as entry
 
     rows = [
         (1, "p q r s t u"),
@@ -311,7 +311,7 @@ def test_shared_regions_basic_and_cap(spark):
 
 
 def test_shared_regions_matches_duckdb_replay(spark):
-    import __spark_entry__ as entry
+    from corpus import dedup as entry
     from obsplus_spark.operators.dedup import (
         exact_substring_spans,
         shared_region_pairs,

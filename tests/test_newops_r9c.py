@@ -248,7 +248,7 @@ def sf_dir():
 
 
 def test_ship_delay_dist_bands_bounded(spark, sf_dir):
-    import __spark_entry__ as entry
+    from corpus import relational as entry
 
     rows = entry.q_ship_delay_dist(spark, sf_dir).collect()
     bands = [r.delay_band for r in rows]
@@ -259,7 +259,7 @@ def test_ship_delay_dist_bands_bounded(spark, sf_dir):
 
 
 def test_nation_value_share_cut(spark, sf_dir):
-    import __spark_entry__ as entry
+    from corpus import relational as entry
 
     rows = entry.q_nation_value_share(spark, sf_dir).collect()
     # every surviving nation holds > 1/20 of the total -> at most 19
@@ -271,7 +271,7 @@ def test_nation_value_share_cut(spark, sf_dir):
 def test_dominant_suppliers_threshold(spark, sf_dir):
     """Dominance is >50% of a multi-supplier part's volume, so a part
     contributes at most ONE dominant supplier."""
-    import __spark_entry__ as entry
+    from corpus import relational as entry
     from pyspark.sql import functions as F
 
     dom = entry.q_dominant_suppliers(spark, sf_dir)

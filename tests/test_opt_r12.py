@@ -51,7 +51,7 @@ def test_k_core_rounds2_matches_rounds4_on_bench_graph(spark):
     """The q_k_core optimization contract: on the hash-folded orders
     graph the 2-round guarded peel equals the 4-round peel row-for-row
     (the oracle twin still runs 4 rounds)."""
-    import __spark_entry__ as em
+    from corpus import common as em
     from obsplus_spark.operators.graph import k_core_peel
 
     o = em._t(spark, "/root/testdata/sf0.01", "orders")

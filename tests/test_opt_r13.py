@@ -37,13 +37,14 @@ def test_standardize_query_serialization_matches_operator(spark):
     comma-joined DECIMAL(28,6) string for the verification harness; the
     string must decode to exactly the operator's 6-dp array values."""
     import __spark_entry__ as em
+    from corpus.common import _t
     from obsplus_spark.operators.similarity import standardize_embeddings
 
     sf_dir = "/root/testdata/sf0.001"
     q = em.queries()["standardize"](spark, sf_dir)
     assert dict(q.dtypes)["embedding"] == "string"
     arr = standardize_embeddings(
-        em._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
     got = {r.vec_id: r.embedding for r in q.collect()}
     want = {r.vec_id: r.embedding for r in arr.collect()}

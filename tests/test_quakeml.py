@@ -166,9 +166,9 @@ def test_eventbank_quakeml_ingest(spark, tmp_path):
     (d / "cat1.xml").write_text(QML)
     bank = EventBank(spark, tmp_path / "bank")
     update_eventbank_from_files(spark, bank, str(d), incremental=False)
-    idx = bank.read_index(use_cache=False)
+    idx = bank.read_index()
     assert idx.count() == 2
-    got = bank.get_events(use_cache=False, minmagnitude=2.0)
+    got = bank.get_events(minmagnitude=2.0)
     rows = got.collect()
     assert len(rows) == 1
     assert rows[0].event_id == "smi:local/ev1"
@@ -214,11 +214,11 @@ def test_eventbank_quakeml_incremental_ingest(spark, tmp_path):
     def tables():
         idx = sorted(
             (r.event_id, r.magnitude)
-            for r in bank.read_index(use_cache=False).collect()
+            for r in bank.read_index().collect()
         )
         payload = sorted(
             (r.event_id, tuple(m["mag"] for m in r.magnitudes))
-            for r in bank.get_events(use_cache=False).collect()
+            for r in bank.get_events().collect()
         )
         return idx, payload
 

@@ -61,7 +61,7 @@ def test_shingle_cache_ring_bounded(docs):
     """Repeated near-dup scans keep at most two persisted shingle tables
     per session; older ones must be unpersisted (no cache accumulation
     across a scan loop)."""
-    from obsplus_spark.operators.dedup import _SHINGLE_CACHES
+    from obsplus_spark.cache import _SHINGLE_CACHES
 
     frames = []
     for _ in range(4):
@@ -898,7 +898,7 @@ def test_tcol_normalizes_long_ns_dates(spark):
     surface as int64 ns under nanosAsLong — _tcol must yield the same
     timestamp a plain-timestamp column gives (a bare CAST would read the
     long as SECONDS)."""
-    import __spark_entry__ as m
+    from corpus import common as m
 
     ns = 867801600 * 1_000_000_000  # 1997-07-02 00:00:00 UTC
     as_long = spark.createDataFrame([(ns,)], "d long")
