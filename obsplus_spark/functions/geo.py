@@ -58,6 +58,12 @@ def wrap_longitude(col) -> Column:
     return F.when(m > 180.0, m - 360.0).otherwise(m)
 
 
+def wrap_longitude_sql(expr: str) -> str:
+    """SQL text of :func:`wrap_longitude` over the SQL expression ``expr``."""
+    m = f"pmod({expr}, 360.0D)"
+    return f"CASE WHEN {m} > 180.0D THEN {m} - 360.0D ELSE {m} END"
+
+
 def kilometers_to_degrees(km) -> Column:
     """km → degrees of great circle (reference get_events.py:88-90)."""
     return _c(km) * F.lit(1000.0 / M_PER_DEG)

@@ -4,7 +4,9 @@ Reference parity:
 - glob semantics are fnmatch (`?`/`*`/`[...]`, anchored) exactly as the
   reference compiles them (``utils/pd.py:419-423,446-449 get_regex``);
   translation happens once at plan-build time (a Python constant), the
-  match itself is a JVM-side ``rlike`` — no Python in the hot path.
+  match itself is a JVM-side ``RLIKE`` — no Python in the hot path. The
+  predicate is SQL text (:func:`glob_match_sql`); the ``Column`` form is
+  ``F.expr`` of it, one py4j round trip instead of one per tree node.
 - case *sensitive* for events/waveforms, case-insensitive for stations
   (``stations/get_stations.py:22-24``) — callers pass ``case_insensitive``.
 """
@@ -16,6 +18,8 @@ from functools import lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from obsplus_spark.functions.sqltext import sql_ident, sql_literal, sql_or
 
 
 @lru_cache(maxsize=2500)  # reference caches compiled regexes (utils/pd.py:446)
@@ -80,41 +84,42 @@ def is_exact(pattern: str) -> bool:
     return not any(ch in pattern for ch in "*?[")
 
 
-def glob_match(col: Column | str, pattern: str, case_insensitive: bool = False) -> Column:
-    """Column predicate: value matches the fnmatch glob.
+def glob_match_sql(col: str, pattern: str, case_insensitive: bool = False) -> str:
+    """SQL text of the predicate "the column named ``col`` matches the
+    fnmatch glob".
 
     Exact patterns compile to plain equality (joinable/prunable); wildcard
-    patterns compile to ``rlike`` — the same exact/glob split the reference
+    patterns compile to ``RLIKE`` — the same exact/glob split the reference
     applies in ``_filter_index_to_bulk``.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = sql_ident(col)
     if case_insensitive:
-        if is_exact(pattern):
-            return F.upper(c) == pattern.upper()
-        return F.upper(c).rlike(glob_to_regex(pattern.upper()))
+        c, pattern = f"upper({c})", pattern.upper()
     if is_exact(pattern):
-        return c == pattern
-    return c.rlike(glob_to_regex(pattern))
+        return f"{c} = {sql_literal(pattern)}"
+    return f"{c} RLIKE {sql_literal(glob_to_regex(pattern))}"
+
+
+def glob_match(col: str, pattern: str, case_insensitive: bool = False) -> Column:
+    """Column predicate: value matches the fnmatch glob
+    (``F.expr`` of :func:`glob_match_sql`)."""
+    return F.expr(glob_match_sql(col, pattern, case_insensitive))
 
 
 def any_glob_match(
-    col: Column | str, patterns: list[str], case_insensitive: bool = False
+    col: str, patterns: list[str], case_insensitive: bool = False
 ) -> Column:
-    """OR of glob matches; exact patterns collapse into one ``isin``."""
-    c = F.col(col) if isinstance(col, str) else col
+    """OR of glob matches; exact patterns collapse into one ``IN``."""
     exact = [p for p in patterns if is_exact(p)]
     globs = [p for p in patterns if not is_exact(p)]
-    preds: list[Column] = []
+    preds: list[str] = []
     if exact:
+        c = sql_ident(col)
         if case_insensitive:
-            preds.append(F.upper(c).isin([p.upper() for p in exact]))
-        else:
-            preds.append(c.isin(exact))
-    preds.extend(glob_match(c, p, case_insensitive) for p in globs)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
+            c, exact = f"upper({c})", [p.upper() for p in exact]
+        preds.append(f"{c} IN ({', '.join(map(sql_literal, exact))})")
+    preds.extend(glob_match_sql(col, p, case_insensitive) for p in globs)
+    return F.expr(sql_or(preds))
 
 
 def contains_any(col: Column | str, tokens: list[str]) -> Column:

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from obsplus_spark.functions.sqltext import sql_ident
 from obsplus_spark.operators.gaps import gaps_df
 
 NSLC = ["network", "station", "location", "channel"]
@@ -24,10 +25,14 @@ def availability(
     start_col: str = "starttime",
     end_col: str = "endtime",
 ) -> DataFrame:
-    """Per-key [min start, max end] — the reference's availability table."""
+    """Per-key [min start, max end] — the reference's availability table.
+
+    The aggregate columns are SQL text (``F.expr``), three py4j round trips
+    each instead of one per ``Column`` node."""
     keys = keys or NSLC
+    s, e = sql_ident(start_col), sql_ident(end_col)
     return df.groupBy(*keys).agg(
-        F.min(start_col).alias(start_col), F.max(end_col).alias(end_col)
+        F.expr(f"min({s}) AS {s}"), F.expr(f"max({e}) AS {e}")
     )
 
 

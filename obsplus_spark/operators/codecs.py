@@ -202,20 +202,6 @@ def image_features(arr: np.ndarray, dim: int = 16) -> list[float]:
     return (feats + [0.0] * dim)[:dim]
 
 
-def audio_features(samples: np.ndarray, rate: int, dim: int = 16) -> list[float]:
-    """Fixed-dim deterministic audio descriptor: duration, rms, peak,
-    zero-crossing rate, and an 8-bin mono amplitude histogram."""
-    mono = samples.mean(axis=1) if samples.ndim == 2 else samples
-    n = len(mono)
-    dur = n / rate if rate else 0.0
-    rms = float(np.sqrt((mono**2).mean())) if n else 0.0
-    peak = float(np.abs(mono).max()) if n else 0.0
-    zcr = float((np.diff(np.signbit(mono)) != 0).mean()) if n > 1 else 0.0
-    hist, _ = np.histogram(mono, bins=8, range=(-1, 1))
-    feats = [dur, rms, peak, zcr, *(float(x) / max(n, 1) for x in hist)]
-    return (feats + [0.0] * dim)[:dim]
-
-
 # --------------------------------------------------------------------------
 # PPMV (toy video container: length-prefixed concatenated netpbm frames)
 # --------------------------------------------------------------------------

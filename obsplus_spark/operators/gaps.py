@@ -25,16 +25,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from obsplus_spark.functions.sqltext import sql_ident
+
 NSLC = ["network", "station", "location", "channel"]
 
 
-def _min_gap_col(min_gap, sampling_period_col):
-    """min_gap default = 1.5 × sampling_period (wavebank.py:446-449)."""
+def _min_gap_sql(min_gap, sampling_period_col) -> str:
+    """min_gap default = 1.5 × sampling_period (wavebank.py:446-449), SQL."""
     if min_gap is not None:
-        return F.lit(int(min_gap))
+        return str(int(min_gap))
     if sampling_period_col is None:
-        return F.lit(0)
-    return (F.col(sampling_period_col) * 1.5).cast("long")
+        return "0"
+    return f"CAST({sql_ident(sampling_period_col)} * 1.5D AS BIGINT)"
 
 
 def gaps_df(
@@ -49,28 +51,35 @@ def gaps_df(
 
     Output: key columns + ``gap_start``, ``gap_end``, ``gap_duration``
     (same units as the inputs; ns longs by convention).
+
+    Both window columns are built in one ``selectExpr``, the gap test in
+    one ``where`` and the output in one more ``selectExpr``: SQL text, a
+    few py4j round trips instead of one per ``Column`` node.
     """
     keys = list(keys or NSLC)
     part = keys + ([sampling_period_col] if sampling_period_col else [])
-    w = Window.partitionBy(*part).orderBy(start_col, end_col)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    min_gap_c = _min_gap_col(min_gap, sampling_period_col)
-    out = (
-        df.withColumn("_next_start", F.lead(start_col).over(w))
-        .withColumn("_cum_end", F.max(end_col).over(run))
-        .filter(
-            F.col("_next_start").isNotNull()
-            & (F.col("_cum_end") + min_gap_c < F.col("_next_start"))
+    s, e = sql_ident(start_col), sql_ident(end_col)
+    w = (
+        f"PARTITION BY {', '.join(map(sql_ident, part))} ORDER BY {s}, {e}"
+    )
+    min_gap_sql = _min_gap_sql(min_gap, sampling_period_col)
+    return (
+        df.selectExpr(
+            "*",
+            f"lead({s}) OVER ({w}) AS _next_start",
+            f"max({e}) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING"
+            " AND CURRENT ROW) AS _cum_end",
         )
-        .select(
-            *part,
-            F.col("_cum_end").alias("gap_start"),
-            F.col("_next_start").alias("gap_end"),
-            (F.col("_next_start") - F.col("_cum_end")).alias("gap_duration"),
+        .where(
+            f"_next_start IS NOT NULL AND _cum_end + ({min_gap_sql}) < _next_start"
+        )
+        .selectExpr(
+            *map(sql_ident, part),
+            "_cum_end AS gap_start",
+            "_next_start AS gap_end",
+            "_next_start - _cum_end AS gap_duration",
         )
     )
-    return out
 
 
 def sessionize(
@@ -94,7 +103,7 @@ def sessionize(
     w = Window.partitionBy(*part).orderBy(start_col, end_col)
     prev_run = w.rowsBetween(Window.unboundedPreceding, -1)
 
-    min_gap_c = _min_gap_col(min_gap, sampling_period_col)
+    min_gap_c = F.expr(_min_gap_sql(min_gap, sampling_period_col))
     prev_cum_end = F.max(end_col).over(prev_run)
     is_new = F.when(
         prev_cum_end.isNull() | (prev_cum_end + min_gap_c < F.col(start_col)),

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from obsplus_spark.functions.sqltext import sql_and, sql_ident, sql_or
+
 
 def interval_overlap_join(
     left: DataFrame,
@@ -46,18 +48,23 @@ def interval_overlap_join(
         # outer join would null-extend every non-canonical copy of an
         # unmatched row, duplicating left rows — only inner is correct
         raise ValueError("bucketed interval join supports how='inner' only")
+
+    if bucket is None:
+        # the whole condition as one SQL expression, not a Column per node
+        cond = sql_and(
+            [
+                f"{sql_ident('l.' + left_start)} < {sql_ident('r.' + right_end)}",
+                f"{sql_ident('l.' + left_end)} > {sql_ident('r.' + right_start)}",
+            ]
+            + [f"{sql_ident('l.' + c)} = {sql_ident('r.' + c)}" for c in on]
+        )
+        l = F.broadcast(left.alias("l")) if broadcast_left else left.alias("l")
+        return l.join(right.alias("r"), F.expr(cond), how)
+
     overlap = (F.col(f"l.{left_start}") < F.col(f"r.{right_end}")) & (
         F.col(f"l.{left_end}") > F.col(f"r.{right_start}")
     )
     eq = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in on]
-
-    if bucket is None:
-        l = F.broadcast(left.alias("l")) if broadcast_left else left.alias("l")
-        cond = overlap
-        for e in eq:
-            cond = cond & e
-        return l.join(right.alias("r"), cond, how)
-
     b = F.lit(int(bucket))
 
     def bucketed(df: DataFrame, start: str, end: str) -> DataFrame:
@@ -274,23 +281,22 @@ def bulk_request_filter(
     ``(net, sta, loc, chan, t1, t2)`` tuples (``wavebank.py:581-614``);
     when the requests are plan-build constants, the whole bulk match
     compiles to a single OR-of-conjunctions filter over the index scan: no
-    join, no shuffle, each glob regex compiled once (``glob_match``
+    join, no shuffle, each glob regex compiled once (``glob_match_sql``
     exact/wildcard split), and the time bounds + exact codes reach the
-    parquet scan as pushable predicates. Use :func:`bulk_request_join`
+    parquet scan as pushable predicates. The predicate is SQL text, so the
+    whole list reaches the JVM in one ``where``. Use :func:`bulk_request_join`
     when the request table is itself distributed data.
     """
-    from obsplus_spark.functions.strings import glob_match
+    from obsplus_spark.functions.strings import glob_match_sql
 
-    pred = None
+    s, e = sql_ident(start_col), sql_ident(end_col)
+    ors = []
     for req in requests:
         codes, (t1, t2) = req[: len(nslc)], req[len(nslc) :]
-        p = (F.col(start_col) < F.lit(int(t2))) & (F.col(end_col) > F.lit(int(t1)))
-        for col, pat in zip(nslc, codes):
-            p = p & glob_match(col, pat)
-        pred = p if pred is None else (pred | p)
-    if pred is None:
-        return index.filter(F.lit(False))
-    return index.filter(pred)
+        conj = [f"{s} < {int(t2)}", f"{e} > {int(t1)}"]
+        conj.extend(glob_match_sql(col, pat) for col, pat in zip(nslc, codes))
+        ors.append(sql_and(conj))
+    return index.where(sql_or(ors) or "false")
 
 
 def bulk_request_join(

@@ -1,4 +1,4 @@
-"""Plan-building layer: the kwargs → Column predicate compiler."""
+"""Plan-building layer: the kwargs → predicate compiler (SQL text)."""
 
 from obsplus_spark.plans.predicates import (
     compile_filters,

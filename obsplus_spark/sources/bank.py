@@ -6,6 +6,13 @@ SQLite for EventBank). The Spark re-expression: **the index is a partitioned
 parquet table**; ``read_index`` is a parquet scan with every kwarg compiled
 to a pushdown-able predicate; ``update_index``/``put_*`` are upserts.
 
+``read_index`` compiles its kwargs to one SQL predicate (a few py4j round
+trips per query, not one per ``Column`` node) and returns the filtered
+relation itself. There is no superset cache of earlier reads (the
+reference's ``_IndexCache``, ``utils/bank.py:159-196``): a read here is a
+filter over an already-resolved relation, and persisting each miss cost
+more than the repeats it served.
+
 Upsert strategy: generation swap. Each write materializes the merged table
 into a new ``gen=N`` directory and flips a tiny JSON pointer — readers keep
 snapshot isolation (they hold the old generation), writers never overwrite
@@ -48,8 +55,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import InheritableThread
 
-from obsplus_spark.plans.predicates import fdsn_event_filter, interval_overlap
-from obsplus_spark.functions.strings import glob_match
+from obsplus_spark.functions.sqltext import sql_and
+from obsplus_spark.functions.strings import glob_match_sql
+from obsplus_spark.plans.predicates import (
+    fdsn_event_filter,
+    interval_overlap_sql,
+    part_year_bounds,
+)
 
 
 class _GenerationTable:
@@ -132,8 +144,8 @@ class _GenerationTable:
             {"generation": new_gen, "last_updated_ns": stamp}
         )
         # bounded snapshot window: keep the TWO prior generations so any
-        # DataFrame handed out within the last two writes (including a
-        # lazy cached index) still reads live files; older generations
+        # DataFrame handed out within the last two writes still reads
+        # live files; older generations
         # are garbage-collected. A handle older than two writes must be
         # re-read from the bank — document, not MVCC.
         for gen in range(new_gen - 2):
@@ -162,40 +174,6 @@ class _GenerationTable:
         self.overwrite(merged, partition_by, scan_started_ns=scan_started_ns)
 
 
-def _prune_part_year(
-    df: DataFrame, t1_ns: int | None, t2_ns: int | None
-) -> DataFrame:
-    """Derive part_year partition bounds from an ns time range, THEN drop
-    the column. Catalyst cannot infer ``part_year`` from a predicate on
-    the raw time column, so without this the Hive layout's advertised
-    partition pruning never fires and every year directory is scanned
-    (r6 review). The bounds are derived plan-side from the literals —
-    the filter lands as a PartitionFilter on the scan."""
-    import datetime as _dt
-
-    if "part_year" not in df.columns:
-        return df
-    def _year(ns: int) -> int | None:
-        try:
-            return _dt.datetime.fromtimestamp(
-                int(ns) / 1e9, tz=_dt.timezone.utc
-            ).year
-        except (OverflowError, OSError, ValueError):
-            return None  # sentinel beyond datetime range → no bound
-
-    pred = None
-    if t1_ns is not None and (y1 := _year(t1_ns)) is not None:
-        pred = F.col("part_year") >= F.lit(y1)
-    if t2_ns is not None and (y2 := _year(t2_ns)) is not None:
-        p2 = F.col("part_year") <= F.lit(y2)
-        pred = p2 if pred is None else (pred & p2)
-    if pred is not None:
-        # part_year=0 marks null-time rows (see _with_part_year): they
-        # match no time range, so excluding them is correct
-        df = df.filter(pred)
-    return df.drop("part_year")
-
-
 def _with_part_year(df: DataFrame, time_col: str) -> DataFrame:
     """Hive partition column from an ns-long time (constants.py:576 layout)."""
     return df.withColumn(
@@ -215,11 +193,8 @@ class EventBank:
     """
 
     def __init__(self, spark: SparkSession, path: str | os.PathLike):
-        from obsplus_spark.sources.index_cache import IndexCache
-
         self.table = _GenerationTable(spark, Path(path) / "event_index")
         self._payload = _GenerationTable(spark, Path(path) / "event_payload")
-        self._cache = IndexCache()
 
     def put_events(
         self,
@@ -290,43 +265,12 @@ class EventBank:
     update_index = put_events
 
     def read_index(self, **kwargs) -> DataFrame:
-        """FDSN-style query (``eventbank.py:225-261 read_index``).
-
-        Time-contained repeats with identical residual kwargs serve from
-        the superset cache (same semantics as WaveBank's; events are point
-        times so the trim is a ``time`` range filter).
-        """
-
-        kwargs = dict(kwargs)
-        kwargs_start = kwargs.pop("starttime", None)
-        kwargs_end = kwargs.pop("endtime", None)
-
-        def build(t1, t2):
-            df = self.table.read()
-            df = _prune_part_year(df, t1, t2)
-            return fdsn_event_filter(df, starttime=t1, endtime=t2, **kwargs)
-
-        if kwargs.get("limit") is not None:
-            # limited queries are not cache-shareable (the cached superset
-            # would re-limit after trimming, changing semantics)
-            return build(kwargs_start, kwargs_end)
-
-        def trim(df, t1, t2):
-            from pyspark.sql import functions as F
-
-            out = df
-            if t1 is not None:
-                out = out.filter(F.col("time") > F.lit(int(t1)))
-            if t2 is not None:
-                out = out.filter(F.col("time") < F.lit(int(t2)))
-            return out
-
-        key = tuple(sorted((k, str(v)) for k, v in kwargs.items()))
-        meta = self.table._read_meta()
-        stamp = (meta["generation"], meta["last_updated_ns"])
-        return self._cache.get(
-            kwargs_start, kwargs_end, key, stamp, build, trim
-        )
+        """FDSN-style query (``eventbank.py:225-261 read_index``): the
+        current generation's relation under one compiled predicate
+        (:func:`~obsplus_spark.plans.predicates.fdsn_event_filter`), with
+        the ``part_year`` partition bounds folded in. Each call reads the
+        parquet relation afresh; nothing is cached between queries."""
+        return fdsn_event_filter(self.table.read(), **kwargs)
 
     def get_events(self, **kwargs) -> DataFrame:
         """Full event payload for an index query.
@@ -360,11 +304,8 @@ class WaveBank:
     buffer_ns = 1_000_000_000
 
     def __init__(self, spark: SparkSession, path: str | os.PathLike):
-        from obsplus_spark.sources.index_cache import IndexCache
-
         self.table = _GenerationTable(spark, Path(path) / "waveform_index")
         self._payload = _GenerationTable(spark, Path(path) / "waveform_data")
-        self._cache = IndexCache()
 
     def put_waveforms(self, traces: DataFrame) -> "WaveBank":
         """Sink trace rows (samples included) and refresh the index.
@@ -404,9 +345,7 @@ class WaveBank:
     ) -> DataFrame:
         """Indexed read of stored traces, trimmed (and merged) to the window
         (``wavebank.py:616-647 get_waveforms`` → ``_prep_output_stream``)."""
-        from obsplus_spark.functions.strings import glob_match
         from obsplus_spark.operators.waveforms import merge_traces, trim_traces
-        from obsplus_spark.plans.predicates import interval_overlap
         from obsplus_spark.schemas import LARGEDT_NS, SMALLDT_NS
 
         if not self._payload.exists():
@@ -417,16 +356,9 @@ class WaveBank:
                 "locate the source files instead."
             )
         df = self._payload.read().drop("part_year", "_trace_key")
-        pred = interval_overlap(starttime, endtime, buffer_ns=self.buffer_ns)
-        for col, pat in (
-            ("network", network),
-            ("station", station),
-            ("location", location),
-            ("channel", channel),
-        ):
-            if pat is not None:
-                pred = pred & glob_match(col, pat)
-        out = df.filter(pred)
+        out = df.where(self._where(
+            (network, station, location, channel), starttime, endtime
+        ))
         if merge:
             out = merge_traces(out)
         t1 = SMALLDT_NS if starttime is None else starttime
@@ -453,6 +385,17 @@ class WaveBank:
         )
         return self
 
+    def _where(self, patterns: tuple, starttime, endtime) -> str:
+        """SQL text: interval overlap with the edge buffer AND a glob match
+        per given NSLC pattern."""
+        preds = [interval_overlap_sql(starttime, endtime, buffer_ns=self.buffer_ns)]
+        preds.extend(
+            glob_match_sql(col, pat)
+            for col, pat in zip(("network", "station", "location", "channel"), patterns)
+            if pat is not None
+        )
+        return sql_and(preds)
+
     def read_index(
         self,
         network: str | None = None,
@@ -464,39 +407,21 @@ class WaveBank:
     ) -> DataFrame:
         """Indexed scan with pushed-down time + NSLC predicates
         (``wavebank.py:329-361``): interval **overlap** with the 1 s edge
-        buffer, glob matches on codes. Repeated queries inside an already-
-        read span serve from the superset cache (``utils/bank.py:159-196``
-        semantics) — a hit scans cached in-memory partitions, no parquet.
+        buffer, glob matches on codes — one SQL ``where`` over the current
+        generation's relation. Each call reads the parquet relation
+        afresh; nothing is cached between queries.
         """
-        patterns = (network, station, location, channel)
-
-        def build(t1, t2):
-            df = self.table.read()
-            # partition pruning: part_year derives from the trace START,
-            # so only the UPPER bound is safe for an overlap query (a
-            # trace starting in an earlier year can still overlap t1;
-            # one that starts after t2+buffer cannot overlap at all)
-            df = _prune_part_year(
-                df,
-                None,
-                None if t2 is None else int(t2) + self.buffer_ns,
-            ).drop("_idx_key")
-            pred = interval_overlap(t1, t2, buffer_ns=self.buffer_ns)
-            for col, pat in zip(("network", "station", "location", "channel"), patterns):
-                if pat is not None:
-                    pred = pred & glob_match(col, pat)
-            return df.filter(pred)
-
-        def trim(df, t1, t2):
-            return df.filter(
-                interval_overlap(t1, t2, buffer_ns=self.buffer_ns)
-            )
-
-        meta = self.table._read_meta()
-        stamp = (meta["generation"], meta["last_updated_ns"])
-        return self._cache.get(
-            starttime, endtime, patterns, stamp, build, trim
+        where = self._where((network, station, location, channel), starttime, endtime)
+        # partition pruning: part_year derives from the trace START, so
+        # only the UPPER bound is safe for an overlap query (a trace
+        # starting in an earlier year can still overlap t1; one that
+        # starts after t2+buffer cannot overlap at all)
+        years = part_year_bounds(
+            None, None if endtime is None else int(endtime) + self.buffer_ns
         )
+        if years:
+            where = sql_and([years, where])
+        return self.table.read().where(where).drop("part_year", "_idx_key")
 
     # -- index analytics (delegate to the operator layer) --------------------
     def availability(self, **kwargs) -> DataFrame:

@@ -1,4 +1,14 @@
-"""Superset-containment query cache for bank index reads.
+"""Superset-containment query cache for bank index reads — no longer used.
+
+No engine code calls :class:`IndexCache`: ``EventBank.read_index`` and
+``WaveBank.read_index`` return their filtered relation directly and
+persist nothing, because persisting each miss cost more than the repeats
+it served (see ROADMAP item 1). The module stays only because the
+benchmark tracer (``perfbench/trace.py``) imports the class and patches
+``IndexCache.get``, so its ``index_cache.*`` keys read 0. Delete it once
+the tracer drops that import.
+
+What it did:
 
 Mirror of the reference's ``_IndexCache`` (``utils/bank.py:159-196``): keep
 the last N index queries; a new query whose time range is **contained** in

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from obsplus_spark.functions.sqltext import sql_ident, sql_literal
 from obsplus_spark.operators.joins import interval_overlap_join
 from obsplus_spark.schemas import LARGEDT_NS
 
@@ -49,8 +50,10 @@ class Fetcher:
         def _df(x):
             # honor the documented contract: bank facades resolve to
             # their index DataFrame here (r6 review — the methods below
-            # call DataFrame ops directly)
-            return x.read_index() if hasattr(x, "read_index") else x
+            # call DataFrame ops directly). The lookup is on the type: a
+            # DataFrame's own attribute lookup falls back to its columns,
+            # a schema fetch over py4j for every fresh frame.
+            return x.read_index() if hasattr(type(x), "read_index") else x
 
         self.events = _df(events)
         self.stations = _df(stations)
@@ -59,8 +62,8 @@ class Fetcher:
 
     # -- reference-time strategies (fetcher.py:328 reference_funcs) ----------
     def _origin_reference(self) -> DataFrame:
-        ev = self.events.select("event_id", F.col("time").alias("ref_time"))
-        st = self.stations.select(*NSLC, "start_date", "end_date")
+        ev = self.events.selectExpr("event_id", "`time` AS ref_time")
+        st = self.stations.selectExpr(*NSLC, "start_date", "end_date")
         return ev.crossJoin(F.broadcast(st))
 
     def _phase_reference(self, phase: str) -> DataFrame:
@@ -91,20 +94,20 @@ class Fetcher:
             ref = self._phase_reference(reference)
         else:
             raise ValueError(f"unknown reference {reference!r}")
-        win = ref.filter(F.col("ref_time").isNotNull()).select(
+        # SQL text throughout: a few py4j round trips per step instead of
+        # one per Column node
+        win = ref.where("ref_time IS NOT NULL").selectExpr(
             "event_id",
             *NSLC,
-            (F.col("ref_time") - time_before).alias("starttime"),
-            (F.col("ref_time") + time_after).alias("endtime"),
+            f"ref_time - {sql_literal(time_before)} AS starttime",
+            f"ref_time + {sql_literal(time_after)} AS endtime",
             "start_date",
             "end_date",
         )
         # availability pruning (fetcher.py:522-535): channel epoch must
         # overlap the window; null end_date = open epoch
-        open_end = F.coalesce(F.col("end_date"), F.lit(LARGEDT_NS))
-        return win.filter(
-            (F.col("start_date") < F.col("endtime"))
-            & (open_end > F.col("starttime"))
+        return win.where(
+            f"start_date < endtime AND coalesce(end_date, {LARGEDT_NS}) > starttime"
         ).drop("start_date", "end_date")
 
     def yield_event_waveforms(
@@ -128,15 +131,15 @@ class Fetcher:
             on=NSLC,
             bucket=bucket,
         )
-        return joined.select(
-            F.col("l.event_id").alias("event_id"),
-            *[F.col(f"l.{c}").alias(c) for c in NSLC],
-            F.col("l.starttime").alias("window_start"),
-            F.col("l.endtime").alias("window_end"),
-            F.col("r.starttime").alias("seg_start"),
-            F.col("r.endtime").alias("seg_end"),
+        return joined.selectExpr(
+            "l.event_id AS event_id",
+            *[f"l.{c} AS {c}" for c in NSLC],
+            "l.starttime AS window_start",
+            "l.endtime AS window_end",
+            "r.starttime AS seg_start",
+            "r.endtime AS seg_end",
             *[
-                F.col(f"r.{c}").alias(c)
+                f"{sql_ident('r.' + c)} AS {sql_ident(c)}"
                 for c in self.index.columns
                 if c not in NSLC + ["starttime", "endtime"]
             ],

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import gc
+
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME
 
 
 @pytest.fixture(scope="session")
@@ -9,6 +12,35 @@ def spark():
 
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture()
+def py4j_commands(spark):
+    """``py4j_commands(fn)`` returns ``(fn(), commands fn sent over py4j)``.
+
+    Counted by wrapping the gateway client's ``send_command``. Memory
+    commands (``MEMORY_COMMAND_NAME``, the detach py4j's finalizers send
+    for JavaObjects released anywhere in the process) are not counted,
+    and a ``gc.collect()`` before the window flushes the backlog, so the
+    count is the plan-building calls ``fn`` itself made.
+    """
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn):
+        gc.collect()
+        orig = client.send_command
+        sent = []
+
+        def counting(command, *a, **kw):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                sent.append(1)
+            return orig(command, *a, **kw)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(client, "send_command", counting)
+            return fn(), len(sent)
+
+    return count
 
 
 @pytest.fixture(scope="session")

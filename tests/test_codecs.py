@@ -4,7 +4,6 @@ import numpy as np
 import pytest
 
 from obsplus_spark.operators.codecs import (
-    audio_features,
     decode_bmp,
     decode_ppm,
     decode_wav,
@@ -75,11 +74,6 @@ def test_feature_determinism_and_dim():
     f1, f2 = image_features(img), image_features(img)
     assert f1 == f2 and len(f1) == 16
     assert f1[0] == 10.0 and abs(f1[2] - 128 / 255) < 1e-9
-    s = np.sin(np.linspace(0, 20 * np.pi, 1000)).reshape(-1, 1)
-    a = audio_features(s, 1000)
-    assert len(a) == 16
-    assert abs(a[0] - 1.0) < 1e-9  # duration
-    assert abs(a[1] - np.sqrt(0.5)) < 0.01  # sine rms
 
 
 def test_ppmv_roundtrip_and_seek_sampling():

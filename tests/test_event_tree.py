@@ -529,23 +529,7 @@ def test_reference_time_tolerates_timeless_picks(spark):
     assert pk["event_time"] == 5 and pk["time"] is None
 
 
-def _py4j_commands(spark, fn):
-    """(result of ``fn()``, py4j commands it sent), counted by wrapping
-    the gateway client's ``send_command``."""
-    client = spark.sparkContext._gateway._gateway_client
-    orig = client.send_command
-    sent = []
-
-    def counting(*a, **kw):
-        sent.append(1)
-        return orig(*a, **kw)
-
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(client, "send_command", counting)
-        return fn(), len(sent)
-
-
-def test_events_to_df_reuses_projection_per_schema(spark, full_tree):
+def test_events_to_df_reuses_projection_per_schema(py4j_commands, full_tree):
     """A repeat call on a tree of the same schema skips rebuilding the
     flattening projection: two ``select``s, not a thousand round trips,
     and the same rows as the call that built it."""
@@ -553,14 +537,14 @@ def test_events_to_df_reuses_projection_per_schema(spark, full_tree):
 
     # a schema no other test flattens, so the first call below builds
     batch = full_tree.withColumn("batch", F.lit("b1"))
-    first, n_first = _py4j_commands(spark, lambda: events_to_df(batch))
-    second, n_second = _py4j_commands(spark, lambda: events_to_df(batch))
+    first, n_first = py4j_commands(lambda: events_to_df(batch))
+    second, n_second = py4j_commands(lambda: events_to_df(batch))
     assert n_first > 500, f"first call sent {n_first} commands"
     assert n_second <= 60, f"repeat call sent {n_second} commands"
     assert second.collect() == first.collect()
     # a new DataFrame of the same schema reuses the projection too
     other = full_tree.withColumn("batch", F.lit("b2"))
-    again, n_again = _py4j_commands(spark, lambda: events_to_df(other))
+    again, n_again = py4j_commands(lambda: events_to_df(other))
     assert n_again <= 60, f"same-schema call sent {n_again} commands"
     assert again.collect() == first.collect()
 
