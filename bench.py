@@ -182,11 +182,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "plan_build_sec": round(sum(builds.values()), 4),
-        # per-query construction cost. NB: queries that run
-        # driver actions during construction (dedup_clusters'
-        # convergence loop) count that execution here, not in
-        # `queries` — they also persist, so their timed reps rebuild
-        # and the headline still pays it.
+        # per-query construction cost. NB: a query that runs driver
+        # actions during construction counts that execution here, not
+        # in `queries`.
         "builds": builds,
         # persist/cache/localCheckpoint calls made by each query's
         # construction (nonzero only): the queries rebuilt on every rep

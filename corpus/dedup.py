@@ -188,7 +188,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = near_duplicates(
         docs, n_hashes=8, bands=2, shingle_size=3, threshold=0.2
     ).select("id1", "id2")
-    # lazy fixed-round mode: near-dup components are star/clique shaped
+    # fixed-round plan: near-dup components are star/clique shaped
     # (the seed aggregate already covers distance-1; each round adds a
     # hop). r12 guard-probe measurement: max_iterations=1 already passes
     # the runtime fixed-point guard at sf0.001 AND sf0.01 AND sf0.1
@@ -198,13 +198,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never silently diverge from the oracle's exact recursive closure.
     # Each dropped round saves one edge join + one agg exchange — two
     # fewer stage barriers per rep here and in the six downstream
-    # eval-family queries (guide §2.4). Unlike convergence mode this
-    # keeps plan construction action-free — the convergence probe's
-    # per-round collects were ~2.8 s of driver time charged to every
-    # plan build. A production pipeline on a graph of unknown diameter
-    # should pass check_convergence=True (or lazy mode's
-    # localCheckpoint chunking for bounded-depth batches).
-    return dedup_clusters(pairs, max_iterations=2, check_convergence=False)
+    # eval-family queries (guide §2.4). The build stays action-free — a
+    # per-round convergence probe's collects were ~2.8 s of driver time
+    # charged to every plan build. A production pipeline on a graph of
+    # unknown diameter raises max_iterations until the guard stays quiet.
+    return dedup_clusters(pairs, max_iterations=2)
 
 
 def _clusters_sql() -> str:

@@ -884,8 +884,8 @@ def q_prune_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     other_edges = evf.filter(rid != F.col("df_id")).select(
         F.col("df_id").alias("parent"), rid.alias("child")
     )
-    # The forest depth is 2 by construction, so the lazy fixed-iteration
-    # mode applies: the whole prune is one job, no driver-side counts.
+    # The forest depth is 2 by construction, so two rounds reach the
+    # fixed point: the whole prune is one job, no driver-side counts.
     # Ownership is a strict forest (each child one parent, unique ids) →
     # assume_forest skips every per-round dedup shuffle, and ids_only
     # skips the payload-recovery semi join (only the id set is returned).
@@ -895,8 +895,7 @@ def q_prune_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_shingle_cache(edges)
     nodes = ev.select("resource_id", "evaluation_status")
     alive = prune_rejected(
-        nodes, edges, max_iterations=2, check_convergence=False,
-        assume_forest=True, ids_only=True,
+        nodes, edges, max_iterations=2, assume_forest=True, ids_only=True,
     )
     return alive.select("resource_id")
 

@@ -11,12 +11,13 @@ Three registries, one invariant set:
    The production analogue is caching hot dimension tables: at 100 TB
    you cache dims, not facts.
 
-2. **Rings** (``_SHINGLE_CACHES``, ``_ASSIGNMENT_CACHES``,
-   ``_FRONTIER_CACHES``): bounded per-session FIFOs of operator-internal
-   persists (shingle/digest tables, IVF assignment frames, prune
-   frontiers). The newest ``ring_max`` stay warm — the current pipeline
-   plus one predecessor a caller may still be executing — older ones
-   unpersist lazily, so a loop of scans never strands executor memory.
+2. **Rings** (``_SHINGLE_CACHES``, ``_ASSIGNMENT_CACHES``): two
+   bounded per-session FIFOs of operator-internal persists
+   (shingle/digest tables and graph edge frames; IVF assignment
+   frames). The newest ``RING_CAPACITY`` (2) stay warm — the current
+   pipeline plus one predecessor a caller may still be executing —
+   older ones unpersist lazily, so a loop of scans never strands
+   executor memory.
 
 3. **Private chains** (``_PRIVATE_CHAINS``): per-``(session, group)``
    multi-frame persist chains (e.g. ``k_core_peel``'s per-round edge
@@ -39,7 +40,7 @@ Invariants (each pinned in ``tests/test_cache.py``):
   chain may end up uncached through ring eviction — ring evictions
   re-persist the session's chain frames (the same canonical-plan
   hazard as above, across registries).
-- **Boundedness**: rings hold ≤ capacity frames; one chain per group;
+- **Boundedness**: rings hold ≤ ``RING_CAPACITY`` frames; one chain per group;
   dead sessions drop their table-cache entries.
 """
 
@@ -52,6 +53,9 @@ from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 
+#: frames each ring keeps persisted: the current pipeline plus one predecessor
+RING_CAPACITY = 2
+
 #: base-scan cache: (session id, sf_dir, table name) -> persisted frame
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
@@ -60,9 +64,6 @@ _SHINGLE_CACHES: dict[int, list] = {}
 
 #: per-session ring of persisted IVF-assignment frames (newest last)
 _ASSIGNMENT_CACHES: dict[int, list] = {}
-
-#: per-session ring of persisted ``prune_rejected`` frontiers (newest last)
-_FRONTIER_CACHES: dict[int, list] = {}
 
 #: operator-private persist chains, keyed (session id, group)
 _PRIVATE_CHAINS: dict[tuple, list] = {}
@@ -92,19 +93,13 @@ def _reprotect_chains(session_id: int) -> None:
                 _log.debug("chain re-persist failed: %r", exc)
 
 
-def _register_in_ring(
-    rings: dict[int, list], arr: DataFrame, ring_max: int
-) -> None:
-    """Shared FIFO body for both ring families. ``ring_max`` is the
-    capacity AS OF THIS registration: an operator persisting a chain of
-    N interdependent frames passes N+1 so its own registrations don't
-    evict frames the pending query still needs; later default-capacity
-    registrations then shrink the ring back."""
+def _register_in_ring(rings: dict[int, list], arr: DataFrame) -> None:
+    """Shared FIFO body for both ring families."""
     sid = id(arr.sparkSession)
     ring = rings.setdefault(sid, [])
     ring.append(arr)
     evicted = False
-    while len(ring) > max(int(ring_max), 1):
+    while len(ring) > RING_CAPACITY:
         try:
             ring.pop(0).unpersist()
             evicted = True
@@ -120,25 +115,18 @@ def _register_in_ring(
         _reprotect_chains(sid)
 
 
-def register_shingle_cache(arr: DataFrame, ring_max: int = 2) -> None:
+def register_shingle_cache(arr: DataFrame) -> None:
     """Register an operator-internal persist in the shingle/digest ring
     (near-dup pipelines, graph edge frames, tf vectors, ...)."""
-    _register_in_ring(_SHINGLE_CACHES, arr, ring_max)
+    _register_in_ring(_SHINGLE_CACHES, arr)
 
 
-def register_assignment_cache(arr: DataFrame, ring_max: int = 2) -> None:
+def register_assignment_cache(arr: DataFrame) -> None:
     """Register a persisted IVF/semantic-dedup assignment frame.
     Separate family from the shingle ring so a semantic-dedup loop and
     a text-dedup loop sharing a session don't evict each other's
     working set."""
-    _register_in_ring(_ASSIGNMENT_CACHES, arr, ring_max)
-
-
-def register_frontier_cache(arr: DataFrame, ring_max: int = 2) -> None:
-    """Register the final persisted frontier of a ``prune_rejected``
-    call (a small, already-materialized id set backing the returned
-    plan)."""
-    _register_in_ring(_FRONTIER_CACHES, arr, ring_max)
+    _register_in_ring(_ASSIGNMENT_CACHES, arr)
 
 
 def register_private_chain(session, group: str, frames: list) -> None:

@@ -230,8 +230,6 @@ def minhash_signatures(
     text_col: str = "text",
     n_hashes: int = 16,
     shingle_size: int = 3,
-    shingles_df: DataFrame | None = None,
-    with_size: bool = False,
     digest_arrays_df: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document: lane ``j`` = min over shingles of
@@ -248,52 +246,27 @@ def minhash_signatures(
     decides membership, so lane independence needs to be good, not
     perfect.
 
-    Two execution paths, identical results:
-
-    - no ``shingles_df``: **fully narrow** — each row derives its shingle
-      digest set (:func:`shingle_digest_array`) and takes the 16 lane
-      minima with ``array_min``. Zero explode, zero shuffle: the signature
-      is a per-row expression at any scale (documents are bounded; the
-      corpus is not). Pass ``digest_arrays_df`` (e.g. a persisted digest
-      table shared with the Jaccard stage) to reuse the digest pass.
-    - with ``shingles_df`` (a shared exploded table, e.g. persisted by a
-      pipeline that also needs the long form): one wide aggregate —
-      n_hashes ``min`` aggregations, all map-side combinable.
+    **Fully narrow**: each row derives its shingle digest set
+    (:func:`shingle_digest_array`) and takes the lane minima with
+    ``array_min``. Zero explode, zero shuffle: the signature is a per-row
+    expression at any scale (documents are bounded; the corpus is not).
+    Pass ``digest_arrays_df`` (e.g. a persisted digest table shared with
+    the Jaccard stage) to reuse the digest pass.
     """
     _check_lanes(n_hashes)
-    if shingles_df is None:
-        arr = (
-            digest_arrays_df
-            if digest_arrays_df is not None
-            else shingle_digest_array(
-                df, id_col, text_col, shingle_size, drop_empty=True
-            )
+    arr = (
+        digest_arrays_df
+        if digest_arrays_df is not None
+        else shingle_digest_array(
+            df, id_col, text_col, shingle_size, drop_empty=True
         )
-        # one selectExpr call with string expressions — the Column-object
-        # lane loop cost ~0.3 s of py4j round-trips per plan build.
-        # Numeric lanes: 8 hex chars at stride-2 offset → uint32-as-long,
-        # min over longs — no 32-char rotated-string allocations, and the
-        # per-element comparison is one integer op instead of a lex scan
-        cols = _lane_exprs(n_hashes)
-        if with_size:
-            cols.append("CAST(size(shingles) AS BIGINT) AS n_shingles")
-        return arr.selectExpr(id_col, *cols)
-    sh = shingles_df.withColumn(
-        "_h", F.expr("concat(md5(shingle), substring(md5(shingle), 1, 6))")
     )
-    aggs = [
-        F.expr(
-            f"min(CAST(conv(substring(_h, {2 * j + 1}, 8), 16, 10)"
-            f" AS BIGINT)) AS mh_{j}"
-        )
-        for j in range(n_hashes)
-    ]
-    if with_size:
-        # per-doc shingle count rides the same aggregate — downstream
-        # Jaccard needs it and this saves a whole extra pass over the
-        # shingle table
-        aggs.append(F.count(F.lit(1)).alias("n_shingles"))
-    return sh.groupBy(id_col).agg(*aggs)
+    # one selectExpr call with string expressions — the Column-object
+    # lane loop cost ~0.3 s of py4j round-trips per plan build.
+    # Numeric lanes: 8 hex chars at stride-2 offset → uint32-as-long,
+    # min over longs — no 32-char rotated-string allocations, and the
+    # per-element comparison is one integer op instead of a lex scan
+    return arr.selectExpr(id_col, *_lane_exprs(n_hashes))
 
 
 def lsh_candidate_pairs(
@@ -401,23 +374,17 @@ def pair_jaccard_arrays(
     pairs: DataFrame,
     id_col: str = "doc_id",
     arr_col: str = "shingles",
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs, from per-doc arrays.
 
     ``|∩|`` is ``size(array_intersect(a, b))`` after joining each pair to
     its two shingle arrays — with the LSH collision set broadcast, both
-    joins are map-side and nothing reshuffles the corpus. At a scale where
-    the pair table outgrows broadcast, pass ``broadcast_pairs=False`` and
-    the same plan shuffles on the id keys (each doc array moves at most
-    once per side).
+    joins are map-side and nothing reshuffles the corpus.
     """
     sa = shingle_arrays.selectExpr(f"{id_col} AS id1", f"{arr_col} AS _sh1")
     sb = shingle_arrays.selectExpr(f"{id_col} AS id2", f"{arr_col} AS _sh2")
-    p = F.broadcast(pairs) if broadcast_pairs else pairs
-    j1 = p.join(sa, "id1")
-    j1 = F.broadcast(j1) if broadcast_pairs else j1
-    out = j1.join(sb, "id2")
+    j1 = F.broadcast(pairs).join(sa, "id1")
+    out = F.broadcast(j1).join(sb, "id2")
     # two projections so array_intersect provably evaluates once per pair
     # (one projection repeating it three times leans on codegen CSE, which
     # does not cover interpreted array exprs — A/B measured ~10% off the
@@ -615,9 +582,6 @@ def dedup_clusters(
     id1_col: str = "id1",
     id2_col: str = "id2",
     max_iterations: int = 6,
-    check_convergence: bool = False,
-    checkpoint_every: int = 8,
-    on_nonconverged: str = "error",
 ) -> DataFrame:
     """Connected components over near-duplicate pairs: each member id is
     labeled with the **minimum id reachable** in its component
@@ -635,67 +599,36 @@ def dedup_clusters(
     combinable), not a join, so skew costs one reducer's worth of
     partial-agg merges, not a shuffle blow-up.
 
-    Two modes mirroring :func:`~obsplus_spark.operators.surgery.prune_rejected`:
-    ``check_convergence=True`` persists each round's labels, pays one
-    scalar digest action per round, and exits at the first stable round —
-    each of those actions is a **full-cluster barrier** (every executor
-    drains before the driver inspects the 1-row digest), so at 100 TB
-    the convergence probe costs a synchronization per round on top of
-    the round itself. The **default is therefore the lazy fixed-round
-    mode** (``check_convergence=False``): the plan builds with ZERO
-    driver actions (below ``checkpoint_every``), correct whenever the
-    component diameter is within ``max_iterations`` — which near-dup
-    components (star/clique-shaped, diameter ≤ 3-4) satisfy with margin
-    at the default bound of 6; the default bound deliberately sits below
-    ``checkpoint_every`` so the default build is entirely action-free.
-    Raise ``max_iterations`` for deeper graphs (checkpoints bound the
-    lineage past round 8), or reach for convergence mode when the
-    component shape is genuinely unknown (e.g. path-like link
-    graphs).
+    The ``max_iterations`` rounds build **lazily** as one SQL statement
+    over the persisted edge frame: zero driver actions at build time,
+    correct whenever the component diameter is within the bound — which
+    near-dup components satisfy with margin at the default of 6. A
+    per-round convergence probe would be a **full-cluster barrier**
+    (every executor drains before the driver inspects a 1-row digest),
+    so none is taken; raise ``max_iterations`` for deeper graphs.
 
-    **Truncation guard — an undersized bound is LOUD by default.** A
-    chain-shaped family (successive document revisions, each pairing
-    only with its neighbor) of diameter > ``max_iterations`` would keep
-    non-minimal labels at the far end, silently splitting the component
-    into several clusters. With the default ``on_nonconverged="error"``
-    the lazy plan appends ONE extra guarded propagation round whose
-    aggregate also reads each node's current label off its self-loop
-    rows (the label table stays referenced exactly once; the build
-    stays action-free): any node whose label would still improve hits
-    ``raise_error`` at RUNTIME, aborting the job with a message naming
-    the bound instead of emitting split components. At a fixed point
-    the guard round re-emits the labels unchanged, so its only cost is
-    one extra join+agg. Pass ``on_nonconverged="ignore"`` to
-    explicitly accept possibly-truncated components (intentionally
-    bounded clustering radius), or ``check_convergence=True`` for the
-    eager verified fixed point — that eager mode needs no guard round.
-    ``check_convergence=False`` lazily builds ``max_iterations`` rounds
-    (zero driver actions for bounds below ``checkpoint_every`` — correct
-    iff the true diameter is within the bound). Beyond-toy bounds in
-    lazy mode checkpoint the label table every ``checkpoint_every``
-    rounds (``localCheckpoint`` — executor-local, no HDFS dir): an
-    n-round lazily-stacked join+agg chain is an n-deep plan whose
-    Catalyst analysis cost grows quadratically and whose failure
-    recovery replays everything; the checkpoint bounds both. Rounds at
-    or past a checkpoint do run jobs at build time — that is the price
-    of bounded lineage, and only paid when the caller asks for a deep
-    bound.
+    **Truncation guard — an undersized bound is LOUD.** A chain-shaped
+    family (successive document revisions, each pairing only with its
+    neighbor) of diameter > ``max_iterations`` would keep non-minimal
+    labels at the far end, silently splitting the component into several
+    clusters. The statement therefore ends in ONE extra guarded
+    propagation round whose aggregate also reads each node's current
+    label off its self-loop rows (the label table stays referenced
+    exactly once; the build stays action-free): any node whose label
+    would still improve hits ``raise_error`` at RUNTIME, aborting the
+    job with a message naming the bound instead of emitting split
+    components. At a fixed point the guard round re-emits the labels
+    unchanged, so its only cost is one extra join+agg.
 
     Returns (id, cluster_id), one row per id that appears in ``pairs``.
     """
     from obsplus_spark.util import sql_over
 
-    if on_nonconverged not in ("error", "ignore"):
-        raise ValueError(
-            "on_nonconverged must be 'error' or 'ignore',"
-            f" got {on_nonconverged!r}"
-        )
-
     # undirected edge list WITH SELF-LOOPS, persisted once: the loop rows
     # carry each node's own label through every propagation round, which
     # lets a round be `agg(join(E, L))` — the label table referenced
     # exactly ONCE per round. (A formulation that also unions/left-joins
-    # L references it twice per round, and in the lazy mode below that
+    # L references it twice per round, and in the lazy plan below that
     # doubles the plan per round — 2^iterations evaluations of the whole
     # upstream pair pipeline.)
     # ONE reference to the pair pipeline: each pair explodes in-row to its
@@ -728,41 +661,25 @@ def dedup_clusters(
     edges = edges.persist()
     _register_shingle_cache(edges)  # bounded per-session ring releases it
 
-    def rounds_sql(n: int, seeded: bool) -> str:
-        """CTE chain of ``n`` propagation rounds in ONE SQL statement —
-        one Catalyst analysis for the whole chunk (per-round chained
-        Datasets re-analyzed the deepening tree ~3× per round, the
-        dominant cost of deep lazy bounds). ``seeded=False`` starts from
-        the aggregate seed (= round 1: min over direct neighbors, the
-        self-loop contributing the node's own id); ``seeded=True``
-        continues from a prior label view ``{{l}}``."""
-        seed = (
-            "SELECT id, cluster_id FROM {l}"
-            if seeded
-            else "SELECT _dst AS id, min(_src) AS cluster_id"
-            " FROM {e} GROUP BY _dst"
+    # All rounds plus the guard in ONE SQL statement — one Catalyst
+    # analysis (per-round chained Datasets re-analyzed the deepening tree
+    # ~3× per round). l0 is the aggregate seed (= round 1: min over
+    # direct neighbors, the self-loop contributing the node's own id).
+    # The guard g is the next round — min over in-neighbors — plus the
+    # node's OWN current label read off its self-loop rows: a
+    # still-improving label means the bound truncated a component.
+    n = int(max_iterations)
+    ctes = [
+        "l0 AS (SELECT _dst AS id, min(_src) AS cluster_id"
+        " FROM {e} GROUP BY _dst)"
+    ]
+    for i in range(1, n + 1):
+        ctes.append(
+            f"l{i} AS (SELECT e._dst AS id, min(l.cluster_id) AS"
+            f" cluster_id FROM {{e}} e JOIN l{i - 1} l"
+            " ON l.id = e._src GROUP BY e._dst)"
         )
-        ctes = [f"l0 AS ({seed})"]
-        for i in range(1, n + 1):
-            ctes.append(
-                f"l{i} AS (SELECT e._dst AS id, min(l.cluster_id) AS"
-                f" cluster_id FROM {{e}} e JOIN l{i - 1} l"
-                " ON l.id = e._src GROUP BY e._dst)"
-            )
-        return "WITH " + ",\n".join(ctes) + f"\nSELECT id, cluster_id FROM l{n}"
-
-    def guard_tail(n: int) -> str:
-        """Guarded extra round appended to a rounds chain: min over
-        in-neighbors (= the next label) plus the node's OWN current
-        label read off its self-loop rows — one join+agg, the label
-        table referenced once, zero build-time actions. A
-        still-improving label means the bound truncated a component:
-        ``raise_error`` at RUNTIME instead of emitting silently split
-        clusters; at a fixed point the CASE re-emits the labels
-        unchanged. Fused into the SAME statement as the rounds (one
-        Catalyst analysis, not two — plan-build cost is on the bench's
-        rebuild path)."""
-        return f"""
+    sql = "WITH " + ",\n".join(ctes) + f"""
         , g AS (
           SELECT e._dst AS id,
                  min(l.cluster_id) AS _new,
@@ -774,66 +691,15 @@ def dedup_clusters(
         SELECT id,
                CASE WHEN _new < _own THEN raise_error(concat(
                    'dedup_clusters: not converged within',
-                   ' max_iterations={int(max_iterations)} rounds',
+                   ' max_iterations={n} rounds',
                    ' (component containing node ',
                    CAST(id AS STRING),
                    ' is deeper than the bound); raise',
-                   ' max_iterations, pass check_convergence=True,',
-                   ' or opt in with on_nonconverged=''ignore'''))
+                   ' max_iterations'))
                ELSE _new END AS cluster_id
         FROM g
         """
-
-    def with_guard(sql: str, n: int) -> str:
-        # swap the chain's final SELECT for the guard round
-        return sql[: sql.rindex("\nSELECT id, cluster_id FROM")] + guard_tail(n)
-
-    if not check_convergence:
-        # chunk the rounds at checkpoint_every: within a chunk everything
-        # is one SQL statement; between chunks a localCheckpoint bounds
-        # lineage (and analysis cost) for deep diameter bounds
-        every = checkpoint_every or max_iterations
-        done = min(every, max_iterations)
-        guard = on_nonconverged == "error"
-        first = rounds_sql(done, seeded=False)
-        if guard and done == max_iterations:
-            return sql_over({"e": edges}, with_guard(first, done))
-        lbl = sql_over({"e": edges}, first)
-        while done < max_iterations:
-            lbl = lbl.localCheckpoint()
-            n = min(every, max_iterations - done)
-            chunk = rounds_sql(n, seeded=True)
-            done += n
-            if guard and done == max_iterations:
-                return sql_over(
-                    {"e": edges, "l": lbl}, with_guard(chunk, n)
-                )
-            lbl = sql_over({"e": edges, "l": lbl}, chunk)
-        return lbl
-
-    labels = sql_over({"e": edges}, rounds_sql(0, seeded=False))
-
-    def step(lbl: DataFrame) -> DataFrame:
-        # every node's next label = min over in-neighbors' labels
-        # (self-loop ⇒ its own label participates); one shuffle per round
-        return sql_over({"e": edges, "l": lbl}, rounds_sql(1, seeded=True))
-
-    lbl = labels.persist()
-    # change detector: 64-bit xor-fold of per-row (id, label) hashes —
-    # order-independent, overflow-free under ANSI mode, equal iff the
-    # label table is (2^-64-collision-)unchanged
-    digest = F.expr("bit_xor(xxhash64(id, cluster_id))")
-    prev_sum = lbl.agg(digest).collect()[0][0]
-    for _ in range(max_iterations):
-        nxt = step(lbl).persist()
-        new_sum = nxt.agg(digest).collect()[0][0]
-        old, lbl = lbl, nxt
-        old.unpersist(blocking=False)
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    _register_shingle_cache(lbl)  # bounded ring releases it later
-    return lbl
+    return sql_over({"e": edges}, sql)
 
 
 def _md5_u32_sql(id_col: str, salt: str) -> str:
@@ -842,11 +708,11 @@ def _md5_u32_sql(id_col: str, salt: str) -> str:
     ``('0x' || substr(md5(id || salt), 1, 8))::BIGINT``). Shared by
     :func:`hash_split` and :func:`weighted_sample` so the recipe cannot
     drift between its consumers."""
-    from obsplus_spark.util import sql_str_lit
+    from obsplus_spark.functions.sqltext import sql_literal
 
     return (
         f"CAST(conv(substring(md5(concat(CAST({id_col} AS STRING),"
-        f" '{sql_str_lit(salt)}')), 1, 8), 16, 10) AS BIGINT)"
+        f" {sql_literal(salt)})), 1, 8), 16, 10) AS BIGINT)"
     )
 
 
@@ -1022,10 +888,9 @@ def hash_downsample_per_group(
     compiles to WindowGroupLimit (rank pushed into the shuffle, no full
     sort of each group at scale).
     """
-    from obsplus_spark.util import sql_str_lit
+    from obsplus_spark.functions.sqltext import sql_literal
 
-    salt_sql = sql_str_lit(salt)  # SQL string-literal escape
-    h = f"md5(concat(CAST({id_col} AS STRING), '{salt_sql}'))"
+    h = f"md5(concat(CAST({id_col} AS STRING), {sql_literal(salt)}))"
     w = Window.partitionBy(*group_cols).orderBy(F.expr(h), F.col(id_col))
     return (
         df.withColumn("_rk", F.row_number().over(w))
@@ -1349,8 +1214,6 @@ def canonical_docs(
     id_col: str = "doc_id",
     quality_col: str = "quality",
     max_iterations: int = 6,
-    check_convergence: bool = False,
-    on_nonconverged: str = "error",
 ) -> DataFrame:
     """Survivor election per near-dup cluster: resolve connected
     components over the pair set (:func:`dedup_clusters`), then keep the
@@ -1361,11 +1224,10 @@ def canonical_docs(
     definition and never need the shuffle).
 
     Scale shape: component resolution is the dedup_clusters contract
-    (one hash-aggregate round per diameter step, action-free in the
-    default lazy mode, and inheriting its runtime truncation guard —
-    an undersized ``max_iterations`` raises instead of electing wrong
-    survivors on chain-shaped dup families; pass
-    ``on_nonconverged="ignore"`` to opt out); the election itself is
+    (one hash-aggregate round per diameter step, action-free at build
+    time, and inheriting its runtime truncation guard — an undersized
+    ``max_iterations`` raises instead of electing wrong survivors on
+    chain-shaped dup families); the election itself is
     ONE id-keyed join to pull
     quality + ONE cluster-keyed aggregate (``min_by`` over a (-quality,
     id) struct — no window, no second pass for the tie-break; negating
@@ -1376,12 +1238,7 @@ def canonical_docs(
 
     Output: (cluster_id, canonical_id, best_quality, n_members).
     """
-    labels = dedup_clusters(
-        pairs,
-        max_iterations=max_iterations,
-        check_convergence=check_convergence,
-        on_nonconverged=on_nonconverged,
-    )
+    labels = dedup_clusters(pairs, max_iterations=max_iterations)
     q = docs.select(
         F.col(id_col).alias("id"), F.col(quality_col).alias("_q")
     )
@@ -1670,7 +1527,6 @@ def fuzzy_decontaminate(
     bands: int = 4,
     shingle_size: int = 3,
     threshold: float = 0.5,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """FUZZY benchmark decontamination: corpus documents whose shingle
     sets are near-duplicates of an eval/benchmark document — MinHash-LSH
@@ -1683,9 +1539,9 @@ def fuzzy_decontaminate(
     fuzzy matching rather than gram lookups.
 
     Scale shape: both sides are signed ONCE off persisted shingle-digest
-    tables (shared by the banding and the verify); with
-    ``broadcast_benchmark`` the benchmark's band rows (4 narrow rows
-    per doc) ship map-side, so the corpus-side banding never shuffles.
+    tables (shared by the banding and the verify); the benchmark's band
+    rows (4 narrow rows per doc) broadcast, so the corpus-side banding
+    never shuffles.
     The verify stage is CANDIDATE-driven: the small pair list
     broadcasts into both digest joins, and the digest tables are never
     broadcast (a doc's digest array is ~40× its compressed text — a
@@ -1726,10 +1582,9 @@ def fuzzy_decontaminate(
         n_hashes=n_hashes, bands=bands, shingle_size=shingle_size,
         digest_arrays_df=bsh,
     ).alias("b")
-    bb_side = F.broadcast(bb) if broadcast_benchmark else bb
     cand = (
         cb.join(
-            bb_side,
+            F.broadcast(bb),
             (F.col("c.band") == F.col("b.band"))
             & (F.col("c.band_hash") == F.col("b.band_hash")),
         )
@@ -1997,15 +1852,13 @@ def phash_near_dup_wide(
     max_hamming: int = 16,
     id_col: str = "id",
     words_col: str = "words",
-    band_words: int = 1,
 ) -> DataFrame:
     """Image near-duplicate pairs from WIDE perceptual hashes — the
     corpus-scale escape for :func:`phash_near_dup`'s documented 16-bit
     band saturation: ``words_col`` holds the hash as an
     ``array<bigint>`` of 32-bit words (``codecs.average_hash_wide``;
-    e.g. 8 words = a 256-bit code) and each band is ``band_words``
-    consecutive words, so the band space is 2³² (or 2⁶⁴ at
-    ``band_words=2``) instead of 2¹⁶. RANDOM hashes then collide at
+    e.g. 8 words = a 256-bit code) and each band is one word, so the
+    band space is 2³² instead of 2¹⁶. RANDOM hashes then collide at
     ~n²/2³² candidate pairs — negligible out past billions of images —
     while 4×16-bit banding goes superlinear above n ≫ 2¹⁶ (measured:
     ``tools/bench_phash_scale.py``, 7.4× DuckDB at n=3.5M; the wide
@@ -2028,32 +1881,7 @@ def phash_near_dup_wide(
     d = int(max_hamming)
     if d < 0:
         raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
-    bw = int(band_words)
-    if bw not in (1, 2):
-        raise ValueError(f"band_words must be 1 or 2, got {band_words}")
-    if bw == 1:
-        band_expr = f"posexplode({words_col}) AS (band, band_hash)"
-    else:
-        # adjacent word pairs fold into one 64-bit band key (the high
-        # word shifts; arrays are 32-bit words so no overflow).
-        # ADVICE r10 #2: size()=0 must yield ZERO bands, matching
-        # band_words=1's posexplode-of-empty — a bare
-        # sequence(0, size/2 - 1) turns into the DESCENDING [0, -1]
-        # when size=0 (Spark sequence steps -1 when stop < start),
-        # minting bands -1/0 with NULL hashes that bucket every
-        # empty-hash row into spurious candidate pairs. Odd word
-        # counts: the trailing word does not participate in banding
-        # (rpb truncation) but still counts in the Hamming verify —
-        # pigeonhole recall then covers n_bands-1, not words/2.
-        band_expr = (
-            f"posexplode(CASE WHEN size({words_col}) >= 2 THEN"
-            f" transform("
-            f" sequence(0, CAST(size({words_col}) / 2 AS INT) - 1),"
-            f" i -> shiftleft(element_at({words_col}, 2 * i + 1), 32)"
-            f"      + element_at({words_col}, 2 * i + 2))"
-            f" ELSE CAST(array() AS ARRAY<BIGINT>) END"
-            f") AS (band, band_hash)"
-        )
+    band_expr = f"posexplode({words_col}) AS (band, band_hash)"
     banded = hashes.selectExpr(id_col, band_expr)
     pairs = _bucket_pairs_sparse(banded, id_col)
     a = hashes.selectExpr(f"{id_col} AS id1", f"{words_col} AS _wa")
@@ -2705,7 +2533,8 @@ def mixture_rebalance(
     Output: (source, n_docs, kept_docs, n_tokens, kept_tokens, weight,
     sample_rate, expected_tokens) — counts BIGINT, rate 6-dp DOUBLE.
     """
-    from obsplus_spark.util import ensure_parallelism, sql_over, sql_str_lit
+    from obsplus_spark.functions.sqltext import sql_literal
+    from obsplus_spark.util import ensure_parallelism, sql_over
 
     t = int(target_tokens)
     rep = float(max_repeat)
@@ -2715,7 +2544,7 @@ def mixture_rebalance(
         w_sql = "0.0D"
     else:
         arms = " ".join(
-            f"WHEN '{sql_str_lit(s)}'"
+            f"WHEN {sql_literal(s)}"
             f" THEN CAST({float(w)!r} AS DOUBLE)"
             for s, w in weights.items()
         )
@@ -2817,9 +2646,9 @@ def apply_mixture(
     )
     cols = ", ".join(f"d.{c}" for c in docs.columns)
     # guard the sequence: sequence(1, 0) is the DESCENDING [1, 0] on
-    # Spark (the band_words=2 lesson) — zero copies must mean an empty
-    # array, and the broadcast hint is safe by the plan's dimension
-    # cardinality
+    # Spark (it steps -1 when stop < start) — zero copies must mean an
+    # empty array, and the broadcast hint is safe by the plan's
+    # dimension cardinality
     n_copies = (
         f"CAST(floor(p._rate) AS INT)"
         f" + CASE WHEN ({u32} + 0.0D) / 4294967296.0D"
@@ -3881,7 +3710,6 @@ def gram_novelty(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    broadcast_reference: bool = False,
 ) -> DataFrame:
     """Per-document NOVELTY against a reference corpus: the fraction of
     the doc's DISTINCT ``n``-grams that never occur in the reference —
@@ -3898,9 +3726,9 @@ def gram_novelty(
 
     Scale shape: in-row gram formation + ``array_distinct`` per doc,
     one explode, ONE gram-keyed LEFT join against the reference's
-    DISTINCT gram table (set ``broadcast_reference=True`` ONLY when
-    the reference vocabulary is provably bounded — benchmark suites,
-    not sibling crawls), then one doc-keyed map-combined roll-up.
+    DISTINCT gram table (AQE picks the join strategy from its measured
+    size — no hint, since a sibling crawl's vocabulary is unbounded),
+    then one doc-keyed map-combined roll-up.
 
     Output: (id, n_grams, n_novel BIGINT, novelty DOUBLE 6-dp).
     """
@@ -3943,11 +3771,10 @@ def gram_novelty(
         .selectExpr(f"explode({gram_expr()}) AS g")
         .distinct()
     )
-    hint = "/*+ BROADCAST(r) */ " if broadcast_reference else ""
     return sql_over(
         {"d": d, "r": r},
         f"""
-        SELECT {hint}{id_col},
+        SELECT {id_col},
                CAST(count(1) AS BIGINT) AS n_grams,
                CAST(sum(CASE WHEN r.g IS NULL THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_novel,

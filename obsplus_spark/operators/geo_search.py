@@ -94,7 +94,6 @@ def spatial_join(
     right_lon: str = "longitude",
     max_distance_m: float | None = None,
     distance_col: str = "distance_m",
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Distance/azimuth table for location pairs (``SpatialCalculator``).
 
@@ -142,9 +141,8 @@ def spatial_join(
         hoisted = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
             F.least(F.lit(1.0), F.sqrt(a))
         )
-        rj = F.broadcast(rc) if broadcast_right else rc
         return (
-            lc.crossJoin(rj)
+            lc.crossJoin(F.broadcast(rc))
             .withColumn(distance_col, hoisted)
             .drop("_obsplus_coslat")
         )

@@ -3,10 +3,11 @@
 Connected components (near-dup cluster resolution) lives in
 ``operators.dedup.dedup_clusters``; this module holds the rank-propagation
 family. Same design stance: iterations are unrolled into ONE SQL
-statement (bounded, known iteration counts) or chunked with
-``localCheckpoint`` between chunks for open-ended runs — Spark's
-DataFrame lineage replaces a specialized graph engine, and every round is
-an ordinary join + hash aggregate that AQE/skew-join handling applies to.
+statement (bounded, known iteration counts) or persisted round by round
+where one statement would re-derive earlier rounds (``bfs_distances``,
+``k_core_peel``) — Spark's DataFrame lineage replaces a specialized graph
+engine, and every round is an ordinary join + hash aggregate that
+AQE/skew-join handling applies to.
 """
 
 from __future__ import annotations
@@ -118,10 +119,10 @@ def pagerank(
     rank(s) / out_degree(s)``.
 
     Scale shape: one statement, iterations unrolled (bounded, plan depth
-    ∝ iterations — the same contract as ``dedup_clusters``' lazy mode,
-    which checkpoints past ~8 rounds). The reciprocal out-degree folds
-    into the edge frame ONCE via a src-partitioned window (no separate
-    degree table, no per-round degree join); round 1 constant-folds the
+    ∝ iterations — the same contract as ``dedup_clusters``). The
+    reciprocal out-degree folds into the edge frame ONCE via a
+    src-partitioned window (no separate degree table, no per-round
+    degree join); round 1 constant-folds the
     uniform initial rank (``sum(w)`` — no join at all); intermediate
     rounds carry ranks only for SOURCE nodes (a sink's rank feeds
     nothing until the final read-out, so the per-round join probe is the
@@ -446,8 +447,8 @@ def k_core_peel(
     fewer rounds than a deeper bound is provably output-identical
     whenever it completes (round r emitting only degree-≥-k nodes is a
     fixed point, so rounds r..∞ coincide) — the same
-    loud-instead-of-silent convention as ``dedup_clusters``'
-    ``on_nonconverged="error"`` round guard, for the same reason: the
+    loud-instead-of-silent convention as ``dedup_clusters``' fused
+    truncation-guard round, for the same reason: the
     round bound is a cost knob, and undersizing it must never change
     results silently.
 
@@ -610,7 +611,7 @@ def bfs_distances(
     and no visited-set broadcast.
 
     Scale shape: the same bounded-round contract as :func:`pagerank`
-    and ``dedup_clusters``' lazy mode — per round one dist-keyed join
+    and ``dedup_clusters`` — per round one dist-keyed join
     + one dst-keyed map-combined min-aggregate; the shuffle carries
     ≤ |reached nodes| rows, never |edges| (the min folds map-side).
     Like :func:`hits_scores` / :func:`pagerank`, the edge frame is
@@ -645,6 +646,7 @@ def bfs_distances(
     if int(max_hops) < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     from obsplus_spark.cache import register_private_chain
+    from obsplus_spark.functions.sqltext import sql_literal
     from obsplus_spark.util import shuffle_width
 
     spark = edges.sparkSession
@@ -659,14 +661,9 @@ def bfs_distances(
     )
     chain = [edges]
 
-    def _lit(v) -> str:
-        if isinstance(v, str):
-            from obsplus_spark.util import sql_str_lit
-
-            return "'" + sql_str_lit(v) + "'"
-        return str(int(v))
-
-    seed_rows = ", ".join(f"({_lit(s)})" for s in dict.fromkeys(sources))
+    seed_rows = ", ".join(
+        f"({sql_literal(s)})" for s in dict.fromkeys(sources)
+    )
     # standalone statement (no CTE nesting inside persisted plans — the
     # optimizer's CTE pruning rule chokes on per-statement CTE ids)
     d = spark.sql(

@@ -101,22 +101,21 @@ def funnel_counts(
 
     Output: (stage 1-based, event_type, n_users), one row per stage.
     """
+    from obsplus_spark.functions.sqltext import sql_literal
     from obsplus_spark.util import ensure_parallelism, sql_over
-
-    from obsplus_spark.util import sql_str_lit
 
     if not stages:
         raise ValueError("stages must be non-empty")
-    lits = [sql_str_lit(s) for s in stages]
+    lits = [sql_literal(s) for s in stages]
     win = (
         f"WINDOW w AS (PARTITION BY {user_col} ORDER BY {ts_col}"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    in_list = ", ".join(f"'{s}'" for s in lits)
+    in_list = ", ".join(lits)
 
     def cand(i: int) -> str:
         guard = f" AND {ts_col} > r{i - 1}" if i > 0 else ""
-        return f"CASE WHEN {type_col} = '{lits[i]}'{guard} THEN {ts_col} END"
+        return f"CASE WHEN {type_col} = {lits[i]}{guard} THEN {ts_col} END"
 
     parts = [
         f"""
@@ -142,7 +141,7 @@ def funnel_counts(
     )
     rows = ", ".join(
         f"named_struct('stage', CAST({i + 1} AS BIGINT),"
-        f" 'event_type', '{lits[i]}', 'n_users', c{i})"
+        f" 'event_type', {lits[i]}, 'n_users', c{i})"
         for i in range(len(stages))
     )
     return sql_over(

@@ -8,7 +8,7 @@ transform over the flattened tables:
   the station-channel-phase hash (``merge.py:83-118``, hash ``:272-288``).
 - :func:`prune_rejected` — drop rejected/orphaned rows transitively
   (``utils/events.py:74-148 prune_events`` — a reachability pass over a
-  (parent, child) edge table, done as iterative anti-joins).
+  (parent, child) edge table, unrolled into one bounded SQL statement).
 - :func:`bump_version` — creation-version bump (``utils/events.py:225-255``).
 - :func:`dedup_channels` — duplicated channel rows (Fetcher duplicate-
   channel tolerance, ``tests/test_structures/test_fetcher.py:879``).
@@ -50,38 +50,33 @@ def prune_rejected(
     id_col: str = "resource_id",
     status_col: str = "evaluation_status",
     max_iterations: int = 10,
-    check_convergence: bool = True,
     assume_forest: bool = False,
     ids_only: bool = False,
 ) -> DataFrame:
     """Remove rejected nodes and everything reachable only through them.
 
     ``edges`` is (parent, child). A child is dropped when its parent is
-    dropped; iterate to a fixed point (bounded — event trees are shallow,
-    the reference's walk is equivalent).
+    dropped; the alive set is walked to a fixed point in at most
+    ``max_iterations`` rounds (event trees are shallow, the reference's
+    walk is equivalent).
 
     A rejected node can never become alive, so edges *into* rejected
     children are dead from the start: they are semi-joined away **once**
     (``live_edges``), which leaves each round a single parent join instead
     of a join plus a not-rejected re-check.
 
-    Two execution modes:
-
-    - ``check_convergence=True`` (default, unknown depth): each round
-      persists its frontier and pays **one** count action (the persisted
-      frontier is already materialized by it), then unpersists the
-      previous round — lineage and executor memory stay bounded at one
-      round's working set, and the loop exits at the first stable round.
-    - ``check_convergence=False`` (depth known ≤ ``max_iterations``, e.g.
-      the fixed QuakeML nesting): builds the ``max_iterations``-round plan
-      **lazily** — zero driver actions, one job when the caller acts. The
-      result is the fixed point iff the true depth is within the bound.
+    The rounds ``a0 = live``, ``a_i = roots ∪ children(a_{i-1})`` form a
+    decreasing sequence, built **lazily** as one SQL statement — zero
+    driver actions, one job when the caller acts. The result is the fixed
+    point iff the tree depth is within ``max_iterations`` (the fixed
+    QuakeML nesting is 2).
 
     ``assume_forest=True`` asserts every child has exactly one parent and
     node ids are unique (true for event trees — QuakeML nesting is strict
     containment). Then roots and reachable children are disjoint and
     duplicate-free, so every per-round ``distinct`` drops — each round is
-    exactly one shuffle on the parent key.
+    exactly one shuffle on the parent key. ``ids_only=True`` returns the
+    surviving id set instead of the surviving ``nodes`` rows.
     """
     from obsplus_spark.util import sql_over
 
@@ -96,61 +91,29 @@ def prune_rejected(
     live_edges = edges.join(
         live.withColumnRenamed(id_col, "child"), "child", "left_semi"
     )
-
-    def step(alive: DataFrame) -> DataFrame:
-        children = live_edges.join(
-            alive.withColumnRenamed(id_col, "parent"), "parent", "inner"
-        ).select(F.col("child").alias(id_col))
-        out = roots.unionByName(children)
-        # in a forest, roots ∩ children = ∅ and each child appears once;
-        # in a DAG a child is reachable via several parents → dedup
-        return out if assume_forest else out.distinct()
-
-    if not check_convergence:
-        # all rounds in ONE SQL statement (one Catalyst analysis instead
-        # of ~4 per round): same per-round shape — roots ∪ (live-edge
-        # parent join), dedup'd unless the forest property guarantees
-        # disjoint single-copy rows
-        union_kw = "UNION ALL" if assume_forest else "UNION"
-        # seed with `live` (not just roots) to match the stepwise
-        # semantics exactly when max_iterations undershoots the depth
-        ctes = [f"a0 AS (SELECT {id_col} FROM {{live}})"]
-        for i in range(1, max_iterations + 1):
-            ctes.append(
-                f"a{i} AS (SELECT {id_col} FROM {{roots}} {union_kw}"
-                f" SELECT e.child AS {id_col} FROM {{edges}} e"
-                f" JOIN a{i - 1} a ON a.{id_col} = e.parent)"
-            )
-        alive = sql_over(
-            {"live": live, "roots": roots, "edges": live_edges},
-            "WITH " + ",\n".join(ctes)
-            + f"\nSELECT {id_col} FROM a{max_iterations}",
+    # all rounds in ONE SQL statement (one Catalyst analysis instead of
+    # ~4 per round): each round is roots ∪ (live-edge parent join),
+    # dedup'd unless the forest property guarantees disjoint single-copy
+    # rows (in a DAG a child is reachable via several parents)
+    union_kw = "UNION ALL" if assume_forest else "UNION"
+    # seed with `live` (not just roots): a bound that undershoots the
+    # depth then still only drops nodes some round proved unreachable
+    ctes = [f"a0 AS (SELECT {id_col} FROM {{live}})"]
+    for i in range(1, max_iterations + 1):
+        ctes.append(
+            f"a{i} AS (SELECT {id_col} FROM {{roots}} {union_kw}"
+            f" SELECT e.child AS {id_col} FROM {{edges}} e"
+            f" JOIN a{i - 1} a ON a.{id_col} = e.parent)"
         )
-        if ids_only:
-            # alive ⊆ node ids by construction — the semi join back to
-            # nodes only recovers payload columns; skip it when the caller
-            # wants the surviving id set
-            return alive
-        return nodes.join(alive, id_col, "left_semi")
-
-    alive = live.persist()
-    n_alive = alive.count()
-    for _ in range(max_iterations):
-        new_alive = step(alive).persist()
-        n_new = new_alive.count()  # also materializes the persist
-        prev, alive = alive, new_alive
-        prev.unpersist(blocking=False)
-        if n_new == n_alive:
-            break
-        n_alive = n_new
-    # the final frontier backs the returned plan (a small id set, already
-    # materialized). It joins the bounded per-session ring: the newest two
-    # frontiers stay live, older ones unpersist — repeated prune calls in a
-    # long session no longer strand one cached id-set each.
-    from obsplus_spark.cache import register_frontier_cache
-
-    register_frontier_cache(alive)
+    alive = sql_over(
+        {"live": live, "roots": roots, "edges": live_edges},
+        "WITH " + ",\n".join(ctes)
+        + f"\nSELECT {id_col} FROM a{max_iterations}",
+    )
     if ids_only:
+        # alive ⊆ node ids by construction — the semi join back to nodes
+        # only recovers payload columns; skip it when the caller wants the
+        # surviving id set
         return alive
     return nodes.join(alive, id_col, "left_semi")
 

@@ -148,19 +148,17 @@ def language_id_heuristic(
 
     df = ensure_parallelism(df)
 
-    from obsplus_spark.util import sql_str_lit
+    from obsplus_spark.functions.sqltext import sql_literal
 
     def _arr(words: list[str]) -> str:
-        return "array(" + ", ".join(
-            "'" + sql_str_lit(w) + "'" for w in words
-        ) + ")"
+        return "array(" + ", ".join(sql_literal(w) for w in words) + ")"
 
     # one JVM-parsed expression string — the per-language Column-object
     # loop cost ~0.4 s of py4j round-trips per plan build
     scored = ", ".join(
         "named_struct('neg', -size(filter(_toks,"
         f" t -> array_contains({_arr(profiles[lang])}, t))),"
-        " 'lang', '" + sql_str_lit(lang) + "')"
+        " 'lang', " + sql_literal(lang) + ")"
         for lang in sorted(profiles)
     )
     # coalesce: NULL text must score zero hits ('unknown', 0) like a
@@ -744,10 +742,10 @@ def mixture_plan(
     if not weights:
         w_sql = "0.0D"
     else:
-        from obsplus_spark.util import sql_str_lit
+        from obsplus_spark.functions.sqltext import sql_literal
 
         arms = " ".join(
-            f"WHEN '{sql_str_lit(s)}'"
+            f"WHEN {sql_literal(s)}"
             f" THEN CAST({float(w)!r} AS DOUBLE)"
             for s, w in weights.items()
         )
@@ -815,12 +813,13 @@ def token_budget_sample(
     (BIGINT, cumulative through the row, for audit).
     """
     from obsplus_spark.operators.dedup import _md5_u32_sql
-    from obsplus_spark.util import ensure_parallelism, sql_over, sql_str_lit
+    from obsplus_spark.functions.sqltext import sql_literal
+    from obsplus_spark.util import ensure_parallelism, sql_over
 
     if not budgets:
         raise ValueError("budgets must name at least one source")
     arms = " ".join(
-        f"WHEN '{sql_str_lit(s)}' THEN CAST({int(b)} AS BIGINT)"
+        f"WHEN {sql_literal(s)} THEN CAST({int(b)} AS BIGINT)"
         for s, b in budgets.items()
     )
     b_sql = f"CASE {source_col} {arms} ELSE CAST(0 AS BIGINT) END"
@@ -1175,15 +1174,14 @@ def dsir_importance(
     Output: (id, n_tokens, log_weight) — blank docs are absent (a
     zero-token doc has no importance evidence).
     """
+    from obsplus_spark.functions.sqltext import sql_literal
     from obsplus_spark.util import ensure_parallelism, sql_over
-
-    from obsplus_spark.util import sql_str_lit
 
     if int(dims) < 1:
         raise ValueError(f"dims must be >= 1, got {dims}")
     occ = ensure_parallelism(df).selectExpr(
         id_col,
-        f"({group_col} = '{sql_str_lit(target_value)}') AS _is_target",
+        f"({group_col} = {sql_literal(target_value)}) AS _is_target",
         f"explode({_lower_tokens_sql(text_col)}) AS tok",
     ).selectExpr(id_col, "_is_target", f"{_hash_bucket_sql('tok', dims)} AS bucket")
     d = int(dims)
@@ -1513,7 +1511,8 @@ def conjunctive_search(
 
     Output: (id, total_tf) — ≤ k rows, BIGINT.
     """
-    from obsplus_spark.util import ensure_parallelism, sql_over, sql_str_lit
+    from obsplus_spark.functions.sqltext import sql_literal
+    from obsplus_spark.util import ensure_parallelism, sql_over
 
     if not terms:
         raise ValueError("terms must be non-empty")
@@ -1521,7 +1520,7 @@ def conjunctive_search(
     if kk < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     uniq = list(dict.fromkeys(t.lower() for t in terms))
-    termlist = ", ".join("'" + sql_str_lit(t) + "'" for t in uniq)
+    termlist = ", ".join(sql_literal(t) for t in uniq)
     toks = _lower_tokens_sql(text_col)
     return sql_over(
         {"d": ensure_parallelism(df)},

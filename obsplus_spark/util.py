@@ -96,7 +96,7 @@ def _parse_bytes(v: str) -> int:
     return int(float(s) * mult) if s else 1
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition under-partitioned inputs ahead of compute-heavy stages.
 
     Compute-heavy narrow stages (trig cross joins, shingle explodes, hash
@@ -112,7 +112,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     pre-fan-out rows.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     if target <= 1:
         return df
     try:
@@ -208,15 +208,6 @@ def cache_scan(df: DataFrame) -> DataFrame:
         jspark, cached
     )
     return DataFrame(new_jdf, df.sparkSession)
-
-
-def sql_str_lit(s: str) -> str:
-    """Escape a caller-supplied string for interpolation into a Spark
-    SQL single-quoted literal: backslashes double FIRST (Spark's parser
-    processes backslash escapes inside literals by default — an
-    unescaped ``\\`` silently vanishes, and a trailing one eats the
-    closing quote), then single quotes double."""
-    return str(s).replace("\\", "\\\\").replace("'", "''")
 
 
 def sql_over(dfs: "dict[str, DataFrame]", query: str) -> DataFrame:

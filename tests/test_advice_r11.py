@@ -1,7 +1,7 @@
 """Round-11 ADVICE fixes: near_duplicates restores the _check_lanes
 digest-window guard the data-driven lane rewrite dropped,
-phash_near_dup_wide(band_words=2) emits zero bands for degenerate word
-arrays, and the q_phash_wide kernel/oracle modulo is sign-stable."""
+phash_near_dup_wide emits zero bands for degenerate word arrays, and
+the q_phash_wide kernel/oracle modulo is sign-stable."""
 
 import pytest
 
@@ -51,50 +51,28 @@ def test_near_duplicates_valid_params_unchanged(spark):
     assert [(r.id1, r.id2) for r in out] == [(1, 2)]
 
 
-@pytest.mark.parametrize("band_words", [1, 2])
-def test_phash_wide_empty_word_arrays_emit_no_bands(spark, band_words):
-    """size(words)=0 rows must produce ZERO bands under BOTH band
-    widths. band_words=2 used to evaluate sequence(0, -1) = [0, -1]
-    (Spark sequences step -1 when stop < start), minting bands with
-    NULL hashes that bucketed every empty-hash row into spurious
-    candidate pairs."""
+def test_phash_wide_empty_word_arrays_emit_no_bands(spark):
+    """size(words)=0 rows must produce ZERO bands: a band with a NULL
+    hash would bucket every empty-hash row into spurious candidate
+    pairs."""
     from obsplus_spark.operators.dedup import phash_near_dup_wide
 
     rows = [(1, []), (2, []), (3, [7, 7, 7, 7]), (4, [7, 7, 7, 7])]
     df = spark.createDataFrame(rows, "id long, words array<bigint>")
-    out = phash_near_dup_wide(
-        df, max_hamming=0, band_words=band_words
-    ).collect()
+    out = phash_near_dup_wide(df, max_hamming=0).collect()
     # only the identical non-empty pair — never (1, 2) from NULL bands
     assert [(r.id1, r.id2, r.hamming) for r in out] == [(3, 4, 0)]
 
 
-def test_phash_wide_single_word_array_band_words_2(spark):
-    """A 1-word array has no complete 2-word band: zero bands, no pair
-    proposals (and no NULL band_hash rows)."""
+def test_phash_wide_single_word_array_pairs(spark):
+    """A 1-word array is one complete one-word band: identical
+    single-word hashes pair."""
     from obsplus_spark.operators.dedup import phash_near_dup_wide
 
     rows = [(1, [5]), (2, [5])]
     df = spark.createDataFrame(rows, "id long, words array<bigint>")
-    assert phash_near_dup_wide(df, band_words=2).count() == 0
-    # band_words=1 still pairs them (one complete 1-word band)
-    out = phash_near_dup_wide(df, band_words=1).collect()
+    out = phash_near_dup_wide(df).collect()
     assert [(r.id1, r.id2, r.hamming) for r in out] == [(1, 2, 0)]
-
-
-def test_phash_wide_odd_word_count_documented_truncation(spark):
-    """Odd-length arrays: the trailing word is excluded from banding
-    (documented contract) but still counts in the Hamming verify."""
-    from obsplus_spark.operators.dedup import phash_near_dup_wide
-
-    # identical first 2 words (one complete band) but differing 3rd
-    rows = [(1, [9, 9, 1]), (2, [9, 9, 2])]
-    df = spark.createDataFrame(rows, "id long, words array<bigint>")
-    out = phash_near_dup_wide(df, max_hamming=64, band_words=2).collect()
-    assert len(out) == 1
-    r = out[0]
-    # hamming includes the trailing word: popcount(1 ^ 2) = 2
-    assert (r.id1, r.id2, r.hamming) == (1, 2, 2)
 
 
 def test_q_phash_wide_modulo_sign_stable():

@@ -144,22 +144,8 @@ def nanos_dir(spark, tmp_path_factory):
     return d
 
 
-@_pytest.fixture(scope="module")
-def us_dir(tmp_path_factory):
-    """Private copy of sf0.001. ``_t`` caches per directory, so the
-    sweep's reads of this copy leave the session's cache entries for the
-    shared sf0.001 directory unmaterialized: a materialized entry reports
-    its real (small) size, which changes the join strategies that
-    tests/test_plans.py pins for plans built over that directory."""
-    import shutil
-
-    d = str(tmp_path_factory.mktemp("us_sf"))
-    shutil.copytree("/root/testdata/sf0.001", d, dirs_exist_ok=True)
-    return d
-
-
 @_pytest.mark.parametrize("qname", _DATE_LITERAL_QUERIES)
-def test_date_literal_queries_dtype_sweep(spark, us_dir, nanos_dir, qname):
+def test_date_literal_queries_dtype_sweep(spark, nanos_dir, qname):
     """VERDICT r5 #9: every query comparing a date column against a
     timestamp literal must survive BOTH parquet dtypes the driver has
     shipped (timestamp[us] and int64-ns) with identical results —
@@ -167,6 +153,6 @@ def test_date_literal_queries_dtype_sweep(spark, us_dir, nanos_dir, qname):
     import __spark_entry__ as m
 
     q = m.queries()[qname]
-    a = sorted(map(tuple, q(spark, us_dir).collect()))
+    a = sorted(map(tuple, q(spark, "/root/testdata/sf0.001").collect()))
     b = sorted(map(tuple, q(spark, nanos_dir).collect()))
     assert a == b, f"{qname}: int64-ns dates diverge from timestamp dates"

@@ -66,29 +66,9 @@ def test_wide_near_dup_finds_planted_flips(spark):
     assert got == {(2 * i, 2 * i + 1): 3 for i in range(40)}
 
 
-def test_wide_two_word_bands(spark):
-    """band_words=2 folds adjacent words into 64-bit band keys: an
-    identical pair still collides on every band; a pair differing in
-    every 2-word band is never proposed."""
-    from obsplus_spark.operators.dedup import phash_near_dup_wide
-
-    w = [3, 5, 9, 17, 33, 65, 129, 257]
-    allflip = [x ^ 1 for x in w]  # one flip in every word -> every band
-    df = spark.createDataFrame(
-        [(1, w), (2, list(w)), (3, allflip)], "id long, words array<long>"
-    )
-    got = {(r.id1, r.id2): r.hamming
-           for r in phash_near_dup_wide(
-               df, max_hamming=64, band_words=2).collect()}
-    # (1,2) identical -> hamming 0; (1,3)/(2,3) share no band -> absent
-    assert got == {(1, 2): 0}
-
-
 def test_wide_rejects_bad_args(spark):
     from obsplus_spark.operators.dedup import phash_near_dup_wide
 
     df = spark.createDataFrame([(1, [0] * 8)], "id long, words array<long>")
     with pytest.raises(ValueError, match="max_hamming"):
         phash_near_dup_wide(df, max_hamming=-1)
-    with pytest.raises(ValueError, match="band_words"):
-        phash_near_dup_wide(df, band_words=3)

@@ -62,15 +62,29 @@ _JOIN_MARKERS = (
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
+def plan_dir(tmp_path_factory):
+    """Private copy of sf0.001 for the plan pins. ``_t`` caches per
+    (session, directory): an unmaterialized cached table reports the
+    estimated size of the scan it caches, a materialized one its real
+    (small) size, which changes join strategies. No other test reads
+    this directory, so no other test can materialize its caches."""
     if not os.path.isdir(SF_DIR):
         pytest.skip("driver testdata not present")
+    import shutil
+
+    d = str(tmp_path_factory.mktemp("plans_sf"))
+    shutil.copytree(SF_DIR, d, dirs_exist_ok=True)
+    return d
+
+
+@pytest.fixture(scope="module")
+def plans(spark, plan_dir):
     import __spark_entry__ as em
 
     em_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString
     out = {}
     for name, fn in em.queries().items():
-        qe = fn(spark, SF_DIR)._jdf.queryExecution()
+        qe = fn(spark, plan_dir)._jdf.queryExecution()
         out[name] = (
             qe.explainString(em_mode("formatted")),
             qe.explainString(em_mode("simple")),
@@ -738,7 +752,7 @@ def test_top_supplier_rank_over_dim_sized_table(plans):
     assert p.count("HashAggregate") <= 4  # one agg (partial+final) x2 listings
 
 
-def _executed_plan_no_aqe(spark, name):
+def _executed_plan_no_aqe(spark, sf_dir, name):
     """Executed-plan string under AQE OFF — the same planning mode the
     bench harness runs (tools/bench_compare disables AQE), and the only
     mode where exchange counts are stable plan properties (AQE wraps
@@ -750,14 +764,14 @@ def _executed_plan_no_aqe(spark, name):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return (
-            em.queries()[name](spark, SF_DIR)
+            em.queries()[name](spark, sf_dir)
             ._jdf.queryExecution().executedPlan().toString()
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
-def test_hits_auth_partition_aligned_rounds(spark):
+def test_hits_auth_partition_aligned_rounds(spark, plan_dir):
     """r8 graph-constant work: the HITS plan must keep (a) the
     src-partitioned cached edge frame satisfying every groupBy-src and
     a-round join (no new ENSURE_REQUIREMENTS exchange per half-round
@@ -766,32 +780,32 @@ def test_hits_auth_partition_aligned_rounds(spark):
     silently re-exchanges the edge frame per half-round — the measured
     10.5 s → 2.7 s sf1 improvement in reverse. Bounds are the measured
     executed-plan shape with one exchange of slack."""
-    p = _executed_plan_no_aqe(spark, "hits_auth")
+    p = _executed_plan_no_aqe(spark, plan_dir, "hits_auth")
     ens = p.count("ENSURE_REQUIREMENTS")
     assert ens <= 6, f"hits_auth grew exchanges: {ens}"
     assert p.count("SortMergeJoin") <= 3, "a dst-join lost its broadcast"
     assert "BroadcastHashJoin" in p
 
 
-def test_pagerank_partition_aligned_rounds(spark):
+def test_pagerank_partition_aligned_rounds(spark, plan_dir):
     """r8: pagerank's hoisted src-partitioned weighted edge frame —
     the per-round `e.src = r.node` joins co-partition with the rank
     vector's own aggregate output, so only the dst-keyed contribution
     aggregates exchange. A reappearing in-statement DISTINCT or a lost
     repartition inflates the exchange count immediately."""
-    p = _executed_plan_no_aqe(spark, "pagerank")
+    p = _executed_plan_no_aqe(spark, plan_dir, "pagerank")
     ens = p.count("ENSURE_REQUIREMENTS")
     assert ens <= 5, f"pagerank grew exchanges: {ens}"
     assert p.count("SortMergeJoin") <= 3
 
 
-def test_bfs_hops_bounded_exchanges(spark):
+def test_bfs_hops_bounded_exchanges(spark, plan_dir):
     """r8: bfs_distances dedups + persists its edge frame hash(src)
     inside the operator; each hop joins the (small) frontier against
     the cached partitioning, so the per-hop exchanges carry frontier
     and offer rows, never the edge frame. Bound set from the measured
     3-hop executed plan with slack."""
-    p = _executed_plan_no_aqe(spark, "bfs_hops")
+    p = _executed_plan_no_aqe(spark, plan_dir, "bfs_hops")
     ens = p.count("ENSURE_REQUIREMENTS")
     assert ens <= 11, f"bfs_hops grew exchanges: {ens}"
     # r11: rounds are per-round-persisted DataFrames (the one-statement

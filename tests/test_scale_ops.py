@@ -230,18 +230,15 @@ def test_dedup_clusters_components(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
         "id1 long, id2 long",
     )
-    for lazy in (False, True):
-        got = {
-            (r.id, r.cluster_id)
-            for r in dedup_clusters(
-                pairs, max_iterations=8, check_convergence=not lazy
-            ).collect()
-        }
-        assert got == {
-            (1, 1), (2, 1), (3, 1), (4, 1),
-            (10, 10), (11, 10), (12, 10),
-            (20, 20), (21, 20),
-        }
+    got = {
+        (r.id, r.cluster_id)
+        for r in dedup_clusters(pairs, max_iterations=8).collect()
+    }
+    assert got == {
+        (1, 1), (2, 1), (3, 1), (4, 1),
+        (10, 10), (11, 10), (12, 10),
+        (20, 20), (21, 20),
+    }
 
 
 def test_hash_split_deterministic(spark):
@@ -421,34 +418,6 @@ def test_packing_plan(spark):
         expect = seen.get(r.grp, 0)
         assert r.bin * 250 + r.bin_offset == expect
         seen[r.grp] = expect + r.n_tokens
-
-
-def test_dedup_clusters_lazy_checkpoint_bounds_lineage(spark):
-    """A 30-round lazy propagation with checkpoint_every=8 must (a) still
-    produce the exact fixed point and (b) carry a bounded logical plan —
-    the un-checkpointed chain's plan grows linearly with rounds and its
-    analysis cost quadratically."""
-    from obsplus_spark.operators.dedup import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)],
-        "id1 long, id2 long",
-    )
-    deep = dedup_clusters(
-        pairs, max_iterations=30, check_convergence=False, checkpoint_every=8
-    )
-    got = {(r.id, r.cluster_id) for r in deep.collect()}
-    assert got == {
-        (1, 1), (2, 1), (3, 1), (4, 1),
-        (10, 10), (11, 10), (20, 20), (21, 20),
-    }
-    plain = dedup_clusters(
-        pairs, max_iterations=30, check_convergence=False, checkpoint_every=0
-    )
-    n_deep = deep._jdf.queryExecution().optimizedPlan().toString().count("\n")
-    n_plain = plain._jdf.queryExecution().optimizedPlan().toString().count("\n")
-    # last checkpoint at round 24 → ≤6 rounds of lineage vs 30
-    assert n_deep < n_plain / 2, (n_deep, n_plain)
 
 
 def test_chunk_text_windows(spark):
@@ -992,9 +961,8 @@ def test_canonical_docs_survivor_election(spark):
 def test_dedup_clusters_truncation_guard_raises(spark):
     """VERDICT r7 #1: an undersized lazy bound must be LOUD, not a
     silently split component. Chain 0-1-...-9 has diameter 9 > default
-    bound 6: the default lazy mode must abort at runtime with a message
-    naming the bound; ``on_nonconverged='ignore'`` opts back into the
-    truncated result; a diameter-safe bound converges exactly."""
+    bound 6: the default bound must abort at runtime with a message
+    naming the bound; a diameter-safe bound converges exactly."""
     import pytest as _pytest
 
     from obsplus_spark.operators.dedup import dedup_clusters
@@ -1004,20 +972,12 @@ def test_dedup_clusters_truncation_guard_raises(spark):
     )
     with _pytest.raises(Exception, match="max_iterations=6"):
         dedup_clusters(chain).collect()  # defaults: guard fires
-    # explicit opt-in reproduces the (documented) truncated behavior
-    trunc = {
-        r.id: r.cluster_id
-        for r in dedup_clusters(chain, on_nonconverged="ignore").collect()
-    }
-    assert len(trunc) == 10 and len(set(trunc.values())) > 1
     # diameter-safe bound: guard round is a no-op, exact fixed point
     got = {
         r.id: r.cluster_id
         for r in dedup_clusters(chain, max_iterations=9).collect()
     }
     assert got == {i: 0 for i in range(10)}
-    with _pytest.raises(ValueError, match="on_nonconverged"):
-        dedup_clusters(chain, on_nonconverged="loud")
 
 
 def test_dedup_clusters_guard_build_is_action_free(spark):

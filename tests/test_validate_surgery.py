@@ -201,41 +201,81 @@ def test_prune_rejected_transitive(spark):
     assert out == {"root", "origin2", "arrival2"}
 
 
-def test_prune_frontier_ring_bounded(spark):
-    """Repeated prune calls keep at most two persisted frontiers per
-    session; older ones must be unpersisted (no cache accumulation)."""
-    from obsplus_spark.cache import _FRONTIER_CACHES
+def _reachable_live(nodes, edges):
+    """Python fixed point of the prune: live roots (no incoming edge),
+    then children of alive nodes that are themselves live, until no
+    round adds a node."""
+    live = {n for n, st in nodes if st != "rejected"}
+    has_parent = {c for _, c in edges}
+    alive = live - has_parent
+    while True:
+        nxt = alive | {c for p, c in edges if p in alive and c in live}
+        if nxt == alive:
+            return alive
+        alive = nxt
 
-    nodes = spark.createDataFrame(
-        [("a", None), ("b", "rejected"), ("c", None)],
-        "resource_id string, evaluation_status string",
+
+def test_prune_rejected_dag_matches_reachability(spark):
+    """Multi-parent children (assume_forest=False): a child with one
+    rejected and one live parent survives; a child reachable only
+    through a rejected node is pruned, transitively; a child reached
+    via two live parents appears once."""
+    nodes = [
+        ("r1", None), ("r2", "rejected"), ("r3", "reviewed"),
+        ("x", "reviewed"),    # parents r1 (live) + r2 (rejected) -> kept
+        ("y", None),          # parent r2 only -> pruned
+        ("w", "reviewed"),    # parent y only -> pruned transitively
+        ("v", None),          # parent r3 -> kept
+        ("z", "reviewed"),    # parents x + v, both live -> kept once
+        ("q", "rejected"),    # rejected child of live r3
+        ("q1", None),         # parent q only -> pruned
+        ("q2", None),         # parents q + z -> kept
+    ]
+    edges = [
+        ("r1", "x"), ("r2", "x"), ("r2", "y"), ("y", "w"), ("r3", "v"),
+        ("x", "z"), ("v", "z"), ("r3", "q"), ("q", "q1"), ("q", "q2"),
+        ("z", "q2"),
+    ]
+    ndf = spark.createDataFrame(
+        nodes, "resource_id string, evaluation_status string"
     )
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "parent string, child string"
+    edf = spark.createDataFrame(edges, "parent string, child string")
+    got = [
+        r.resource_id
+        for r in prune_rejected(ndf, edf, assume_forest=False).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == _reachable_live(nodes, edges)
+    assert set(got) == {"r1", "r3", "x", "v", "z", "q2"}
+
+
+def test_prune_rejected_forest_ids_only_matches_reachability(spark):
+    """The declared query's flags: a depth-2 ownership forest,
+    assume_forest=True, ids_only=True, max_iterations=2 — the surviving
+    id set, one row per id, and no payload columns."""
+    nodes = [
+        ("e1", None), ("e2", "rejected"), ("e3", "reviewed"),
+        ("o1", None), ("o2", "rejected"), ("o3", None), ("o4", None),
+        ("a1", None), ("a2", None), ("a3", "rejected"), ("a4", None),
+        ("a5", None),
+    ]
+    edges = [
+        ("e1", "o1"), ("e1", "o2"), ("e2", "o3"), ("e3", "o4"),
+        ("o1", "a1"), ("o2", "a2"), ("o3", "a4"), ("o4", "a3"),
+        ("o4", "a5"),
+    ]
+    ndf = spark.createDataFrame(
+        nodes, "resource_id string, evaluation_status string"
     )
-    frames = []
-    for _ in range(4):
-        prune_rejected(nodes, edges).count()
-        ring = _FRONTIER_CACHES[id(spark)]
-        frames.extend(f for f in ring if f not in frames)
-    ring = _FRONTIER_CACHES[id(spark)]
-    assert len(ring) == 2
-    # the four calls build plan-identical frontiers that share one
-    # CacheManager entry: evicting an old one must not uncache the
-    # ring (adoption re-persist), and any other frame still reporting
-    # cached is reading a ring frame's entry
-    assert all(f.storageLevel.useMemory for f in ring)
-    live = [f for f in frames if f.storageLevel.useMemory]
-    assert all(any(f.sameSemantics(r) for r in ring) for f in live)
-    # distinct frontiers per call: exactly the ring stays cached
-    frames = []
-    for i in range(4):
-        prune_rejected(nodes.where(f"resource_id <> 'x{i}'"), edges).count()
-        frames.extend(f for f in _FRONTIER_CACHES[id(spark)] if f not in frames)
-    ring = _FRONTIER_CACHES[id(spark)]
-    assert len(ring) == 2
-    live = [f for f in frames if f.storageLevel.useMemory]
-    assert set(map(id, live)) == set(map(id, ring))
+    edf = spark.createDataFrame(edges, "parent string, child string")
+    out = prune_rejected(
+        ndf, edf, max_iterations=2, assume_forest=True, ids_only=True
+    )
+    assert out.columns == ["resource_id"]
+    got = [r.resource_id for r in out.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _reachable_live(nodes, edges)
+    assert set(got) == {"e1", "e3", "o1", "o4", "a1", "a5"}
 
 
 def test_bump_version(spark):

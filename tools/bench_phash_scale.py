@@ -27,8 +27,8 @@ regenerated by exactly::
 
 No environment knobs: the corpus is fully deterministic (splitmix
 constants in ``_mk_rows_wide`` — there is no RNG seed to record),
-``band_words=1`` (eight 32-bit one-word bands, the
-``phash_near_dup_wide`` default ``_engine_wide`` uses), and shuffle
+the eight 32-bit one-word bands ``phash_near_dup_wide`` builds for
+``_engine_wide``, and shuffle
 partitions are sized INSIDE this tool by band rows
 (``n_images × n_bands / 1M`` — ``SPARK_GRAFT_SHUFFLE`` is a
 bench_compare knob, not read here). Protocol notes: the FIRST engine
