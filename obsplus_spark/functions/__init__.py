@@ -3,33 +3,23 @@
 from obsplus_spark.functions.strings import (
     glob_to_regex,
     glob_match,
-    contains_any,
     zero_pad_code,
 )
 from obsplus_spark.functions.timeutils import (
     ts_to_ns,
-    ns_to_ts,
     time_chunks,
-    floor_day_ns,
 )
 from obsplus_spark.functions.geo import (
     haversine_m,
     wrap_longitude,
-    kilometers_to_degrees,
-    degrees_to_kilometers,
 )
 
 __all__ = [
     "glob_to_regex",
     "glob_match",
-    "contains_any",
     "zero_pad_code",
     "ts_to_ns",
-    "ns_to_ts",
     "time_chunks",
-    "floor_day_ns",
     "haversine_m",
     "wrap_longitude",
-    "kilometers_to_degrees",
-    "degrees_to_kilometers",
 ]

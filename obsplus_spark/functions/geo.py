@@ -64,15 +64,6 @@ def wrap_longitude_sql(expr: str) -> str:
     return f"CASE WHEN {m} > 180.0D THEN {m} - 360.0D ELSE {m} END"
 
 
-def kilometers_to_degrees(km) -> Column:
-    """km → degrees of great circle (reference get_events.py:88-90)."""
-    return _c(km) * F.lit(1000.0 / M_PER_DEG)
-
-
-def degrees_to_kilometers(deg) -> Column:
-    return _c(deg) * F.lit(M_PER_DEG / 1000.0)
-
-
 def bounding_box(
     lat: float, lon: float, radius_deg: float, margin: float = 1.2
 ) -> dict[str, float]:

@@ -1,4 +1,4 @@
-"""String predicates: glob→regex translation, contains-any, code padding.
+"""String predicates: glob→regex translation and code padding.
 
 Reference parity:
 - glob semantics are fnmatch (`?`/`*`/`[...]`, anchored) exactly as the
@@ -120,18 +120,6 @@ def any_glob_match(
         preds.append(f"{c} IN ({', '.join(map(sql_literal, exact))})")
     preds.extend(glob_match_sql(col, p, case_insensitive) for p in globs)
     return F.expr(sql_or(preds))
-
-
-def contains_any(col: Column | str, tokens: list[str]) -> Column:
-    """True if the string contains any of the literal tokens.
-
-    Mirror of reference ``utils/pd.py:452-455 _column_contains`` (regex
-    union of escaped tokens).
-    """
-    import re
-
-    c = F.col(col) if isinstance(col, str) else col
-    return c.rlike("|".join(re.escape(t) for t in tokens))
 
 
 def zero_pad_code(col: Column | str, width: int = 2) -> Column:

@@ -21,19 +21,6 @@ def ts_to_ns(col: Column | str) -> Column:
     return (F.unix_micros(c) * F.lit(1000)).cast("long")
 
 
-def ns_to_ts(col: Column | str) -> Column:
-    """int64 ns → TimestampType (truncates to µs — display only)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_micros((c / F.lit(1000)).cast("long"))
-
-
-def floor_day_ns(col: Column | str) -> Column:
-    """Nearest-day floor on ns longs (reference utils/waveforms.py:475-479
-    ``ts - ts % 86400`` — same arithmetic, ns units)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c - (c % F.lit(NS_PER_DAY))
-
-
 def assign_time_chunks(
     df: DataFrame,
     ts_col: str,

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from obsplus_spark.functions.sqltext import sql_ident
 from obsplus_spark.operators.gaps import gaps_df
+from obsplus_spark.util import sql_over
 
 NSLC = ["network", "station", "location", "channel"]
 
@@ -27,12 +28,15 @@ def availability(
 ) -> DataFrame:
     """Per-key [min start, max end] — the reference's availability table.
 
-    The aggregate columns are SQL text (``F.expr``), three py4j round trips
-    each instead of one per ``Column`` node."""
-    keys = keys or NSLC
+    One SQL statement (:func:`sql_over`): the same aggregate as
+    ``groupBy(*keys).agg(...)``, built in a handful of py4j round trips
+    instead of three per key and per aggregate column."""
+    keys = ", ".join(sql_ident(k) for k in keys or NSLC)
     s, e = sql_ident(start_col), sql_ident(end_col)
-    return df.groupBy(*keys).agg(
-        F.expr(f"min({s}) AS {s}"), F.expr(f"max({e}) AS {e}")
+    return sql_over(
+        {"index": df},
+        f"SELECT {keys}, min({s}) AS {s}, max({e}) AS {e} "
+        f"FROM {{index}} GROUP BY {keys}",
     )
 
 

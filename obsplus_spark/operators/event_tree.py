@@ -19,9 +19,11 @@ every flatten is a scan, never a shuffle.
 
 Schema tolerance: operators accept both the full ``NESTED_EVENT_SCHEMA``
 and slimmer ad-hoc trees (e.g. test fixtures or JSON round-trips that
-carry only a subset of fields) — absent struct fields resolve to typed
-NULL literals at plan time, so one extractor body serves every tree
-generation.
+carry only a subset of fields). The flat extractors are SQL text built in
+Python from ``tree.schema``; :func:`_field` is the one place a field
+reference is written, and a field this tree's struct lacks becomes a NULL
+literal of the full schema's type at plan time, so one extractor body
+serves every tree generation without widening the tree.
 
 Includes the semantics that are easy to get wrong (SURVEY.md §7):
 - **preferred-object fallback chain** (``utils/events.py:425-480``):
@@ -35,12 +37,13 @@ Includes the semantics that are easy to get wrong (SURVEY.md §7):
 
 from __future__ import annotations
 
-import threading
+from typing import NamedTuple
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from obsplus_spark.functions.sqltext import sql_ident, sql_or
 
 S, D, L = T.StringType(), T.DoubleType(), T.LongType()
 
@@ -315,86 +318,64 @@ SLIM_EVENT_SCHEMA = T.StructType(
 
 
 # --------------------------------------------------------------------------
-# schema tolerance helpers
+# schema tolerance
 # --------------------------------------------------------------------------
 
 
-def _top_fields(tree: DataFrame) -> set[str]:
-    return set(tree.schema.fieldNames())
+class _Ref(NamedTuple):
+    """A SQL expression over the tree: its text, its type in THIS tree
+    (``None`` when the tree lacks it) and its type in the full schema."""
+
+    sql: str
+    have: T.DataType | None
+    full: T.DataType
 
 
-def _elem_fields(tree: DataFrame, array_col: str) -> set[str]:
-    """Field names available in the element struct of ``array_col``
-    (empty set if the column itself is absent)."""
-    for fld in tree.schema.fields:
-        if fld.name == array_col and isinstance(fld.dataType, T.ArrayType):
-            et = fld.dataType.elementType
-            if isinstance(et, T.StructType):
-                return set(et.fieldNames())
-    return set()
+def _root(tree: DataFrame) -> _Ref:
+    return _Ref("", tree.schema, NESTED_EVENT_SCHEMA)
 
 
-def _elem_type(
-    tree: DataFrame, array_col: str, default: T.StructType
-) -> T.DataType:
-    """The tree's actual element type for ``array_col`` (falls back to the
-    full-schema struct when the column is absent) — empty-array literals
-    must match the tree's own struct width, not the full schema's."""
-    for fld in tree.schema.fields:
-        if fld.name == array_col and isinstance(fld.dataType, T.ArrayType):
-            return fld.dataType.elementType
-    return default
+def _field(parent: _Ref, name: str) -> _Ref:
+    """``parent.name`` (a top-level column when ``parent.sql`` is empty)
+    when this tree's struct carries the field, else a NULL of the full
+    schema's type — the one place an absent field is decided."""
+    full = parent.full[name].dataType
+    have = parent.have
+    if isinstance(have, T.StructType) and name in have.fieldNames():
+        ref = sql_ident(name)
+        sql = f"{parent.sql}.{ref}" if parent.sql else ref
+        return _Ref(sql, have[name].dataType, full)
+    return _Ref(f"CAST(NULL AS {full.simpleString()})", None, full)
 
 
-def _arr_or_empty(tree: DataFrame, array_col: str, default: T.StructType) -> Column:
-    """``coalesce(col, array())`` typed to the tree's own element struct;
-    a typed empty array when the column is absent entirely."""
-    et = T.ArrayType(_elem_type(tree, array_col, default))
-    if array_col in _top_fields(tree):
-        return F.coalesce(F.col(array_col), F.array().cast(et))
-    return F.array().cast(et)
+def _elements(arr: _Ref, var: str) -> _Ref:
+    """The lambda variable ``var`` over the elements of the array ``arr``."""
+    have = arr.have.elementType if isinstance(arr.have, T.ArrayType) else None
+    return _Ref(var, have, arr.full.elementType)
 
 
-def _arrival_elem_type(tree: DataFrame) -> T.DataType:
-    """Element type of ``origins[].arrivals`` in THIS tree (full-schema
-    ARRIVAL_STRUCT when the branch is absent)."""
-    for fld in tree.schema.fields:
-        if fld.name == "origins" and isinstance(fld.dataType, T.ArrayType):
-            et = fld.dataType.elementType
-            if isinstance(et, T.StructType) and "arrivals" in et.fieldNames():
-                return et["arrivals"].dataType.elementType
-    return ARRIVAL_STRUCT
+def _or_empty(arr: _Ref) -> str:
+    return f"coalesce({arr.sql}, array())"
 
 
-def _ev_col(tree: DataFrame, name: str, dtype: T.DataType) -> Column:
-    """Top-level event field, or a typed NULL when the tree is slim."""
-    if name in _top_fields(tree):
-        return F.col(name)
-    return F.lit(None).cast(dtype)
-
-
-def _sub(parent: Column, avail: set[str], name: str, dtype: T.DataType) -> Column:
-    """``parent[name]`` when the field exists in this tree's struct,
-    else a typed NULL — lets one extractor serve slim and full trees."""
-    if name in avail:
-        return parent[name]
-    return F.lit(None).cast(dtype)
-
-
-def _elem_sub(x, avail: set, name: str, dtype: T.DataType) -> Column:
-    """Element-level twin of :func:`_sub` for array lambdas: ``x[name]``
-    when THIS tree's element struct carries the field, else a typed NULL
-    — extends the schema-tolerance contract into every in-row array
-    expression (a bare ``x[name]`` on a subset-schema tree fails
-    analysis with FIELD_NOT_FOUND)."""
-    if name in avail:
-        return x[name]
-    return F.lit(None).cast(dtype)
+def _as(sql: str, name: str) -> str:
+    return f"{sql} AS {sql_ident(name)}"
 
 
 # --------------------------------------------------------------------------
 # preferred-object chain
 # --------------------------------------------------------------------------
+
+
+def _preferred_sql(lst: str, preferred_id: str, o_id: str) -> str:
+    """The preferred-object fallback chain over the array ``lst``: the
+    first element whose id (``o_id``, over the lambda variable ``o``)
+    equals ``preferred_id``, else the last element, else NULL."""
+    match = f"filter({lst}, o -> {o_id} = {preferred_id})"
+    return (
+        f"CASE WHEN size({match}) > 0 THEN element_at({match}, 1) "
+        f"ELSE CASE WHEN size({lst}) > 0 THEN element_at({lst}, -1) END END"
+    )
 
 
 def preferred(
@@ -408,38 +389,27 @@ def preferred(
     Serves origins, magnitudes and focal mechanisms alike (the reference's
     chain is generic over the ``preferred_{what}_id`` attribute family).
     """
-    lst = F.col(list_col)
-    match = F.filter(lst, lambda o: o[id_field] == F.col(preferred_id_col))
-    return F.when(F.size(match) > 0, F.element_at(match, 1)).otherwise(
-        F.when(F.size(lst) > 0, F.element_at(lst, -1))
+    return F.expr(
+        _preferred_sql(
+            sql_ident(list_col),
+            sql_ident(preferred_id_col),
+            sql_ident(f"o.{id_field}"),
+        )
     )
 
 
-def _preferred_t(
-    tree: DataFrame,
-    list_col: str,
-    preferred_id_col: str,
-    default_struct: T.StructType,
-) -> Column:
-    """Schema-tolerant :func:`preferred`: absent list column → typed NULL
-    element; absent preferred-id column or element ``resource_id`` →
-    the last-element fallback alone (nothing to match against)."""
-    if list_col not in _top_fields(tree):
-        return F.lit(None).cast(_elem_type(tree, list_col, default_struct))
-    lst = F.coalesce(
-        F.col(list_col),
-        F.array().cast(T.ArrayType(_elem_type(tree, list_col, default_struct))),
+def _preferred(ev: _Ref, list_col: str, preferred_id_col: str) -> _Ref:
+    """The tree's preferred element of ``list_col``: a missing list reads
+    as empty, a missing id on either side matches nothing (last-element
+    fallback alone)."""
+    lst = _field(ev, list_col)
+    o = _elements(lst, "o")
+    chain = _preferred_sql(
+        _or_empty(lst),
+        _field(ev, preferred_id_col).sql,
+        _field(o, "resource_id").sql,
     )
-    last = F.when(F.size(lst) > 0, F.element_at(lst, -1))
-    efields = _elem_fields(tree, list_col)
-    if preferred_id_col in _top_fields(tree) and "resource_id" in efields:
-        match = F.filter(
-            lst, lambda o: o["resource_id"] == F.col(preferred_id_col)
-        )
-        return F.when(F.size(match) > 0, F.element_at(match, 1)).otherwise(
-            last
-        )
-    return last
+    return _Ref(f"({chain})", o.have, o.full)
 
 
 # --------------------------------------------------------------------------
@@ -447,31 +417,56 @@ def _preferred_t(
 # --------------------------------------------------------------------------
 
 
-def _last_mag_of_type(tree: DataFrame, mag_type: str) -> Column:
+def _last_mag_of_type(mags: _Ref, mag_type: str) -> str:
     """Last magnitude (document order) whose upper-cased type equals
     ``mag_type`` — events/pd.py:166-175 _get_last_magnitude ('last wins',
-    type compared after ``(magnitude_type or '').upper()``).
-    Schema-tolerant: no ``mag`` field → typed NULL; no
-    ``magnitude_type`` → every magnitude reads as type '' (matches
-    nothing here)."""
-    avail = _elem_fields(tree, "magnitudes")
-    if "mag" not in avail:
-        return F.lit(None).cast(D)
-    typed = F.filter(
-        F.col("magnitudes"),
-        lambda m: F.upper(
-            F.coalesce(_elem_sub(m, avail, "magnitude_type", S), F.lit(""))
-        )
-        == mag_type,
-    )
-    return F.when(F.size(typed) > 0, F.element_at(typed, -1)["mag"])
+    type compared after ``(magnitude_type or '').upper()``)."""
+    m = _elements(mags, "m")
+    mt = _field(m, "magnitude_type").sql
+    typed = f"filter({mags.sql}, m -> upper(coalesce({mt}, '')) = '{mag_type}')"
+    last = _Ref(f"element_at({typed}, -1)", m.have, m.full)
+    return f"CASE WHEN size({typed}) > 0 THEN {_field(last, 'mag').sql} END"
 
 
-def _quality_or(q: Column, field: str, default: Column) -> Column:
+def _quality_or(quality: _Ref, name: str, default: str) -> str:
     """``getattr(quality, attr, None) or default`` (events/pd.py:113-121):
     the reference treats BOTH null and zero as missing (python ``or``)."""
-    v = q[field]
-    return F.when(v.isNotNull() & (v != 0), v).otherwise(default)
+    v = _field(quality, name).sql
+    return f"CASE WHEN ({v} IS NOT NULL) AND ({v} != 0) THEN {v} ELSE {default} END"
+
+
+def _pick_phase_count(picks: str, p: _Ref, phase: str) -> str:
+    """Non-rejected picks with the given phase hint — NULL evaluation
+    status COUNTS (events/pd.py:100-108). Shared by ``events_to_df`` and
+    ``origin_quality`` so the rejected-status semantics live once."""
+    hint = _field(p, "phase_hint").sql
+    st = _field(p, "evaluation_status").sql
+    return (
+        f"size(filter({picks}, {p.sql} -> ({hint} = '{phase}') AND "
+        f"(({st} IS NULL) OR ({st} != 'rejected'))))"
+    )
+
+
+def _distinct_stations(picks: str, p: _Ref) -> str:
+    """Distinct NON-NULL station codes of a pick array: a pick without a
+    waveformID (station NULL — common in real QuakeML) contributes no
+    station, matching COUNT(DISTINCT) / collect_set semantics (a bare
+    array_distinct(transform(...)) would count NULL as a station)."""
+    station = _field(p, "station").sql
+    return (
+        f"array_distinct(filter(transform({picks}, {p.sql} -> {station}), "
+        "s -> s IS NOT NULL))"
+    )
+
+
+def _reference_time(ev: _Ref, origin: _Ref) -> str:
+    """Event reference time: the preferred ``origin``'s time, else the
+    earliest pick (utils/time.py get_reference_time)."""
+    picks = _field(ev, "picks")
+    p = _elements(picks, "p")
+    time = _field(p, "time").sql
+    first_pick = f"array_min(transform({_or_empty(picks)}, p -> {time}))"
+    return f"coalesce({_field(origin, 'time').sql}, {first_pick})"
 
 
 def events_to_df(tree: DataFrame) -> DataFrame:
@@ -502,202 +497,101 @@ def events_to_df(tree: DataFrame) -> DataFrame:
     - ``time``: preferred-origin time, falling back to the earliest pick
       (utils/time.py get_reference_time fallback order).
 
-    The two ``select`` lists depend on ``tree.schema`` alone, and building
-    them costs over a thousand py4j round trips. They are built once per
-    distinct schema (keyed on its JSON) and reused, so a repeat call on a
-    tree of the same schema — every ingest batch of an EventBank — costs
-    only the two ``select`` calls.
+    Both projections are SQL text built from ``tree.schema`` in Python and
+    applied with one ``selectExpr`` each, so a call costs a few py4j round
+    trips whatever the schema.
     """
-    staged, out = _events_projection(tree)
-    return tree.select("*", *staged).select(*out)
-
-
-#: (gateway, {schema JSON: (staged, output) select lists of events_to_df});
-#: the lists hold JVM Column handles, so they are dropped with the
-#: gateway that made them
-_PROJECTIONS: tuple[object, dict[str, tuple[list, list]]] = (None, {})
-_PROJECTIONS_LOCK = threading.Lock()
-
-
-def _events_projection(tree: DataFrame) -> tuple[list[Column], list[Column]]:
-    """The ``events_to_df`` select lists for ``tree``'s schema, built on
-    the first call per schema and per gateway."""
-    global _PROJECTIONS
-    key = tree.schema.json()
-    with _PROJECTIONS_LOCK:
-        gateway = SparkContext._gateway
-        if _PROJECTIONS[0] is not gateway:
-            _PROJECTIONS = (gateway, {})
-        by_schema = _PROJECTIONS[1]
-        if key not in by_schema:
-            by_schema[key] = _build_events_projection(tree)
-        return by_schema[key]
-
-
-def _build_events_projection(
-    tree: DataFrame,
-) -> tuple[list[Column], list[Column]]:
-    """The staged preferred structs (``_po``, ``_pm``) and the 27 output
-    columns of :func:`events_to_df`, derived from ``tree.schema``."""
-    ofields = _elem_fields(tree, "origins")
-    mfields = _elem_fields(tree, "magnitudes")
-    pfields = _elem_fields(tree, "picks")
-    has_mags = "magnitudes" in _top_fields(tree)
-
+    ev = _root(tree)
+    po = _preferred(ev, "origins", "preferred_origin_id")
+    pm = _preferred(ev, "magnitudes", "preferred_magnitude_id")
     # the preferred structs are STAGED as real columns: ~10 output
     # columns reference them, and interpreted higher-order filter chains
     # are not CSE'd — unstaged, the preferred-origin filter re-evaluates
     # once per referencing column per row (CollapseProject keeps the two
     # projections apart because the aliases are non-cheap and multiply
     # referenced)
-    staged = [
-        _preferred_t(
-            tree, "origins", "preferred_origin_id", ORIGIN_STRUCT
-        ).alias("_po"),
-        _preferred_t(
-            tree, "magnitudes", "preferred_magnitude_id", MAGNITUDE_STRUCT
-        ).alias("_pm"),
-    ]
-    o, m = F.col("_po"), F.col("_pm")
+    staged = tree.selectExpr("*", _as(po.sql, "_po"), _as(pm.sql, "_pm"))
+    o, m = po._replace(sql="_po"), pm._replace(sql="_pm")
 
-    def of(name, dtype=D):
-        return _sub(o, ofields, name, dtype)
+    def of(name: str) -> str:
+        return _field(o, name).sql
 
-    quality = (
-        o["quality"]
-        if "quality" in ofields
-        else F.lit(None).cast(ORIGIN_QUALITY_STRUCT)
-    )
-    arr_type = T.ArrayType(_arrival_elem_type(tree))
-    arrivals = (
-        F.coalesce(o["arrivals"], F.array().cast(arr_type))
-        if "arrivals" in ofields
-        else F.array().cast(arr_type)
-    )
+    quality = _field(o, "quality")
+    arrivals = _field(o, "arrivals")
+    a = _elements(arrivals, "a")
+    picks = _field(ev, "picks")
+    p = _elements(picks, "p")
+    arrs, pks = _or_empty(arrivals), _or_empty(picks)
 
-    arr_et = _arrival_elem_type(tree)
-    arr_avail = (
-        set(arr_et.fieldNames()) if isinstance(arr_et, T.StructType) else set()
-    )
-
-    def phase_count(ph):
+    def phase_count(phase: str) -> str:
         # unspecified phases are not counted (pd.py:100-108)
-        return F.size(
-            F.filter(
-                arrivals,
-                lambda a: _elem_sub(a, arr_avail, "phase", S) == ph,
-            )
-        )
-
-    picks = _arr_or_empty(tree, "picks", PICK_STRUCT)
-    pick_avail = _elem_fields(tree, "picks") or set(PICK_STRUCT.fieldNames())
-
-    def pick_count(ph):
-        return _pick_phase_count(picks, ph, pick_avail)
+        return f"size(filter({arrs}, a -> {_field(a, 'phase').sql} = '{phase}'))"
 
     p_phase, s_phase = phase_count("P"), phase_count("S")
-    arr_pick_ids = F.transform(
-        arrivals, lambda a: _elem_sub(a, arr_avail, "pick_id", S)
+    arr_pick_ids = f"transform({arrs}, a -> {_field(a, 'pick_id').sql})"
+    used_picks = (
+        f"filter({pks}, p -> array_contains({arr_pick_ids}, "
+        f"{_field(p, 'resource_id').sql}))"
     )
-    used_picks = F.filter(
-        picks,
-        lambda p: F.array_contains(
-            arr_pick_ids, _elem_sub(p, pick_avail, "resource_id", S)
-        ),
-    )
-    station_count = F.size(
-        _distinct_stations(used_picks, pick_avail)
-    ).cast("long")
 
-    # updated: max creation_time over every sub-object + the event itself
-    def arr_max_creation(col_name):
-        if "creation_time" not in _elem_fields(tree, col_name):
-            return F.lit(None).cast(L)
-        return F.array_max(
-            F.transform(
-                F.coalesce(F.col(col_name), F.expr("array()")),
-                lambda x: x["creation_time"],
-            )
+    # updated: max creation_time over the event and every sub-object
+    def max_creation(arr: _Ref) -> str:
+        x = _elements(arr, "x")
+        return (
+            f"array_max(transform({_or_empty(arr)}, "
+            f"x -> {_field(x, 'creation_time').sql}))"
         )
 
-    updated_parts = [
-        _ev_col(tree, "creation_time", L),
-        arr_max_creation("picks") if pfields else F.lit(None).cast(L),
+    origins = _field(ev, "origins")
+    origin_arrivals = _field(_elements(origins, "o"), "arrivals")
+    arrival_creation = _field(_elements(origin_arrivals, "a"), "creation_time")
+    updated = [_field(ev, "creation_time").sql] + [
+        max_creation(_field(ev, name))
+        for name in ("picks", "origins", "magnitudes", "amplitudes",
+                     "station_magnitudes", "focal_mechanisms")
     ]
-    for sub_list in ("origins", "magnitudes", "amplitudes",
-                     "station_magnitudes", "focal_mechanisms"):
-        updated_parts.append(arr_max_creation(sub_list))
-    if "arrivals" in ofields and "creation_time" in {
-        f.name
-        for fld in tree.schema.fields
-        if fld.name == "origins"
-        for f in fld.dataType.elementType["arrivals"].dataType.elementType.fields
-    }:
-        updated_parts.append(
-            F.array_max(
-                F.flatten(
-                    F.transform(
-                        F.coalesce(F.col("origins"), F.expr("array()")),
-                        lambda oo: F.transform(
-                            F.coalesce(oo["arrivals"], F.expr("array()")),
-                            lambda a: a["creation_time"],
-                        ),
-                    )
-                )
-            )
-        )
-    updated = F.greatest(*updated_parts) if len(updated_parts) > 1 else updated_parts[0]
-
-    first_pick = F.array_min(
-        F.transform(picks, lambda p: _elem_sub(p, pick_avail, "time", L))
+    updated.append(
+        f"array_max(flatten(transform({_or_empty(origins)}, o -> transform("
+        f"{_or_empty(origin_arrivals)}, a -> {arrival_creation.sql}))))"
     )
 
-    mag_col = _sub(m, mfields, "mag", D)
-    mag_type_col = _sub(m, mfields, "magnitude_type", S)
+    def bigint(sql: str) -> str:
+        return f"CAST({sql} AS BIGINT)"
 
-    return staged, [
-        F.coalesce(of("time", L), first_pick).alias("time"),
-        of("latitude").alias("latitude"),
-        of("longitude").alias("longitude"),
-        of("depth").alias("depth"),
-        mag_col.alias("magnitude"),
-        _ev_col(tree, "event_description", S).alias("event_description"),
-        _quality_or(quality, "associated_phase_count", F.lit(0))
-        .cast("long")
-        .alias("associated_phase_count"),
-        _quality_or(quality, "azimuthal_gap", F.lit(None).cast(D)).alias(
-            "azimuthal_gap"
+    mags = _field(ev, "magnitudes")
+    no_double = "CAST(NULL AS DOUBLE)"
+    cols = {
+        "time": _reference_time(ev, o),
+        "latitude": of("latitude"),
+        "longitude": of("longitude"),
+        "depth": of("depth"),
+        "magnitude": _field(m, "mag").sql,
+        "event_description": _field(ev, "event_description").sql,
+        "associated_phase_count": bigint(
+            _quality_or(quality, "associated_phase_count", "0")
         ),
-        F.col("event_id"),
-        of("horizontal_uncertainty").alias("horizontal_uncertainty"),
-        (_last_mag_of_type(tree, "ML") if has_mags else F.lit(None).cast(D)).alias(
-            "local_magnitude"
+        "azimuthal_gap": _quality_or(quality, "azimuthal_gap", no_double),
+        "event_id": _field(ev, "event_id").sql,
+        "horizontal_uncertainty": of("horizontal_uncertainty"),
+        "local_magnitude": _last_mag_of_type(mags, "ML"),
+        "moment_magnitude": _last_mag_of_type(mags, "MW"),
+        "duration_magnitude": _last_mag_of_type(mags, "MD"),
+        "magnitude_type": _field(m, "magnitude_type").sql,
+        "p_phase_count": bigint(p_phase),
+        "s_phase_count": bigint(s_phase),
+        "p_pick_count": bigint(_pick_phase_count(pks, p, "P")),
+        "s_pick_count": bigint(_pick_phase_count(pks, p, "S")),
+        "standard_error": _quality_or(quality, "standard_error", no_double),
+        "used_phase_count": bigint(
+            _quality_or(quality, "used_phase_count", bigint(f"{p_phase} + {s_phase}"))
         ),
-        (_last_mag_of_type(tree, "MW") if has_mags else F.lit(None).cast(D)).alias(
-            "moment_magnitude"
-        ),
-        (_last_mag_of_type(tree, "MD") if has_mags else F.lit(None).cast(D)).alias(
-            "duration_magnitude"
-        ),
-        mag_type_col.alias("magnitude_type"),
-        p_phase.cast("long").alias("p_phase_count"),
-        s_phase.cast("long").alias("s_phase_count"),
-        pick_count("P").cast("long").alias("p_pick_count"),
-        pick_count("S").cast("long").alias("s_pick_count"),
-        _quality_or(quality, "standard_error", F.lit(None).cast(D)).alias(
-            "standard_error"
-        ),
-        _quality_or(quality, "used_phase_count", (p_phase + s_phase).cast(L))
-        .cast("long")
-        .alias("used_phase_count"),
-        station_count.alias("station_count"),
-        of("vertical_uncertainty").alias("vertical_uncertainty"),
-        updated.alias("updated"),
-        _ev_col(tree, "author", S).alias("author"),
-        _ev_col(tree, "agency_id", S).alias("agency_id"),
-        _ev_col(tree, "creation_time", L).alias("creation_time"),
-        _ev_col(tree, "version", S).alias("version"),
-    ]
+        "station_count": bigint(f"size({_distinct_stations(used_picks, p)})"),
+        "vertical_uncertainty": of("vertical_uncertainty"),
+        "updated": f"greatest({', '.join(updated)})",
+    }
+    for name in ("author", "agency_id", "creation_time", "version"):
+        cols[name] = _field(ev, name).sql
+    return staged.selectExpr(*[_as(sql, name) for name, sql in cols.items()])
 
 
 # --------------------------------------------------------------------------
@@ -705,110 +599,53 @@ def _build_events_projection(
 # --------------------------------------------------------------------------
 
 
-def _reference_time(tree: DataFrame) -> Column:
-    """Event reference time: preferred-origin time, else earliest pick
-    (utils/time.py get_reference_time) — denormalized onto sub-entity rows
-    as ``event_time``."""
-    top = _top_fields(tree)
-    ofields = _elem_fields(tree, "origins")
-    if "origins" in top:
-        o = _preferred_t(tree, "origins", "preferred_origin_id", ORIGIN_STRUCT)
-        ot = _sub(o, ofields, "time", L)
-    else:
-        ot = F.lit(None).cast(L)
-    if "picks" in top:
-        picks = _arr_or_empty(tree, "picks", PICK_STRUCT)
-        pavail = _elem_fields(tree, "picks") or set(PICK_STRUCT.fieldNames())
-        fp = F.array_min(
-            F.transform(picks, lambda p: _elem_sub(p, pavail, "time", L))
-        )
-    else:
-        fp = F.lit(None).cast(L)
-    return F.coalesce(ot, fp)
+def _flatten(
+    tree: DataFrame, keys: dict[str, str], generator: str, x: _Ref
+) -> DataFrame:
+    """One row per element the SQL ``generator`` yields as ``x``, with
+    event_id, the parent ``keys`` (name → SQL), every field of the
+    element's full-schema struct (typed NULLs for any this tree lacks) and
+    seed_id when the struct carries NSLC codes."""
+    base = tree.selectExpr(
+        "event_id",
+        *[_as(sql, name) for name, sql in keys.items()],
+        _as(generator, x.sql),
+    )
+    names = x.full.fieldNames()
+    cols = ["event_id", *keys] + [_as(_field(x, n).sql, n) for n in names]
+    nslc = ("network", "station", "location", "channel")
+    if set(nslc) <= set(names):
+        codes = ", ".join(_field(x, n).sql for n in nslc)
+        cols.append(_as(f"concat_ws('.', {codes})", "seed_id"))
+    return base.selectExpr(*cols)
 
 
 def _explode_entity(
-    tree: DataFrame,
-    array_col: str,
-    struct: T.StructType,
-    fields: list[str],
-    alias: str = "x",
-    outer: bool = True,
+    tree: DataFrame, array_col: str, alias: str = "x", outer: bool = True
 ) -> DataFrame:
-    """Generic sub-entity flatten: event_id + event_time + the entity's
-    fields (typed NULLs for any the tree doesn't carry) + seed_id."""
-    avail = _elem_fields(tree, array_col)
-    exploder = F.explode_outer if outer else F.explode
-    arr = (
-        F.col(array_col)
-        if array_col in _top_fields(tree)
-        else F.lit(None).cast(T.ArrayType(struct))
+    """Generic sub-entity flatten of ``array_col``: event_id + event_time
+    (the reference time) + the entity's fields + seed_id."""
+    ev = _root(tree)
+    arr = _field(ev, array_col)
+    event_time = _reference_time(
+        ev, _preferred(ev, "origins", "preferred_origin_id")
     )
-    base = tree.select(
-        "event_id",
-        _reference_time(tree).alias("event_time"),
-        exploder(arr).alias(alias),
+    generator = f"{'explode_outer' if outer else 'explode'}({arr.sql})"
+    return _flatten(
+        tree, {"event_time": event_time}, generator, _elements(arr, alias)
     )
-    x = F.col(alias)
-    by_name = {f.name: f.dataType for f in struct.fields}
-    cols = [F.col("event_id"), F.col("event_time")]
-    for name in fields:
-        if name in avail:
-            cols.append(x[name].alias(name))
-        else:
-            cols.append(F.lit(None).cast(by_name[name]).alias(name))
-    nslc = {"network", "station", "location", "channel"}
-    if nslc <= set(fields):
-        cols.append(
-            F.concat_ws(
-                ".", *[
-                    (x[n] if n in avail else F.lit(None).cast(S))
-                    for n in ("network", "station", "location", "channel")
-                ]
-            ).alias("seed_id")
-        )
-    return base.select(*cols)
 
 
 def picks_to_df(tree: DataFrame) -> DataFrame:
     """Pick sub-entity table (PICK_DTYPES, constants.py:124-150): one row
     per pick with denormalized parent keys — map-only explode."""
-    return _explode_entity(
-        tree,
-        "picks",
-        PICK_STRUCT,
-        [
-            "resource_id", "time", "phase_hint", "evaluation_status",
-            "network", "station", "location", "channel",
-            "onset", "polarity", "evaluation_mode", "filter_id",
-            "method_id", "horizontal_slowness", "backazimuth",
-            "creation_time", "author", "agency_id",
-            "uncertainty", "lower_uncertainty", "upper_uncertainty",
-            "confidence_level",
-        ],
-        alias="p",
-    )
+    return _explode_entity(tree, "picks", alias="p")
 
 
 def amplitudes_to_df(tree: DataFrame) -> DataFrame:
     """Amplitude sub-entity table (AMPLITUDE_DTYPES, constants.py:172-204;
     extractor events/pd.py:405-421 incl. the time_window flatten)."""
-    return _explode_entity(
-        tree,
-        "amplitudes",
-        AMPLITUDE_STRUCT,
-        [
-            "resource_id", "generic_amplitude", "type", "category", "unit",
-            "magnitude_hint", "filter_id", "method_id", "period", "snr",
-            "pick_id", "reference", "time_begin", "time_end", "scaling_time",
-            "evaluation_mode", "evaluation_status", "creation_time",
-            "author", "agency_id", "network", "station", "location",
-            "channel", "uncertainty", "lower_uncertainty",
-            "upper_uncertainty", "confidence_level",
-        ],
-        alias="a",
-        outer=False,
-    )
+    return _explode_entity(tree, "amplitudes", alias="a", outer=False)
 
 
 def station_magnitudes_to_df(tree: DataFrame) -> DataFrame:
@@ -816,19 +653,8 @@ def station_magnitudes_to_df(tree: DataFrame) -> DataFrame:
     constants.py:209-231; the output column set excludes magnitude_id —
     STATION_MAGNITUDE_COLUMNS :228-231)."""
     return _explode_entity(
-        tree,
-        "station_magnitudes",
-        STATION_MAGNITUDE_STRUCT,
-        [
-            "resource_id", "mag", "station_magnitude_type", "amplitude_id",
-            "origin_id", "method_id", "creation_time", "author",
-            "agency_id", "network", "station", "location", "channel",
-            "uncertainty", "lower_uncertainty", "upper_uncertainty",
-            "confidence_level",
-        ],
-        alias="sm",
-        outer=False,
-    )
+        tree, "station_magnitudes", alias="sm", outer=False
+    ).drop("magnitude_id")
 
 
 def arrivals_to_df(tree: DataFrame) -> DataFrame:
@@ -838,49 +664,15 @@ def arrivals_to_df(tree: DataFrame) -> DataFrame:
     only** (events/pd.py:334-346: ``origins = [e.preferred_origin() ...]``)
     with origin_id/origin_time denormalized — mirrored exactly: events
     whose preferred origin has no arrivals contribute no rows."""
-    ofields = _elem_fields(tree, "origins")
-    o = _preferred_t(tree, "origins", "preferred_origin_id", ORIGIN_STRUCT)
-    if "arrivals" not in ofields:
-        arr = F.lit(None).cast(T.ArrayType(ARRIVAL_STRUCT))
-    else:
-        arr = o["arrivals"]
-    avail = set()
-    if "arrivals" in ofields:
-        for fld in tree.schema.fields:
-            if fld.name == "origins":
-                et = fld.dataType.elementType["arrivals"].dataType.elementType
-                avail = set(et.fieldNames())
-    base = tree.select(
-        "event_id",
-        _sub(o, ofields, "resource_id", S).alias("origin_id"),
-        _sub(o, ofields, "time", L).alias("origin_time"),
-        F.explode(F.coalesce(arr, F.expr("array()"))).alias("ar"),
+    o = _preferred(_root(tree), "origins", "preferred_origin_id")
+    arrivals = _field(o, "arrivals")
+    keys = {
+        "origin_id": _field(o, "resource_id").sql,
+        "origin_time": _field(o, "time").sql,
+    }
+    return _flatten(
+        tree, keys, f"explode({_or_empty(arrivals)})", _elements(arrivals, "ar")
     )
-    x = F.col("ar")
-    by_name = {f.name: f.dataType for f in ARRIVAL_STRUCT.fields}
-    names = [
-        "resource_id", "pick_id", "phase", "time_correction", "azimuth",
-        "distance", "takeoff_angle", "time_residual",
-        "horizontal_slowness_residual", "backazimuth_residual",
-        "time_weight", "horizontal_slowness_weight", "backazimuth_weight",
-        "earth_model_id", "creation_time", "author", "agency_id",
-        "network", "station", "location", "channel",
-    ]
-    cols = [F.col("event_id"), F.col("origin_id"), F.col("origin_time")]
-    for name in names:
-        if name in avail:
-            cols.append(x[name].alias(name))
-        else:
-            cols.append(F.lit(None).cast(by_name[name]).alias(name))
-    cols.append(
-        F.concat_ws(
-            ".", *[
-                (x[n] if n in avail else F.lit(None).cast(S))
-                for n in ("network", "station", "location", "channel")
-            ]
-        ).alias("seed_id")
-    )
-    return base.select(*cols)
 
 
 def focal_mechanisms_to_df(tree: DataFrame) -> DataFrame:
@@ -888,61 +680,15 @@ def focal_mechanisms_to_df(tree: DataFrame) -> DataFrame:
     flattened, one row per mechanism with the parent event key (the
     generic :func:`_explode_entity` body; event_time dropped — the
     reference's focal table carries no reference time)."""
-    fields = [f.name for f in FOCAL_MECHANISM_STRUCT.fields]
     return _explode_entity(
-        tree, "focal_mechanisms", FOCAL_MECHANISM_STRUCT, fields,
-        alias="fm", outer=False,
+        tree, "focal_mechanisms", alias="fm", outer=False
     ).drop("event_time")
 
 
 def magnitudes_to_df(tree: DataFrame) -> DataFrame:
     """Magnitude sub-entity table (MAGNITUDE_DTYPES, constants.py:236-257)
     — the generic :func:`_explode_entity` projection."""
-    return _explode_entity(
-        tree,
-        "magnitudes",
-        MAGNITUDE_STRUCT,
-        [
-            "resource_id", "mag", "magnitude_type", "origin_id",
-            "method_id", "station_count", "azimuthal_gap",
-            "evaluation_mode", "evaluation_status", "creation_time",
-            "author", "agency_id", "uncertainty", "lower_uncertainty",
-            "upper_uncertainty", "confidence_level",
-        ],
-        alias="m",
-    )
-
-
-def _pick_phase_count(picks, ph, avail: set):
-    """Non-rejected picks with the given phase hint — NULL evaluation
-    status COUNTS (events/pd.py:100-108). Shared by ``events_to_df`` and
-    ``origin_quality`` so the rejected-status semantics live once.
-    Schema-tolerant: a tree without ``phase_hint`` counts zero (no phase
-    to match); one without ``evaluation_status`` counts every phase
-    match (nothing is rejected)."""
-
-    def keep(p):
-        st = _elem_sub(p, avail, "evaluation_status", S)
-        hint = _elem_sub(p, avail, "phase_hint", S)
-        return (hint == ph) & (st.isNull() | (st != "rejected"))
-
-    return F.size(F.filter(picks, keep))
-
-
-def _distinct_stations(pick_arr, avail: set):
-    """Distinct NON-NULL station codes of a pick array: a pick without a
-    waveformID (station NULL — common in real QuakeML) contributes no
-    station, matching COUNT(DISTINCT) / collect_set semantics (a bare
-    array_distinct(transform(...)) would count NULL as a station).
-    Schema-tolerant: no ``station`` field → empty set."""
-    return F.array_distinct(
-        F.filter(
-            F.transform(
-                pick_arr, lambda p: _elem_sub(p, avail, "station", S)
-            ),
-            lambda s: s.isNotNull(),
-        )
-    )
+    return _explode_entity(tree, "magnitudes", alias="m")
 
 
 def origin_quality(tree: DataFrame) -> DataFrame:
@@ -953,38 +699,30 @@ def origin_quality(tree: DataFrame) -> DataFrame:
     (the previous implementation exploded + groupBy'd, paying a shuffle
     that the nesting makes unnecessary). Events without picks are dropped,
     matching the old explode/groupBy contract."""
-    picks = _arr_or_empty(tree, "picks", PICK_STRUCT)
-    avail = _elem_fields(tree, "picks") or set(PICK_STRUCT.fieldNames())
-
-    def pick_count(ph):
-        return _pick_phase_count(picks, ph, avail).cast("long")
-
-    stations = _distinct_stations(picks, avail)
-    return (
-        tree.filter(F.size(picks) > 0)
-        .select(
-            "event_id",
-            pick_count("P").alias("p_pick_count"),
-            pick_count("S").alias("s_pick_count"),
-            F.size(stations).cast("long").alias("station_count"),
-            stations.alias("stations"),
-        )
+    picks = _field(_root(tree), "picks")
+    p, pks = _elements(picks, "p"), _or_empty(picks)
+    stations = _distinct_stations(pks, p)
+    return tree.where(f"size({pks}) > 0").selectExpr(
+        "event_id",
+        _as(f"CAST({_pick_phase_count(pks, p, 'P')} AS BIGINT)", "p_pick_count"),
+        _as(f"CAST({_pick_phase_count(pks, p, 'S')} AS BIGINT)", "s_pick_count"),
+        _as(f"CAST(size({stations}) AS BIGINT)", "station_count"),
+        _as(stations, "stations"),
     )
 
 
 def last_magnitude_per_type(tree: DataFrame) -> DataFrame:
     """Per event: last ML/MW/MD in document order (events/pd.py:166-175 —
     'last wins', in-row via the array filter + element_at(-1))."""
-    return tree.select(
+    mags = _field(_root(tree), "magnitudes")
+    names = ("local_magnitude", "moment_magnitude", "duration_magnitude")
+    return tree.selectExpr(
         "event_id",
-        _last_mag_of_type(tree, "ML").alias("local_magnitude"),
-        _last_mag_of_type(tree, "MW").alias("moment_magnitude"),
-        _last_mag_of_type(tree, "MD").alias("duration_magnitude"),
-    ).filter(
-        F.col("local_magnitude").isNotNull()
-        | F.col("moment_magnitude").isNotNull()
-        | F.col("duration_magnitude").isNotNull()
-    )
+        *[
+            _as(_last_mag_of_type(mags, t), name)
+            for t, name in zip(("ML", "MW", "MD"), names)
+        ],
+    ).where(sql_or(f"{name} IS NOT NULL" for name in names))
 
 
 def first_pick_origins(tree: DataFrame) -> DataFrame:
@@ -996,20 +734,16 @@ def first_pick_origins(tree: DataFrame) -> DataFrame:
     shuffle. Returns (event_id, first_pick_time) for events with ≥1
     resolvable pick. Schema-tolerant: a pick struct without ``time``
     (or ``resource_id``) yields no fabricated origin for that tree."""
-    avail = _elem_fields(tree, "picks") or set(PICK_STRUCT.fieldNames())
-    picks = _arr_or_empty(tree, "picks", PICK_STRUCT)
-    fp = F.array_min(
-        F.transform(
-            F.filter(
-                picks,
-                lambda p: _elem_sub(p, avail, "resource_id", S).isNotNull(),
-            ),
-            lambda p: _elem_sub(p, avail, "time", L),
-        )
+    picks = _field(_root(tree), "picks")
+    p = _elements(picks, "p")
+    first_pick = (
+        f"array_min(transform(filter({_or_empty(picks)}, "
+        f"p -> {_field(p, 'resource_id').sql} IS NOT NULL), "
+        f"p -> {_field(p, 'time').sql}))"
     )
-    return tree.select(
-        "event_id", fp.alias("first_pick_time")
-    ).filter(F.col("first_pick_time").isNotNull())
+    return tree.selectExpr(
+        "event_id", _as(first_pick, "first_pick_time")
+    ).where("first_pick_time IS NOT NULL")
 
 
 def make_origins(

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def pick_merge_key(df: DataFrame) -> DataFrame:
@@ -233,6 +234,17 @@ def merge_events(
     return merged_picks.drop("_merge_key"), merged_amps.drop("_merge_key")
 
 
+def _elem_fields(tree: DataFrame, array_col: str) -> set[str]:
+    """Field names available in the element struct of ``array_col``
+    (empty set if the column itself is absent)."""
+    for fld in tree.schema.fields:
+        if fld.name == array_col and isinstance(fld.dataType, T.ArrayType):
+            et = fld.dataType.elementType
+            if isinstance(et, T.StructType):
+                return set(et.fieldNames())
+    return set()
+
+
 def duplicate_events(
     tree: DataFrame, suffix: str = "dup", id_len: int = 12
 ) -> DataFrame:
@@ -256,9 +268,7 @@ def duplicate_events(
     actually exist are rewritten). Pure array/struct expressions over
     the nested rows; no explode, no shuffle, no Python per row.
     """
-    from obsplus_spark.operators.event_tree import _elem_fields, _top_fields
-
-    top = _top_fields(tree)
+    top = set(tree.schema.fieldNames())
 
     def remap(c: Column) -> Column:
         # Column-API literals need no SQL-quote escaping (the old

@@ -313,7 +313,7 @@ def test_generation_relation_not_stale_after_rebuild(
 #: building the same plans from Column trees sent 40-332)
 _BUILD_PY4J_BUDGET = {
     "ev_time": 7, "ev_box": 7, "ev_limit": 8, "wb_index": 8,
-    "wb_gaps": 30, "wb_avail": 41, "wb_bulk": 8, "fetch": 84,
+    "wb_gaps": 30, "wb_avail": 20, "wb_bulk": 8, "fetch": 84,
 }
 
 

@@ -529,24 +529,26 @@ def test_reference_time_tolerates_timeless_picks(spark):
     assert pk["event_time"] == 5 and pk["time"] is None
 
 
-def test_events_to_df_reuses_projection_per_schema(py4j_commands, full_tree):
-    """A repeat call on a tree of the same schema skips rebuilding the
-    flattening projection: two ``select``s, not a thousand round trips,
-    and the same rows as the call that built it."""
+def test_flat_extractors_first_build_budget(py4j_commands, full_tree):
+    """Every flat extractor builds its plan from SQL text in a few py4j
+    round trips on the FIRST call for a schema, so nothing is worth
+    caching per schema (building the same projections from Column trees
+    sent over a thousand for ``events_to_df``)."""
     from pyspark.sql import functions as F
 
-    # a schema no other test flattens, so the first call below builds
-    batch = full_tree.withColumn("batch", F.lit("b1"))
-    first, n_first = py4j_commands(lambda: events_to_df(batch))
-    second, n_second = py4j_commands(lambda: events_to_df(batch))
-    assert n_first > 500, f"first call sent {n_first} commands"
-    assert n_second <= 60, f"repeat call sent {n_second} commands"
-    assert second.collect() == first.collect()
-    # a new DataFrame of the same schema reuses the projection too
-    other = full_tree.withColumn("batch", F.lit("b2"))
-    again, n_again = py4j_commands(lambda: events_to_df(other))
-    assert n_again <= 60, f"same-schema call sent {n_again} commands"
-    assert again.collect() == first.collect()
+    from obsplus_spark.operators import event_tree
+
+    for name in (
+        "events_to_df", "picks_to_df", "amplitudes_to_df",
+        "station_magnitudes_to_df", "arrivals_to_df", "magnitudes_to_df",
+        "focal_mechanisms_to_df", "origin_quality", "first_pick_origins",
+        "last_magnitude_per_type",
+    ):
+        # a schema no other test flattens: one extra column per extractor
+        batch = full_tree.withColumn(f"batch_{name}", F.lit(1))
+        extract = getattr(event_tree, name)
+        _, sent = py4j_commands(lambda: extract(batch))
+        assert sent <= 60, f"{name} sent {sent} commands on its first build"
 
 
 def test_events_to_df_subset_schema_after_full(spark, tree, full_tree):

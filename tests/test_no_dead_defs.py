@@ -6,7 +6,9 @@ binds (``X = ...``, ``X: T = ...``, ``A, B = ...``) in
 ``obsplus_spark/**/*.py`` and ``corpus/**/*.py`` must be named, as a
 whole word, somewhere in the repository's ``.py`` files besides its own
 definition: a call, an import, a test, or a mention in a docstring. A
-definition nothing names is dead code and is deleted rather than kept.
+package ``__init__``'s top-level imports and ``__all__`` only re-export a
+name, so they do not count as a use. A definition nothing names is dead
+code and is deleted rather than kept.
 Dunder names (module hooks such as ``__getattr__``, ``__all__``) are
 looked up by the interpreter, not by name, and are exempt.
 
@@ -65,10 +67,32 @@ def _top_level_defs() -> "list[tuple[str, int, str]]":
     return found
 
 
+def _reexport(node: ast.stmt) -> bool:
+    """A package ``__init__`` statement that only re-exports names."""
+    return isinstance(node, (ast.Import, ast.ImportFrom)) or (
+        isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+    )
+
+
+def _words(path: Path) -> "list[str]":
+    """The words a file names, leaving out a package ``__init__``'s
+    re-export statements."""
+    text = path.read_text()
+    if path.name == "__init__.py":
+        lines = text.splitlines(keepends=True)
+        for node in ast.parse(text, str(path)).body:
+            if _reexport(node):
+                for i in range(node.lineno - 1, node.end_lineno):
+                    lines[i] = "\n"
+        text = "".join(lines)
+    return re.findall(r"\w+", text)
+
+
 def test_every_top_level_def_is_referenced():
     words = Counter()
     for path in _repo_py_files():
-        words.update(re.findall(r"\w+", path.read_text()))
+        words.update(_words(path))
     defs = _top_level_defs()
     n_defs = Counter(name for _, _, name in defs)
     dead = [
